@@ -54,12 +54,4 @@ object DocExtract {
       map_from_entries(filter(entries, e => size(e.getField("value")) > 0))
         .as("source"))
   }
-
-  /** Flattened variant mirroring AppsearchDocument
-    * (/root/reference/pkg/clients/appsearch.go:10-18): meta hoisted to the
-    * top level next to the source map — the second sink's shape. */
-  def extractFlat(df: DataFrame, uriCol: String, spansCol: String): DataFrame =
-    extract(df, uriCol, spansCol)
-      .select(col("id"), col("description"), col("uri"), col("source"),
-        col("ogimage"), col("title"), col("keywords"))
 }

@@ -22,9 +22,12 @@ object ExportOps {
           .as("meta"),
         col("source"))).as("body"))
 
-  /** Flat App-Search-style JSON (appsearch.go:10-18 field order). */
-  def appsearchEnvelopes(docsFlat: DataFrame): DataFrame =
-    docsFlat.select(
+  /** Flat App-Search-style JSON (appsearch.go:10-18 field order): meta
+    * hoisted to the top level next to the source map. Takes `crawl_docs`
+    * rows (or any frame with the seven fields) and selects them by name,
+    * so the flat shape is derived here, at read time. */
+  def appsearchEnvelopes(docs: DataFrame): DataFrame =
+    docs.select(
       col("id").as("document_id"),
       to_json(struct(
         col("id"), col("description"), col("uri"), col("source"),

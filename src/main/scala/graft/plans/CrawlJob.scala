@@ -74,6 +74,11 @@ object CrawlJob {
     * regression inside the JSON itself (VERDICT r3 "what's wrong" #1). */
   @volatile var stepSink: (String, Double) => Unit = null
 
+  /** `docsFlat` is a legacy table: no wave writes it any more (the App
+    * Search shape is derived at read time from `docs` by
+    * [[graft.operators.ExportOps.appsearchEnvelopes]]), but state roots
+    * from older engines still carry it, so the resume trim and the expiry
+    * sweep keep covering it. */
   final case class Tables(
       frontier: IceLite.Table,
       seen: IceLite.Table,
@@ -176,10 +181,11 @@ object CrawlJob {
       // Crash-consistency on resume: the frontier commit is the wave's
       // commit marker (it lands last). Any sink append tagged with a wave
       // >= next_wave came from a wave that never committed — roll those
-      // snapshots back so the re-run is exactly-once. The doc sinks run
-      // concurrently with the seen/failed appends inside a wave, so ANY
-      // subset of {seen, visits, docs, docsFlat, metrics, failed} may
-      // carry the uncommitted wave — the trim is order-independent.
+      // snapshots back so the re-run is exactly-once. The visits, docs,
+      // consumed and clock sinks run concurrently with the seen/failed
+      // appends inside a wave, so ANY subset of {seen, visits, docs,
+      // metrics, failed, clock, consumed} may carry the uncommitted wave —
+      // the trim is order-independent.
       val w = wave
       Seq(t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed, t.clock,
         t.consumed).foreach {
@@ -373,7 +379,10 @@ object CrawlJob {
         // addWave(Async) before the next boundary.
         seen.freshAndConfirmed(winners)
     }).persist()
-    val n = admitted.count()
+    // one job populates the cache and takes both the admitted count and
+    // the distinct-host sketch the host high-water mark advances by
+    val stats = admitted.agg(count(lit(1)), approx_count_distinct(col("host"))).head
+    val n = stats.getLong(0)
     if (n > 0 && crashed.isEmpty) {
       t.seen.append(
         admitted.select(col("url_hash"), col("url"), lit(0).as("wave")),
@@ -385,12 +394,12 @@ object CrawlJob {
     }
     if (n > 0) {
       val prev = t.frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
-      // keep the host high-water mark covering intake hosts too (cheap: a
-      // cache-resident aggregate; skipped once past the join cutover)
+      // keep the host high-water mark covering intake hosts too (frozen
+      // once past the join cutover)
       val prevHwm = prev.getOrElse("host_hwm", -1L)
       val hwm =
-        if (prevHwm < 0 || prevHwm > graft.operators.Robots.MaxBroadcastHosts) prevHwm
-        else prevHwm + admitted.agg(approx_count_distinct(col("host"))).head.getLong(0)
+        if (prevHwm < 0 || prevHwm > Robots.MaxBroadcastHosts) prevHwm
+        else prevHwm + stats.getLong(1)
       t.frontier.append(admitted, prev +
         ("intake_drained" -> target.toLong) +
         ("frontier_size" -> (prev.getOrElse("frontier_size", 0L) + n)) +
@@ -495,19 +504,24 @@ object CrawlJob {
         fetchRaw, priorityKeys, "ord", waveBase, p)
       .persist()
     // One synchronous pass populates the cache that every concurrent
-    // consumer (visits sink, clock delta, doc sinks, link expansion) then
+    // consumer (visits, consumed and clock sinks, the fetch join) then
     // only re-reads — no recompute races; the count IS the visits total.
+    // It also gives the cached relation its true (wave-sized) size stat,
+    // which the fetch join's broadcast decision below reads.
     val nFetch = fetchSet.count()
     mark("fetch_materialize")
 
     implicit val ec: ExecutionContext = ExecutionContext.global
 
-    // visits: every scheduled fetch consumes a rank, misses included. The
-    // write re-reads the populated cache, so it runs as a concurrent job
-    // overlapping the clock delta + link expansion + seen append (the
-    // commit tail pays max, not sum); it is awaited before the wave's
-    // frontier commit marker, and the resume trim rolls it back if that
-    // marker never lands.
+    // Concurrent sinks: visits, consumed markers and the clock delta read
+    // only the cached fetch set, and the doc sink only the fetch join, so
+    // each runs as its own Spark job overlapping the link expansion + seen
+    // append on the main thread (the wave pays max, not sum). Every sink
+    // is wave-tagged and awaited — on the failure path too — before the
+    // wave's frontier commit marker, so the resume trim rolls back
+    // whichever subset landed if that marker never does.
+
+    // visits: every scheduled fetch consumes a rank, misses included.
     val visitsF: Future[Unit] = Future {
       t.visits.append(
         fetchSet.select(col("ord"), lit(wave).as("wave"), col("url"), col("depth")),
@@ -515,51 +529,34 @@ object CrawlJob {
     }
 
     // --- fetch = equi-join against the synthetic web (S2) ---------------
-    val joined = fetchSet.join(docsDf, fetchSet("url") === docsDf("doc_id"), "left_outer")
-      .persist()
-    val hits = joined.filter(col("doc_id").isNotNull)
+    // Only hits are joined; misses (needed by the retry path alone) are
+    // the fetch set minus the hits. Cached by the first of its two
+    // consumers (doc sink, link expansion).
+    val hits = fetchHits(docsDf, fetchSet).persist()
 
-    // --- extraction sinks (two-sink fan-out from one cached wave) -------
-    // The doc sinks don't feed the frontier update, so they run as a
-    // concurrent Spark job while the main thread expands links — the wave
-    // wall pays max(sinks, expansion), not the sum. Crash-consistency is
-    // unaffected: the frontier commit (the wave's marker) still lands
-    // last, after the awaits below; the resume trim handles any
-    // docs/seen/visits commit interleaving a crash can leave behind.
+    // --- extraction sink: the doc rows don't feed the frontier update ---
     val obsDocs = Observation(obsName(s"docs$wave"))
-    val docSinks: Future[Unit] = Future {
+    val docsF: Future[Unit] = Future {
       t.docs.append(
         DocExtract.extract(hits, "url", "spans").observe(obsDocs, count(lit(1)).as("n")),
         Map("wave" -> wave.toLong))
-      t.docsFlat.append(DocExtract.extractFlat(hits, "url", "spans"), Map("wave" -> wave.toLong))
     }
     val nDeferred = frontierSize - nFetch
 
-    // delta-mode consumed markers only need the cached fetchSet, so the
-    // write overlaps the whole expansion + seen phase instead of sitting
-    // in the commit tail; awaited (like every wave append) before the
-    // frontier commit marker, and wave-tagged so the resume trim rolls it
-    // back if that marker never lands.
+    // delta-mode consumed markers: the fetched hashes, written straight
+    // from the p-partition fetch set (no reader depends on their layout)
     val consumedF: Future[Unit] =
       if (deltaMode && !compactCadence && nFetch > 0) Future {
-        t.consumed.append(
-          fetchSet.select(col("url_hash")).repartition(p, col("url_hash")),
-          Map("wave" -> wave.toLong))
+        t.consumed.append(fetchSet.select(col("url_hash")), Map("wave" -> wave.toLong))
       } else Future.successful(())
 
-    // Main-path work between the fork and the join: guarded so a failure
-    // NEVER orphans the sink jobs — the futures are awaited on both paths
-    // before control leaves this wave.
-    val (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nextFrontier, nextSize,
-        nextHwm, toFree) = try {
-      // --- virtual-clock advance (DELTA): only hosts fetched this wave
-      // get a new (host, next_ts, w) row — last writer wins on read. The
-      // prior next_ts arrives through the same size-cutover join as the
-      // budgeter (shuffle-hash past the host cutover — never an O(clock)
-      // broadcast), and the append is O(wave hosts) instead of the old
-      // full-table rewrite. Tagged with the wave, so a crash before the
-      // frontier marker rolls it back with every other wave append.
-      if (cfg.virtualClock) {
+    // --- virtual-clock advance (DELTA): only hosts fetched this wave get
+    // a new (host, next_ts, w) row — last writer wins on read. The prior
+    // next_ts arrives through the same size-cutover join as the budgeter
+    // (shuffle-hash past the host cutover — never an O(clock) broadcast),
+    // and the append is O(wave hosts) instead of a full-table rewrite.
+    val clockF: Future[Unit] =
+      if (cfg.virtualClock) Future {
         val counts = fetchSet.groupBy(col("host")).agg(count(lit(1)).as("__k"))
         val delta = policy.withDelay(
             Politeness.hostStateJoin(counts, clockCur, hostHwm), "__vd")
@@ -568,9 +565,14 @@ object CrawlJob {
               lit(wave.toLong * cfg.hostBudget)) + col("__k") * col("__vd"))
               .as("next_ts"),
             lit(wave).as("w"))
-        t.clock.append(delta.repartition(p, col("host")), Map("wave" -> wave.toLong))
-        mark("clock_write")
-      }
+        t.clock.append(delta.coalesce(p), Map("wave" -> wave.toLong))
+      } else Future.successful(())
+
+    // Main-path work between the fork and the join: guarded so a failure
+    // NEVER orphans the sink jobs — the futures are awaited on both paths
+    // before control leaves this wave.
+    val (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nextFrontier, nextSize,
+        nextHwm, toFree) = try {
       // --- link expansion → candidates (A-span posexplode, O5/O6/O7) ----
       val aSpans = DocExtract.sortedSpans(col("spans"))
       val links = hits
@@ -631,17 +633,27 @@ object CrawlJob {
           path, "__allowed")
         .persist()
 
-      // seen append carries the dedup/robots counters via observe (the
-      // write job computes each row exactly once — safe for metrics)
+      // seen append carries the dedup/robots counters and the admitted
+      // rows' distinct-host sketch via observe (the write job computes
+      // each row exactly once — safe for metrics). Coalesced to the wave
+      // width: the rows sit in the B seen buckets, but no reader of the
+      // table depends on its file layout.
       val obsSeen = Observation(obsName(s"seen$wave"))
       t.seen.append(
         newSeen
           .observe(obsSeen, count(lit(1)).as("n"),
-            sum(when(col("__allowed"), 1L).otherwise(0L)).as("adm"))
-          .select(col("url_hash"), col("cand").as("url"), lit(wave + 1).as("wave")),
+            sum(when(col("__allowed"), 1L).otherwise(0L)).as("adm"),
+            approx_count_distinct(when(col("__allowed"), col("host"))).as("hosts"))
+          .select(col("url_hash"), col("cand").as("url"), lit(wave + 1).as("wave"))
+          .coalesce(p),
         Map("wave" -> wave.toLong))
       val nNewSeen = obsSeen.get("n").asInstanceOf[Long]
       val nAdmitted = Option(obsSeen.get("adm")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      // host high-water delta: distinct hosts among the admitted rows,
+      // frozen once the cutover has flipped
+      val nextHwm =
+        if (hostHwm < 0 || hostHwm > Robots.MaxBroadcastHosts || nAdmitted == 0) hostHwm
+        else hostHwm + obsSeen.get("hosts").asInstanceOf[Long]
       mark("seen_write")
       val admitted = newSeen.filter(col("__allowed"))
 
@@ -657,7 +669,8 @@ object CrawlJob {
       val (retryRows, nRetried, missCache) =
         if (cfg.maxRetries <= 0) (null: DataFrame, 0L, null: DataFrame)
         else {
-          val misses = joined.filter(col("doc_id").isNull).select(frontierCols: _*)
+          val misses = fetchSet.join(hits.select(col("url")), Seq("url"), "left_anti")
+            .select(frontierCols: _*)
           val prevFails = t.failed
             .readOr(spark.range(0).select(col("id").as("url_hash"), col("id").as("fails")))
             .groupBy(col("url_hash")).agg(max(col("fails")).as("__pf"))
@@ -680,12 +693,6 @@ object CrawlJob {
           (rr, nR, missF)
         }
 
-      // host high-water delta: distinct hosts among the admitted rows — a
-      // cache-resident aggregate, skipped once the cutover has flipped
-      val nextHwm =
-        if (hostHwm < 0 || hostHwm > Robots.MaxBroadcastHosts || nAdmitted == 0) hostHwm
-        else hostHwm + admitted.agg(approx_count_distinct(col("host"))).head.getLong(0)
-
       val admittedRows = admitted.select(col("cand").as("url"), col("url_hash"),
         col("host"), col("depth"), col("parent_ord"), col("link_index"))
       var nf = if (deferred0 == null) null else deferred0.unionByName(admittedRows)
@@ -695,27 +702,31 @@ object CrawlJob {
         Seq(winners, newSeen) ++ Option(missCache).toSeq)
     } catch {
       case e: Throwable =>
-        scala.util.Try(Await.ready(docSinks, Duration.Inf))
-        scala.util.Try(Await.ready(visitsF, Duration.Inf))
-        scala.util.Try(Await.ready(consumedF, Duration.Inf))
+        Seq(docsF, visitsF, consumedF, clockF)
+          .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
         throw e
     }
     val nDedup = nCand - nNewSeen
     val nRobots = nNewSeen - nAdmitted
 
     // --- commit state (atomic IceLite snapshots; parquet round-trip
-    //     truncates lineage across waves). The doc/visits sinks must be
+    //     truncates lineage across waves). Every concurrent sink must be
     //     durable before the frontier commit marker lands. ---------------
-    Await.result(docSinks, Duration.Inf)
-    val nHits = obsDocs.get("n").asInstanceOf[Long]
-    val nMiss = nFetch - nHits
+    Await.ready(docsF, Duration.Inf)
     mark("docs_await")
-    Await.result(visitsF, Duration.Inf)
+    Await.ready(visitsF, Duration.Inf)
     mark("visits_await")
+    Await.ready(clockF, Duration.Inf)
+    if (cfg.virtualClock) mark("clock_await")
     // consumed markers durable before any branch below touches the
     // consumed table (replaceEmpty on drain/compaction) or lands the
     // frontier commit marker
-    Await.result(consumedF, Duration.Inf)
+    Await.ready(consumedF, Duration.Inf)
+    // a sink failure surfaces only once every sink has landed, so none is
+    // left running when control leaves the wave
+    Seq(docsF, visitsF, clockF, consumedF).foreach(Await.result(_, Duration.Inf))
+    val nHits = obsDocs.get("n").asInstanceOf[Long]
+    val nMiss = nFetch - nHits
     val metrics = WaveMetrics(wave, nHits, nDeferred, nRobots, nDedup, nMiss, nRetried)
     // the metrics row joins the concurrent-sink pattern (VERDICT r5
     // next-round #8): its payload is fully known here, the table is
@@ -756,8 +767,7 @@ object CrawlJob {
         // then the admitted rows carry the counters as the wave's commit
         // marker. Deferred rows are not rewritten.
         if (nAdmitted > 0)
-          t.frontier.append(
-            admittedRows.repartition(nextP, col("url_hash")), counters)
+          t.frontier.append(admittedRows.coalesce(nextP), counters)
         else t.frontier.amendCounters(counters)
       }
     } catch {
@@ -788,7 +798,7 @@ object CrawlJob {
     // the async fold reads this wave's cached newSeen — land it before
     // anything it depends on is unpersisted
     seen.awaitFold()
-    (Seq(fetchSet, joined) ++ Option(deferred0).toSeq ++ Option(clockCur).toSeq
+    (Seq(fetchSet, hits) ++ Option(deferred0).toSeq ++ Option(clockCur).toSeq
       ++ toFree).foreach(_.unpersist())
     // wave boundary: every plan that referenced this wave's probe layers
     // is committed + unpersisted, and the next wave's frontier lineage
@@ -797,6 +807,17 @@ object CrawlJob {
     seen.releaseRetired()
     (metrics, nextSize, nextHwm)
   }
+
+  /** The fetch: the corpus inner-joined with the wave's fetch set. The
+    * fetch set is cached and counted before this plan is built, so the
+    * planner sees its materialized size (KBs on a small wave): under the
+    * broadcast threshold it broadcasts the fetch set and streams the
+    * corpus in place, never exchanging it, whatever the corpus size. A
+    * larger wave falls back to a shuffle join. The join is inner because
+    * a left-outer join from the fetch side could build only on the corpus
+    * side. */
+  private[graft] def fetchHits(docsDf: DataFrame, fetchSet: DataFrame): DataFrame =
+    docsDf.join(fetchSet, docsDf("doc_id") === fetchSet("url"))
 
   private def countersOf(m: WaveMetrics): Map[String, Long] = Map(
     "fetched" -> m.fetched, "deferred" -> m.deferred,

@@ -110,8 +110,16 @@ class AnalyzerSpec extends AnyFunSuite {
     new String(Files.readAllBytes(
       Paths.get(s"/root/reference/conf/mappings/${name}_mapping.json")), "UTF-8")
 
+  /** The english mapping is vendored verbatim as a classpath resource
+    * (`graft/english_mapping.json`); cjk and autocomplete are not. */
+  private def englishMapping: String = {
+    val in = getClass.getResourceAsStream("/graft/english_mapping.json")
+    assert(in != null, "graft/english_mapping.json is not on the classpath")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
   test("parsed reference english mapping == built-in english analyzer") {
-    val parsed = AnalyzerOps.fromMappingJson(refMapping("english"))
+    val parsed = AnalyzerOps.fromMappingJson(englishMapping)
     assert(parsed.contains("rebuilt_english"))
     val a = parsed("rebuilt_english")
     assert(a.tokenizer == english.tokenizer)
@@ -180,7 +188,7 @@ class AnalyzerSpec extends AnyFunSuite {
   // ---- field-level mapping application (x4/x5 support) ----------------------
 
   test("fieldSpecs parses the reference english mapping's field schema") {
-    val specs = AnalyzerOps.fieldSpecs(refMapping("english"))
+    val specs = AnalyzerOps.fieldSpecs(englishMapping)
     val byPath = specs.map(s => s.path -> s).toMap
     assert(byPath("uri").fieldType == "keyword")
     assert(byPath("uri").analyzer.isEmpty)
@@ -197,7 +205,7 @@ class AnalyzerSpec extends AnyFunSuite {
   }
 
   test("resolveAnalyzer: field name 'english' resolves to the file's rebuilt_english") {
-    val parsed = AnalyzerOps.fromMappingJson(refMapping("english"))
+    val parsed = AnalyzerOps.fromMappingJson(englishMapping)
     val a = AnalyzerOps.resolveAnalyzer(Some("english"), parsed)
     assert(a == parsed("rebuilt_english"))
     // absent analyzer → ES default standard; unknown name → standard

@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.ExportOps
+import graft.plans.CrawlJob
 import graft.sources.AppConfig
+import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -61,5 +63,31 @@ class CompletenessSpec extends AnyFunSuite {
     val env = ExportOps.appsearchEnvelopes(flat)
     val body = env.head.getString(1)
     assert(body.contains("\"description\":\"D\"") && body.contains("\"uri\":\"http://x.com/\""))
+  }
+
+  test("A5/S5: a crawl's docs export as one App Search envelope per fetched hit") {
+    val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 4, seed = 7L)
+    val corpus = Corpus.generate(cfg)
+    val root = java.nio.file.Files.createTempDirectory("graft-appsearch").toString
+    val metrics = CrawlJob.run(spark, spark.createDataFrame(corpus),
+      Corpus.robotsRules(cfg),
+      CrawlJob.Config(Seq("http://hot.example.com/p/0"), maxWaves = 3,
+        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+    val docs = CrawlJob.crawlDocs(spark, root)
+    val env = ExportOps.appsearchEnvelopes(docs)
+    val fetched = metrics.map(_.fetched).sum
+    assert(fetched > 0 && env.count() == fetched)
+    // the body carries exactly the seven App Search fields, in
+    // AppsearchDocument order, with the crawl_docs values
+    val fields = Seq("id", "description", "uri", "source", "ogimage", "title", "keywords")
+    val keys = env.select(json_object_keys(col("body"))).collect()
+      .map(_.getSeq[String](0)).distinct.toSeq
+    assert(keys == Seq(fields))
+    val flat = StructType(fields.map(f => StructField(f,
+      if (f == "source") MapType(StringType, ArrayType(StringType)) else StringType)))
+    val back = env.select(col("document_id"), from_json(col("body"), flat).as("d"))
+      .select(col("document_id") +: fields.map(f => col(s"d.$f")): _*)
+    val want = docs.select(col("id").as("document_id") +: fields.map(col): _*)
+    assert(back.collect().toSet == want.collect().toSet)
   }
 }

@@ -2,7 +2,14 @@ package graft
 
 import graft.model.RobotsRule
 import graft.operators.Robots
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality gates: the scale claims in README/SURVEY §4, asserted on
@@ -242,5 +249,41 @@ class PlanShapeSpec extends AnyFunSuite {
     val joined = docs.join(broadcast(frontier), docs("doc_id") === frontier("url"))
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
+  }
+
+  test("fetch join broadcasts the cached fetch set unhinted and never exchanges the corpus") {
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    // a corpus whose size estimate is above the broadcast threshold
+    val docs = spark.range(0, 1000000, 1, 4)
+      .select(concat(lit("http://h/"), col("id").cast("string")).as("doc_id"),
+        col("id").as("body"))
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes > threshold)
+    // the fetch set as the wave builds it: a few rows picked out of a plan
+    // whose estimate is far above the threshold, then cached and counted,
+    // so only the materialized size stat can make it the build side
+    val fetchSet = spark.range(0, 4000000, 1, 4)
+      .filter(pmod(col("id"), lit(1000L)) === 7L)
+      .select(concat(lit("http://h/"), col("id").cast("string")).as("url"),
+        col("id").as("ord"))
+      .persist()
+    try {
+      assert(fetchSet.queryExecution.optimizedPlan.stats.sizeInBytes > threshold)
+      val nFetch = fetchSet.count()
+      val hits = graft.plans.CrawlJob.fetchHits(docs, fetchSet)
+      assert(hits.collect().length == 1000 && nFetch == 4000L)
+      // the executed (final adaptive) plan, query stages included
+      val plan = hits.queryExecution.executedPlan
+      val stages = new AdaptiveSparkPlanHelper {}
+      val joins = stages.collect(plan) { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == 1, s"expected one broadcast hash join:\n$plan")
+      val j = joins.head
+      val (build, stream) =
+        if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+      def cached(p: SparkPlan) = stages.collect(p) { case s: InMemoryTableScanExec => s }
+      assert(cached(build).nonEmpty && cached(stream).isEmpty,
+        s"build side is not the cached fetch set:\n$plan")
+      assert(stages.collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"the corpus is exchanged:\n$plan")
+    } finally fetchSet.unpersist()
   }
 }
