@@ -140,11 +140,14 @@ object CrawlMain {
     // (CrawlJob.drainInbox), so a seed POSTed mid-crawl joins the next
     // wave. Single writer per table — no cross-writer commit races. With
     // the frontier drained, the loop idles for `--intake-idle-sec`
-    // (deadline refreshed by new intake) before ending the crawl.
+    // (deadline refreshed by new intake) before ending the crawl. A fresh
+    // root's seeds are enqueued before the stream starts, so the inbox
+    // never has two writers.
     val intake: Option[org.apache.spark.sql.streaming.StreamingQuery] =
       if (streamDir.isEmpty) None
       else {
         val t = CrawlJob.tables(state, spark)
+        CrawlJob.enqueueSeeds(spark, t, seeds)
         val schema = graft.streaming.StreamOps.crawlRequestSchema
           .add("seq", org.apache.spark.sql.types.LongType)
         val req = spark.readStream.schema(schema).json(streamDir)

@@ -5,6 +5,7 @@ import graft.functions.UrlOps
 import graft.model._
 import graft.operators.{DocExtract, Politeness, Ranker, Robots}
 import graft.sources.IceLite
+import graft.streaming.StreamOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,42 +156,23 @@ object CrawlJob {
     val t = tables(stateRoot, spark)
 
     // --- init or resume -------------------------------------------------
+    // fresh start: the seeds enter through the intake inbox like any other
+    // seed, and the first drain below admits them
+    enqueueSeeds(spark, t, cfg.seeds)
     var wave: Int = t.frontier.currentSnapshot
-      .flatMap(_.counters.get("next_wave")).map(_.toInt).getOrElse(-1)
-    if (wave < 0) {
-      // fresh start: admit seeds sequentially (first-wins), exactly like
-      // the oracle — the seed list is driver-sized by definition.
-      val seedEntries = {
-        val seen = scala.collection.mutable.LinkedHashMap.empty[Long, FrontierEntry]
-        cfg.seeds.zipWithIndex.foreach { case (s, i) =>
-          val c = UrlOps.canonicalize(s)
-          if (c != null) {
-            val h = UrlOps.urlHash64(c)
-            if (!seen.contains(h))
-              seen(h) = FrontierEntry(c, h, UrlOps.hostOf(UrlOps.parse(c).authority), 0, 0L, i)
-          }
-        }
-        seen.values.toSeq
-      }
-      t.frontier.replace(seedEntries.toDF(),
-        Map("next_wave" -> 0L, "frontier_size" -> seedEntries.size.toLong,
-          "host_hwm" -> seedEntries.map(_.host).distinct.size.toLong))
-      t.seen.append(seedEntries.map(e => SeenUrl(e.url_hash, e.url, 0)).toDF())
-      wave = 0
-    } else {
-      // Crash-consistency on resume: the frontier commit is the wave's
-      // commit marker (it lands last). Any sink append tagged with a wave
-      // >= next_wave came from a wave that never committed — roll those
-      // snapshots back so the re-run is exactly-once. The visits, docs,
-      // consumed and clock sinks run concurrently with the seen/failed
-      // appends inside a wave, so ANY subset of {seen, visits, docs,
-      // metrics, failed, clock, consumed} may carry the uncommitted wave —
-      // the trim is order-independent.
-      val w = wave
-      Seq(t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed, t.clock,
-        t.consumed).foreach {
-        _.trimWhile(s => s.counters.get("wave").exists(_ >= w))
-      }
+      .flatMap(_.counters.get("next_wave")).map(_.toInt).getOrElse(0)
+    // Crash-consistency on resume: the frontier commit is the wave's
+    // commit marker (it lands last). Any sink append tagged with a wave
+    // >= next_wave came from a wave that never committed — roll those
+    // snapshots back so the re-run is exactly-once. The visits, docs,
+    // consumed and clock sinks run concurrently with the seen/failed
+    // appends inside a wave, so ANY subset of {seen, visits, docs,
+    // metrics, failed, clock, consumed} may carry the uncommitted wave —
+    // the trim is order-independent. (A fresh root has no wave-tagged
+    // snapshot: drains tag their seen appends `intake_drain_v` only.)
+    Seq(t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed, t.clock,
+      t.consumed).foreach {
+      _.trimWhile(s => s.counters.get("wave").exists(_ >= wave))
     }
 
     // seen state: bucketed pieces + per-bucket prefilters, rebuilt from
@@ -205,31 +187,31 @@ object CrawlJob {
       bankRoot = s"$stateRoot/seen_bank")
     bootstrapSeen(spark, t, seen, cfg)
 
-    val seedHosts: Set[String] = cfg.seeds.flatMap { s =>
-      Option(UrlOps.canonicalize(s)).map(c => UrlOps.hostOf(UrlOps.parse(c).authority))
-    }.toSet
+    val seedHosts: Set[String] = seedEntries(cfg.seeds).map(_.host).toSet
 
     val out = Vector.newBuilder[WaveMetrics]
-    var frontierSize: Long = t.frontier.currentSnapshot
-      .flatMap(_.counters.get("frontier_size")).getOrElse(0L)
+    var frontierSize = 0L
     // Upper bound on distinct hosts ever admitted — drives the politeness
     // state-join broadcast→shuffle cutover. -1 (pre-counter state roots)
     // keeps the legacy always-broadcast shape; counting stops once past
     // the cutover (the switch can only flip one way).
-    var hostHwm: Long = t.frontier.currentSnapshot
-      .flatMap(_.counters.get("host_hwm")).getOrElse(-1L)
+    var hostHwm = -1L
+    // concurrent intake: seeds POSTed since the last boundary join the
+    // next wave (reference: Init returns while the crawl goroutine runs,
+    // crawler.go:63-67)
+    def drain(): Unit = {
+      drainInbox(spark, t, seen)
+      val c = t.frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
+      frontierSize = c.getOrElse("frontier_size", 0L)
+      hostHwm = c.getOrElse("host_hwm", -1L)
+    }
     var done = false
     try {
+      // once before the wave cap is checked: an init-only run
+      // (maxWaves = 0) still admits the fresh-start seeds
+      drain()
       while (!done && wave < cfg.maxWaves && !cfg.stopRequested()) {
-        // concurrent intake: seeds POSTed since the last boundary join
-        // THIS wave (reference: Init returns while the crawl goroutine
-        // runs, crawler.go:63-67)
-        val admitted = drainInbox(spark, t, seen)
-        if (admitted > 0) {
-          val c = t.frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
-          frontierSize = c.getOrElse("frontier_size", frontierSize)
-          hostHwm = c.getOrElse("host_hwm", hostHwm)
-        }
+        drain()
         val frontier = liveFrontier(spark, t, spark.emptyDataset[FrontierEntry].toDF())
         if (t.frontier.isEmpty) {
           // drained — but with live intake the crawl idles for the next
@@ -237,11 +219,8 @@ object CrawlJob {
           if (cfg.intakeActive()) Thread.sleep(200L) else done = true
         }
         else {
-          val (m, nextSize, nextHwm) = runWave(spark, t, docsDf, policy, cfg, wave,
+          out += runWave(spark, t, docsDf, policy, cfg, wave,
             frontier, frontierSize, hostHwm, seen, seedHosts)
-          out += m
-          frontierSize = nextSize
-          hostHwm = nextHwm
           wave += 1
           cfg.onWaveEnd(wave - 1)
         }
@@ -288,24 +267,49 @@ object CrawlJob {
     if (!fast) seen.bootstrap(seenDf)
   }
 
+  /** Driver-side seed intake: canonical seeds as frontier entries whose
+    * `link_index` is the seed's position in the list (invalid URLs keep
+    * their position, like the oracle). Duplicates stay in; the drain keeps
+    * the lowest position per URL. */
+  private[graft] def seedEntries(seeds: Seq[String]): Seq[FrontierEntry] =
+    seeds.zipWithIndex.flatMap { case (s, i) =>
+      Option(UrlOps.canonicalize(s)).map { c =>
+        FrontierEntry(c, UrlOps.urlHash64(c), UrlOps.hostOf(UrlOps.parse(c).authority), 0, 0L, i)
+      }
+    }
+
+  /** The fresh start's only write: the seeds as inbox batch -1. A no-op
+    * once a drain has started the wave counters. `foreachBatch` ids start
+    * at 0, so no stream batch is ever taken for a replay of it, and a
+    * re-run after a crash before the first drain landed is a no-op too.
+    * An always-on intake stream on the same root must start after this
+    * call: the inbox has one writer at a time. */
+  private[graft] def enqueueSeeds(spark: SparkSession, t: Tables, seeds: Seq[String]): Unit =
+    if (!t.frontier.currentSnapshot.exists(_.counters.contains("next_wave"))) {
+      import spark.implicits._
+      StreamOps.enqueueSeedBatch(t.inbox)(seedEntries(seeds).toDF(), -1L)
+    }
+
   /** Drain newly-arrived seed-inbox entries into the frontier + seen
-    * state — called at each wave boundary, so a seed enqueued mid-crawl
-    * (StreamOps.enqueueSeedBatch, the always-on intake sink) joins the
-    * very next wave. Returns the number of admitted seeds.
+    * state — the only way seeds enter a crawl. It runs once at start
+    * (admitting the fresh-start seeds) and at each wave boundary, so a
+    * seed enqueued mid-crawl (StreamOps.enqueueSeedBatch, the always-on
+    * intake sink) joins the very next wave.
     *
-    * Durable protocol (same shape as StreamOps.admitSeedBatch):
+    * Durable protocol:
     *  - the SEEN append lands first, tagged `intake_drain_v` = the inbox
     *    version being drained and deliberately WITHOUT a `wave` counter —
     *    the resume trim must never roll it back, because the frontier
     *    side below survives crashes;
     *  - the FRONTIER append (all previous counters carried + the
     *    `intake_drained` high-water mark) is the drain's commit marker;
+    *    on a fresh root it also starts the wave counters (`next_wave` 0,
+    *    `host_hwm` from 0);
     *  - a crash between the two replays by time travel: the next drain
     *    sees the seen snapshot tagged with this version and re-derives
     *    the admitted set against that snapshot's PARENT, so the seeds
     *    reach the frontier exactly once. */
-  private def drainInbox(spark: SparkSession, t: Tables, seen: SeenState): Long = {
-    var total = 0L
+  private def drainInbox(spark: SparkSession, t: Tables, seen: SeenState): Unit = {
     var continue = true
     while (continue) {
       continue = false
@@ -326,12 +330,11 @@ object CrawlJob {
             .sortBy(_.counters("intake_drain_v"))
             .headOption
           val target = crashed.map(_.counters("intake_drain_v").toInt).getOrElse(curV)
-          total += drainStep(spark, t, seen, drained, target, crashed)
+          drainStep(spark, t, seen, drained, target, crashed)
           continue = target < curV // replayed a prefix: drain the rest too
         }
       }
     }
-    total
   }
 
   /** One drain transaction over inbox batches (drained, target], pinned to
@@ -339,13 +342,17 @@ object CrawlJob {
     * exactly the batch set a crashed seen append covered, and a concurrent
     * intake append must not widen it). */
   private def drainStep(spark: SparkSession, t: Tables, seen: SeenState,
-      drained: Int, target: Int, crashed: Option[IceLite.Snapshot]): Long = {
+      drained: Int, target: Int, crashed: Option[IceLite.Snapshot]): Unit = {
+    val prev = t.frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
+    // a fresh root's first drain starts the wave counters
+    val marker = Map("intake_drained" -> target.toLong,
+      "next_wave" -> prev.getOrElse("next_wave", 0L))
     // delta read: O(new batches); falls back to all of target's dirs when
-    // `drained` was expired (the seen anti-join below removes re-reads)
+    // `drained` was expired (the seen dedup below removes re-reads)
     val newRows = t.inbox.readBetween(drained, target) match {
       case None => // marker-only commits in the range: advance and move on
-        t.frontier.amendCounters(Map("intake_drained" -> target.toLong))
-        return 0L
+        t.frontier.amendCounters(marker)
+        return
       case Some(df) => df
     }
     // first-wins across pending batches (lowest link_index = arrival seq)
@@ -393,20 +400,18 @@ object CrawlJob {
       seen.addWave(admitted.select(col("url_hash")), n)
     }
     if (n > 0) {
-      val prev = t.frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
       // keep the host high-water mark covering intake hosts too (frozen
-      // once past the join cutover)
-      val prevHwm = prev.getOrElse("host_hwm", -1L)
+      // once past the join cutover); it starts at 0 on a fresh root, and
+      // roots written before the counter existed keep -1
+      val prevHwm = prev.getOrElse("host_hwm", if (prev.contains("next_wave")) -1L else 0L)
       val hwm =
         if (prevHwm < 0 || prevHwm > Robots.MaxBroadcastHosts) prevHwm
         else prevHwm + stats.getLong(1)
-      t.frontier.append(admitted, prev +
-        ("intake_drained" -> target.toLong) +
+      t.frontier.append(admitted, prev ++ marker +
         ("frontier_size" -> (prev.getOrElse("frontier_size", 0L) + n)) +
         ("host_hwm" -> hwm))
-    } else t.frontier.amendCounters(Map("intake_drained" -> target.toLong))
+    } else t.frontier.amendCounters(marker)
     admitted.unpersist()
-    n
   }
 
   // Bank image layout version: bump whenever the bucket function or the
@@ -441,11 +446,12 @@ object CrawlJob {
     * where exactly-once is guaranteed by the write job; the candidate
     * total is a deterministic aggregate over the cached winners (an
     * observe under a persist can double-fire on cache races/retries).
-    * Returns (metrics, next frontier size, next host high-water mark). */
+    * The next frontier size and host high-water mark ride the frontier
+    * commit's counters. */
   private def runWave(spark: SparkSession, t: Tables, docsDf: DataFrame,
       policy: Robots.RobotsPolicy, cfg: Config, wave: Int, frontier: DataFrame,
       frontierSize: Long, hostHwm: Long, seen: SeenState, seedHosts: Set[String])
-      : (WaveMetrics, Long, Long) = {
+      : WaveMetrics = {
     import spark.implicits._
     import org.apache.spark.sql.Observation
     // wave-size-adaptive parallelism: a 10-row wave must not pay 32-task
@@ -454,12 +460,10 @@ object CrawlJob {
     // repartition/write paths AQE does not.)
     val p = math.max(1, math.min(cfg.numPartitions,
       ((frontierSize * 8) / 50000L).toInt + 1))
-    val trace = sys.env.contains("GRAFT_TRACE")
     var tLast = System.nanoTime()
     def mark(step: String): Unit = {
       val now = System.nanoTime()
       val dt = (now - tLast) / 1e9
-      if (trace) println(f"[trace] wave=$wave $step%-14s $dt%.2fs")
       val sink = stepSink
       if (sink != null) sink(step, dt)
       tLast = now
@@ -665,7 +669,8 @@ object CrawlJob {
       if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")), nNewSeen)
       mark("seen_fold")
 
-      // --- bounded fetch-miss retry (cuckoo unsee path) ------------------
+      // --- bounded fetch-miss retry: misses re-enter the frontier directly
+      //     and stay in the seen set, so link rediscovery still dedups ----
       val (retryRows, nRetried, missCache) =
         if (cfg.maxRetries <= 0) (null: DataFrame, 0L, null: DataFrame)
         else {
@@ -686,10 +691,6 @@ object CrawlJob {
             Map("wave" -> wave.toLong))
           val nR = Option(obsFail.get("r")).map(_.asInstanceOf[Long]).getOrElse(0L)
           val rr = missF.filter(col("fails") <= cfg.maxRetries).select(frontierCols: _*)
-          // un-see the retried hashes in the cuckoo bank (delete, then
-          // re-insert: they remain in the exact seen set — direct
-          // re-admission below, link rediscovery still dedups)
-          if (nR > 0) seen.unseeReinsert(rr.select(col("url_hash")))
           (rr, nR, missF)
         }
 
@@ -805,7 +806,7 @@ object CrawlJob {
     // starts from the IceLite parquet — broadcasts retired by a rebase
     // this wave are now unreachable and safe to destroy.
     seen.releaseRetired()
-    (metrics, nextSize, nextHwm)
+    metrics
   }
 
   /** The fetch: the corpus inner-joined with the wave's fetch set. The

@@ -72,18 +72,10 @@ import java.nio.file.Files
   *    the bank at the next rebase; probe depth ≤ rebaseEvery+1.
   *  - **Nothing broadcast-reachable is ever mutated.** Delta layers are
   *    immutable once broadcast; bank files are immutable once written
-  *    (rebase/resize/unsee write NEW versioned dirs); retired broadcasts
-  *    and dirs are destroyed only at the caller's wave boundary
+  *    (rebase/resize write NEW versioned dirs); retired broadcasts and
+  *    dirs are destroyed only at the caller's wave boundary
   *    ([[releaseRetired]]) because a cache-evicted partition of a live
   *    wave plan may recompute the probe mid-wave.
-  *  - **Deletion (cuckoo mode).** The bounded-retry policy un-sees
-  *    re-queued fetch misses: a per-bucket cuckoo delta built over the
-  *    retried hashes is deleted-then-reinserted against COPIES of the
-  *    affected bucket images, written as an overlay dir (partial-key
-  *    deletion, CuckooFilterImpl.deleteInPlace) — the retried URL remains
-  *    in the exact seen set (direct re-admission; link rediscovery must
-  *    still dedup against it), and no live broadcast observes a
-  *    transiently-missing fingerprint.
   */
 final class SeenState(
     spark: SparkSession,
@@ -236,22 +228,17 @@ final class SeenState(
   }
 
   /** Retire the current probe layers and install `dirs` as the new base.
-    * `foldDeltas`: the new bank was rebuilt from the pieces and therefore
-    * covers every delta — fold them (rebase/resize). An unsee overlay
-    * leaves the deltas in place (bank coverage is unchanged). */
-  private def swapBase(dirs: Vector[String], foldDeltas: Boolean): Unit = {
+    * The new bank covers every piece, hence every delta: the deltas fold
+    * into it. */
+  private def swapBase(dirs: Vector[String]): Unit = {
     if (baseBc != null) { retiredBcs :+= baseBc; nRebases += 1 }
-    if (foldDeltas) {
-      retiredBcs ++= deltaBcs
-      deltaBcs = Vector.empty
-      deltaFaces = Vector.empty
-    }
+    retiredBcs ++= deltaBcs
+    deltaBcs = Vector.empty
+    deltaFaces = Vector.empty
     retiredDirs ++= bankDirs.diff(dirs)
     bankDirs = dirs
     baseBc = spark.sparkContext.broadcast(
       LongMembership.FileBank(dirs, B, useCuckoo): LongMembership)
-    if (sys.env.contains("GRAFT_TRACE"))
-      println(s"[seen] base broadcast id=${baseBc.id} retired=${retiredBcs.map(_.id)}")
   }
 
   /** Rebuild the bank from the pieces at the current capacity (growing it
@@ -272,7 +259,7 @@ final class SeenState(
         SeenState.deleteDir(dir) // scrapped attempt — never broadcast
         perBucketCap = math.max(perBucketCap * 2, maxN * 2)
       } else {
-        swapBase(Vector(dir), foldDeltas = true)
+        swapBase(Vector(dir))
         out = stats.map(t => (t._1, t._2))
         done = true
       }
@@ -292,6 +279,18 @@ final class SeenState(
     java.util.Arrays.fill(bucketCounts, 0L)
     materializeBank().foreach { case (b, n) => bucketCounts(b) = n }
     pieceSizes = Vector(bucketCounts.sum)
+    dropEmptyBase()
+  }
+
+  /** A bootstrap that absorbed zero rows keeps no piece: the empty
+    * checkpoint has zero partitions while still claiming the B-way
+    * partitioning, so no candidate exchange could zip with it.
+    * [[freshAndConfirmed]] then passes every candidate through, and the
+    * first [[addWave]] creates the first piece. */
+  private def dropEmptyBase(): Unit = if (totalSeen == 0L) {
+    pieces.foreach(GraftShim.freeCheckpoint)
+    pieces = Vector.empty
+    pieceSizes = Vector.empty
   }
 
   // In-flight asynchronous fold (addWaveAsync). Every state-reading
@@ -344,10 +343,7 @@ final class SeenState(
     images.foreach { case (b, bytes) => layers(b) = membershipOf(bytes) }
     val face: LongMembership = LongMembership.Bucketed(layers)
     deltaFaces :+= face
-    val __bc = spark.sparkContext.broadcast(face)
-    if (sys.env.contains("GRAFT_TRACE"))
-      println(s"[seen] delta broadcast id=${__bc.id}")
-    deltaBcs :+= __bc
+    deltaBcs :+= spark.sparkContext.broadcast(face)
   }
 
   /** Fold the delta layers into a fresh bank rebuilt from the pieces —
@@ -376,9 +372,9 @@ final class SeenState(
 
   private def materializeBankIfAny(): Unit =
     if (pieces.nonEmpty) { materializeBank(); () }
-    else swapBase(Vector(nextBankDir()), foldDeltas = false) // empty bank
+    else swapBase(Vector(nextBankDir())) // empty bank
 
-  /** Destroy broadcasts and bank dirs retired by rebase/resize/unsee.
+  /** Destroy broadcasts and bank dirs retired by rebase/resize.
     * Call ONLY at a wave boundary, after every plan that could
     * re-evaluate the previous wave's probe has been committed and
     * unpersisted (a recomputed partition may lazily fault in a retired
@@ -454,43 +450,6 @@ final class SeenState(
     candCk = null
   }
 
-  /** Cuckoo unsee for the retry path: delete the retried hashes from the
-    * affected bucket images, then re-insert (they stay in the exact seen
-    * set — see class doc). The rewrite happens on COPIES loaded from the
-    * bank files and lands as an overlay dir — no filter reachable from a
-    * live broadcast is ever mutated. No-op in bloom mode (bloom cannot
-    * delete; the retried URL simply stays in the filter, also correct). */
-  def unseeReinsert(retryHashes: DataFrame): Unit = if (useCuckoo) {
-    awaitFold()
-    if (baseBc == null) materializeBankIfAny()
-    // the retried hashes travel RAW, grouped by bucket (O(wave) longs) —
-    // a delta filter image can't apply: delete needs the bank's own
-    // geometry, and building at bank capacity would be the O(capacity)
-    // collect this design removed
-    val byBucket = retryHashes.select(col("url_hash"), bucketCol.as("__b"))
-      .groupBy(col("__b")).agg(collect_list(col("url_hash")).as("hs"))
-      .as[(Int, Seq[Long])].collect()
-    if (byBucket.isEmpty) return
-    val overlay = nextBankDir()
-    StateIO.forPath(overlay).mkdirs(overlay)
-    val dirs = bankDirs
-    val cap = perBucketCap
-    spark.createDataset(byBucket.toSeq)
-      .map { case (b, hs) =>
-        val cur = LongMembership.loadBucketBytes(dirs, b)
-        val bank =
-          if (cur == null) CuckooFilterImpl.create(cap)
-          else CuckooFilterImpl.deserialize(cur)
-        hs.foreach(bank.delete)
-        hs.foreach(bank.insert)
-        SeenState.writeBucketFile(overlay, b, bank.serialize())
-        b
-      }
-      .collect()
-    // overlay wins for the rewritten buckets; older dirs stay referenced
-    swapBase(overlay +: bankDirs, foldDeltas = false)
-  }
-
   /** Driver-side snapshot of the merged filter bank (pending deltas are
     * folded first): (bucket, image, exactCount) per bucket + capacity.
     * O(seen-capacity) driver bytes — a test/tool face; the production
@@ -559,7 +518,7 @@ final class SeenState(
     perBucketCap = cap
     val dir = nextBankDir()
     images.foreach { case (b, bytes, _) => SeenState.writeBucketFile(dir, b, bytes) }
-    swapBase(Vector(dir), foldDeltas = true)
+    swapBase(Vector(dir))
   }
 
   /** Resume fast path, fully distributed: `bank` is a (bucket, image, n)
@@ -586,7 +545,8 @@ final class SeenState(
     stats.foreach { case (b, n) => bucketCounts(b) = n }
     pieceSizes = Vector(bucketCounts.sum)
     perBucketCap = cap
-    swapBase(Vector(dir), foldDeltas = true)
+    swapBase(Vector(dir))
+    dropEmptyBase()
   }
 
   private def resize(): Unit = {

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   *
   *  - crawl-request intake: `POST /crawl` (serving/handlers.go:25-96)
   *    becomes a stream of CrawlRequest rows — validation + seed
-  *    canonicalization as streaming transforms feeding the frontier;
+  *    canonicalization as streaming transforms feeding the seed inbox
+  *    that the wave loop drains;
   *  - telemetry windows: the reference's per-visit log firehose
   *    (logging/hook.go:116-123) becomes watermarked event-time windows;
   *  - per-host politeness state: mapGroupsWithState tracks a virtual
@@ -61,7 +62,8 @@ object StreamOps {
   /** Streaming seed intake, stage 1 (stateless transforms): validated
     * requests → frontier-entry-shaped rows. `seq` is the request's global
     * arrival number; it becomes link_index, exactly the "position in the
-    * seed list" the batch path uses — so intake order IS seed order. */
+    * seed list" the driver-side seeds carry — so intake order IS seed
+    * order. */
   def seedEntries(requests: DataFrame): DataFrame =
     validateRequests(requests)
       .filter(col("status") === 201)
@@ -73,75 +75,15 @@ object StreamOps {
         lit(0L).as("parent_ord"),
         col("seq").cast("int").as("link_index"))
 
-  /** Streaming seed intake, stage 2 (the per-micro-batch sink): first-wins
-    * within the batch (lowest seq), insert-if-new against the durable
-    * url_seen table, then append to url_seen and the frontier — the same
-    * admission semantics as CrawlJob's batch seed path, applied
-    * incrementally. A crawl resumed against the state root picks the new
-    * seeds up as wave-0 frontier entries.
-    *
-    * IDEMPOTENT under foreachBatch's at-least-once replay:
-    *  - the FRONTIER append (tagged with `intake_batch`) lands LAST and is
-    *    the batch's commit marker — a replay of a fully-committed batch is
-    *    a no-op;
-    *  - the SEEN append lands first, so the only partial state a crash can
-    *    leave is "seen landed, frontier didn't". A replay then detects the
-    *    batch's seen snapshot and re-derives the admitted set by
-    *    anti-joining against that snapshot's PARENT (time travel) — the
-    *    seeds are re-admitted to the frontier exactly once instead of
-    *    vanishing into the already-updated seen set. */
-  def admitSeedBatch(spark: SparkSession,
-      frontier: graft.sources.IceLite.Table,
-      seen: graft.sources.IceLite.Table)(batch: DataFrame, batchId: Long): Unit = {
-    if (frontier.snapshots.exists(_.counters.get("intake_batch").contains(batchId)))
-      return // fully committed — replayed batch
-    val winners = batch
-      .groupBy(col("url_hash"))
-      .agg(min(struct(col("link_index"), col("url"), col("host"),
-        col("depth"), col("parent_ord"))).as("w"))
-      .select(col("w.url").as("url"), col("url_hash"), col("w.host").as("host"),
-        col("w.depth").as("depth"), col("w.parent_ord").as("parent_ord"),
-        col("w.link_index").as("link_index"))
-    val seenBatchSnap = seen.snapshots
-      .find(_.counters.get("intake_batch").contains(batchId))
-    val seenBase: Option[DataFrame] = seenBatchSnap match {
-      // partial replay: dedup against the seen content BEFORE this batch
-      case Some(s) if s.parent >= 0 &&
-          seen.snapshot(s.parent).exists(_.dataDirs.nonEmpty) =>
-        Some(seen.readAt(s.parent))
-      case Some(_) => None // this batch was the first seen content ever
-      case None => if (seen.isEmpty) None else Some(seen.read())
-    }
-    val unseen = seenBase.fold(winners)(sb =>
-      winners.join(sb.select("url_hash"), Seq("url_hash"), "left_anti"))
-    val admitted = unseen
-      .select(col("url"), col("url_hash"), col("host"), col("depth"),
-        col("parent_ord"), col("link_index"))
-      .persist()
-    if (seenBatchSnap.isEmpty)
-      seen.append(admitted.select(col("url_hash"), col("url"), lit(0).as("wave")),
-        Map("intake_batch" -> batchId))
-    // The frontier append CARRIES FORWARD the wave-loop counters: a crawl
-    // resumed on this state root must see next_wave intact (an intake
-    // mid-crawl otherwise looks like a fresh root and re-seeds) and a
-    // frontier_size grown by the admitted count (it drives the loop's
-    // wave-size-adaptive parallelism).
-    val n = admitted.count()
-    val prev = frontier.currentSnapshot.map(_.counters).getOrElse(Map.empty)
-    frontier.append(admitted, Map(
-      "intake_batch" -> batchId,
-      "next_wave" -> prev.getOrElse("next_wave", 0L),
-      "frontier_size" -> (prev.getOrElse("frontier_size", 0L) + n)))
-    admitted.unpersist()
-  }
-
-  /** Always-on intake sink (CONCURRENT mode): append validated seed
-    * entries to the durable seed INBOX only. The wave loop drains the
-    * inbox at each wave boundary (CrawlJob.drainInbox) — intake and
-    * crawling run concurrently on one state root with a single writer
-    * per table (the streaming query owns the inbox, the loop owns
-    * frontier/seen), the lock-free twin of the reference's
-    * Init-returns-while-the-crawl-goroutine-runs (crawler.go:63-67).
+  /** Seed intake, stage 2 (the per-micro-batch sink): append validated
+    * seed entries to the durable seed INBOX only. The wave loop drains the
+    * inbox at start and at each wave boundary (CrawlJob.drainInbox, the
+    * one admission path; the crawl's own fresh-start seeds arrive here
+    * too, as batch -1). Intake and crawling run concurrently on one state
+    * root with a single writer per table (the streaming query owns the
+    * inbox, the loop owns frontier/seen), the lock-free twin of the
+    * reference's Init-returns-while-the-crawl-goroutine-runs
+    * (crawler.go:63-67).
     * Idempotent under foreachBatch's at-least-once replay via the
     * intake_batch marker; an empty batch advances the marker with a
     * metadata-only commit. */

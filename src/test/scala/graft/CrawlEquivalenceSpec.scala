@@ -378,6 +378,45 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assertEquivalent(o, root, m1 ++ m2)
   }
 
+  /** A fresh start that crashed before its first drain committed: the
+    * seeds are in the inbox as batch -1, and `seenLanded` adds the drain's
+    * seen append (tagged with the drained inbox version) without the
+    * frontier marker. The resumed run must replay the oracle exactly. */
+  private def freshStartCrash(tag: String, seenLanded: Boolean): Unit = {
+    import spark.implicits._
+    val cfg = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
+    val corpus = Corpus.generate(cfg)
+    val rules = Corpus.robotsRules(cfg)
+    val seeds = Seq(
+      "http://hot.example.com/p/0",
+      "http://site1.example.org/p/0?b=1&a=1",
+      "not a url",
+      "http://hot.example.com/p/0#dup")
+    val o = CrawlOracle.run(corpus, rules,
+      CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 2))
+    val root = tmpDir(tag)
+    val t = CrawlJob.tables(root, spark)
+    val entries = CrawlJob.seedEntries(seeds)
+    graft.streaming.StreamOps.enqueueSeedBatch(t.inbox)(entries.toDF(), -1L)
+    if (seenLanded)
+      t.seen.append(
+        entries.distinctBy(_.url_hash).map(e => SeenUrl(e.url_hash, e.url, 0)).toDF(),
+        Map("intake_drain_v" -> t.inbox.currentVersion.toLong))
+    assert(t.frontier.currentSnapshot.isEmpty)
+    val m = CrawlJob.run(spark, corpusDf(corpus), rules,
+      CrawlJob.Config(seeds, onDomain = false, hostBudget = 2, maxWaves = 64,
+        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+    assertEquivalent(o, root, m)
+  }
+
+  test("crash after the fresh-start enqueue, before any drain: resume stays exact") {
+    freshStartCrash("fresh-inbox", seenLanded = false)
+  }
+
+  test("crash with the fresh drain's seen append landed but no frontier: resume stays exact") {
+    freshStartCrash("fresh-seen", seenLanded = true)
+  }
+
   test("kill after wave k, resume: final state identical to uninterrupted run") {
     val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 5, seed = 99L)
     val corpus = Corpus.generate(cfg)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit gates for the bucketed LSM seen state: saturation-aware filter
-  * resizing, piece compaction, prefilter no-false-negative contract, and
-  * the cuckoo unsee round-trip — the properties the 10^10 design hangs on
+  * resizing, piece compaction, the prefilter no-false-negative contract,
+  * and the empty bootstrap — the properties the 10^10 design hangs on
   * (exactness itself is prefilter-independent and covered by
   * CrawlEquivalenceSpec). */
 class SeenStateSpec extends AnyFunSuite {
@@ -149,15 +149,23 @@ class SeenStateSpec extends AnyFunSuite {
     s.close()
   }
 
-  test("cuckoo mode: unseeReinsert round-trips without false negatives") {
-    val s = new SeenState(spark, buckets = 4, useCuckoo = true,
-      expectedItems = 100000L, fpp = 0.01, compactAt = 8)
-    s.bootstrap(hashes(0, 2000))
-    // un-see 500 retried hashes, then (as the engine does) re-insert them
-    s.unseeReinsert(hashes(500, 1000))
-    val pf = s.prefilter
-    val all = hashes(0, 2000).collect().map(_.getLong(0))
-    assert(all.forall(pf.mightContain), "false negative after unsee round-trip")
+  test("bootstrap over an empty seen table passes every candidate through") {
+    import spark.implicits._
+    val s = new SeenState(spark, buckets = 4, useCuckoo = false,
+      expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+    try {
+      // the frame a fresh crawl bootstraps from
+      s.bootstrap(spark.emptyDataset[graft.model.SeenUrl].toDF())
+      val want = hashes(0, 500).collect().map(_.getLong(0)).toSet
+      val got = s.freshAndConfirmed(hashes(0, 500)).collect().map(_.getLong(0)).toSet
+      assert(got == want)
+      assert(s.pieceCount == 0 && s.totalSeen == 0L)
+      // the first wave creates the first piece; later probes dedup against it
+      s.addWave(hashes(0, 500), 500L)
+      assert(s.pieceCount == 1)
+      val next = s.freshAndConfirmed(hashes(250, 750)).collect().map(_.getLong(0)).toSet
+      assert(next == hashes(500, 750).collect().map(_.getLong(0)).toSet)
+    } finally s.close()
   }
 
   test("bucketed probe routes negative hashes correctly (partition-aligned buckets)") {

@@ -44,6 +44,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(byUrl("not a url") == (None, 400))
   }
 
+  private def initOnly(seeds: Seq[String], root: String): Unit = {
+    import spark.implicits._
+    // maxWaves = 0: enqueue the seeds (fresh root only) and drain once
+    CrawlJob.run(spark, spark.emptyDataset[graft.model.WebDoc].toDF(), Seq.empty,
+      CrawlJob.Config(seeds, maxWaves = 0, numPartitions = 2), root)
+  }
+
   test("streaming seed intake lands frontier rows identical to the batch seed path") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -57,29 +64,30 @@ class StreamingSpec extends AnyFunSuite {
       "not a url",
       "http://site2.example.org/p/9")
 
-    // batch twin: CrawlJob's fresh-init seed admission (maxWaves=0 → init only)
+    // batch twin: CrawlJob's fresh start, init only
     val root1 = java.nio.file.Files.createTempDirectory("graft-intake-batch").toString
-    CrawlJob.run(spark, spark.emptyDataset[graft.model.WebDoc].toDF(), Seq.empty,
-      graft.plans.CrawlJob.Config(seeds, maxWaves = 0, numPartitions = 2), root1)
+    initOnly(seeds, root1)
 
     // streaming twin: the same seeds as CrawlRequests over TWO micro-batches
+    // into the inbox, then an init-only run without seeds drains them
     val root2 = java.nio.file.Files.createTempDirectory("graft-intake-stream").toString
     val t = CrawlJob.tables(root2, spark)
     val input = MemoryStream[(String, String, Boolean, String, String, Timestamp, Long)]
     val df = input.toDF().toDF("index", "url", "on_domain", "engine", "type", "ts", "seq")
     def req(i: Int) = ("idx", seeds(i), false, "eng", "elasticsearch",
       Timestamp.valueOf("2024-01-01 00:00:00"), i.toLong)
-    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit =
-      StreamOps.admitSeedBatch(spark, t.frontier, t.seen)
     val q = StreamOps.seedEntries(df)
       .writeStream
-      .foreachBatch(sink)
+      .foreachBatch(StreamOps.enqueueSeedBatch(t.inbox) _)
       .start()
     input.addData(req(0), req(1))          // micro-batch 1
     q.processAllAvailable()
     input.addData(req(2), req(3), req(4))  // micro-batch 2 (dup + invalid)
     q.processAllAvailable()
     q.stop()
+    // two separate intake commits landed (one per micro-batch)
+    assert(t.inbox.currentSnapshot.get.dataDirs.size == 2)
+    initOnly(Seq.empty, root2)
 
     def frontierRows(root: String) =
       CrawlJob.tables(root, spark).frontier.read()
@@ -90,40 +98,53 @@ class StreamingSpec extends AnyFunSuite {
     def seenRows(root: String) =
       CrawlJob.tables(root, spark).seen.read().select("url_hash", "url")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def counters(root: String) =
+      CrawlJob.tables(root, spark).frontier.currentSnapshot.get.counters
 
     assert(frontierRows(root2) == frontierRows(root1),
       s"stream=${frontierRows(root2)}\nbatch=${frontierRows(root1)}")
     assert(seenRows(root2) == seenRows(root1))
-    // two separate intake commits landed (one per micro-batch)
-    assert(t.frontier.snapshots.count(_.counters.contains("intake_batch")) == 2)
+    assert(frontierRows(root1).map(_._6) == Set(0, 1, 4), "first-wins by seed position")
+    // the fresh drain starts the wave counters: 3 seeds on 3 hosts
+    assert(counters(root1) == Map("next_wave" -> 0L, "frontier_size" -> 3L,
+      "host_hwm" -> 3L, "intake_drained" -> 0L))
+    assert(counters(root2) - "intake_drained" == counters(root1) - "intake_drained")
   }
 
-  test("admitSeedBatch is idempotent under at-least-once replay (full and partial)") {
+  test("inbox drain is idempotent under replay (full and partial)") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-intake-idem").toString
     val t = CrawlJob.tables(root, spark)
     def entries(urls: (String, Int)*) = urls.toSeq.map { case (u, seq) =>
       (u, graft.functions.UrlOps.urlHash64(u), "h.com", 0, 0L, seq)
     }.toDF("url", "url_hash", "host", "depth", "parent_ord", "link_index")
-    val admit = StreamOps.admitSeedBatch(spark, t.frontier, t.seen) _
-    admit(entries("http://h.com/a" -> 0, "http://h.com/b" -> 1), 0L)
+    val enq = StreamOps.enqueueSeedBatch(t.inbox) _
+    // a root started without seeds keeps an empty seen set; its restart
+    // bootstraps from the saved filter bank and must still admit intake
+    initOnly(Seq.empty, root)
+    assert(t.seen.currentVersion < 0 && t.filters.currentVersion >= 0)
+    enq(entries("http://h.com/a" -> 0, "http://h.com/b" -> 1), 0L)
+    initOnly(Seq.empty, root)
     def frontierUrls = t.frontier.read().select("url").collect().map(_.getString(0)).toSeq
     def seenUrls = t.seen.read().select("url").collect().map(_.getString(0)).toSeq
     assert(frontierUrls.sorted == Seq("http://h.com/a", "http://h.com/b"))
     val v0 = t.frontier.currentVersion
-    // FULL replay: nothing moves
-    admit(entries("http://h.com/a" -> 0, "http://h.com/b" -> 1), 0L)
+    // FULL replay: the batch re-posted and the drain re-run — nothing moves
+    enq(entries("http://h.com/a" -> 0, "http://h.com/b" -> 1), 0L)
+    initOnly(Seq.empty, root)
     assert(t.frontier.currentVersion == v0 && frontierUrls.size == 2)
-    // PARTIAL replay: batch 1's SEEN append landed, frontier append did not
-    // (the crash window between the two appends) — the replay must re-admit
-    // the seeds to the frontier exactly once, not drop them
+    // PARTIAL replay: batch 1's drain crashed after its SEEN append landed,
+    // before its frontier append — the next drain must admit the seed to
+    // the frontier exactly once, not drop it
     val b1 = entries("http://h.com/c" -> 2)
+    enq(b1, 1L)
+    val vC = t.inbox.currentVersion.toLong
     t.seen.append(b1.select(col("url_hash"), col("url"), lit(0).as("wave")),
-      Map("intake_batch" -> 1L))
-    admit(b1, 1L)
+      Map("intake_drain_v" -> vC))
+    initOnly(Seq.empty, root)
     assert(frontierUrls.sorted == Seq("http://h.com/a", "http://h.com/b", "http://h.com/c"))
     assert(seenUrls.count(_ == "http://h.com/c") == 1, "partial replay duplicated seen row")
-    assert(t.seen.snapshots.count(_.counters.get("intake_batch").contains(1L)) == 1)
+    assert(t.seen.snapshots.count(_.counters.get("intake_drain_v").contains(vC)) == 1)
   }
 
   test("seeds injected mid-crawl: the wave loop resumes over them, deterministically") {
@@ -145,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
       val input = MemoryStream[(String, String, Boolean, String, String, Timestamp, Long)]
       val df = input.toDF().toDF("index", "url", "on_domain", "engine", "type", "ts", "seq")
       val q = StreamOps.seedEntries(df).writeStream
-        .foreachBatch(StreamOps.admitSeedBatch(spark, t.frontier, t.seen) _)
+        .foreachBatch(StreamOps.enqueueSeedBatch(t.inbox) _)
         .start()
       input.addData(("idx", "http://site3.example.org/p/0", false, "eng",
         "elasticsearch", Timestamp.valueOf("2024-01-01 00:00:00"), 0L))
@@ -212,14 +233,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(seedBVisit.exists(_._2 >= 2), s"seed B visit: $seedBVisit")
     assert(sC.exists(_.startsWith("http://site3.example.org/p/")), "no expansion from seed B")
 
-    // twin 2: the alternating-batch admission (run 2 waves, admit via the
-    // batch path, resume) — the concurrent run must be state-identical
+    // twin 2: the alternating-batch admission (run 2 waves, enqueue while
+    // no crawl runs, resume: the resumed run drains before its first wave)
+    // — the concurrent run must be state-identical
     val rootB = java.nio.file.Files.createTempDirectory("graft-conc-twin").toString
     def jobCfgB(w: Int) = CrawlJob.Config(Seq(seedA), hostBudget = 3, maxWaves = w,
       numPartitions = 2, saltBuckets = 2, bloomItems = 100000L)
     CrawlJob.run(spark, docs, rules, jobCfgB(2), rootB)
     val tb = CrawlJob.tables(rootB, spark)
-    StreamOps.admitSeedBatch(spark, tb.frontier, tb.seen)(
+    StreamOps.enqueueSeedBatch(tb.inbox)(
       Seq((seedB, graft.functions.UrlOps.urlHash64(seedB),
         "site3.example.org", 0, 0L, 0))
         .toDF("url", "url_hash", "host", "depth", "parent_ord", "link_index"), 0L)
