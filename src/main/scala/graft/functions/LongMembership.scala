@@ -48,7 +48,7 @@ object LongMembership {
     def mightContain(h: Long): Boolean = filters(bucketOf(h, b)).mightContain(h)
   }
 
-  /** OR over layers (driver-side probe face for tests/export — executors
+  /** OR over layers (driver-side probe face for tests/tools — executors
     * probe the layers as separate broadcasts inside codegen instead). */
   final case class Layered(layers: Seq[LongMembership]) extends LongMembership {
     def mightContain(h: Long): Boolean = layers.exists(_.mightContain(h))
@@ -58,34 +58,29 @@ object LongMembership {
     if (cuckoo) Cuckoo(CuckooFilterImpl.deserialize(bytes))
     else Bloom(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
 
-  /** Raw bytes of bucket `b`'s image under an overlay chain of bank dirs
-    * (first dir containing the bucket file wins — newest overlay first);
-    * null when no dir has it. */
-  def loadBucketBytes(dirs: Seq[String], b: Int): Array[Byte] =
-    dirs.iterator
-      .map(d => graft.sources.StateIO.forPath(d).readBytesIfExists(s"$d/bucket_$b.bin"))
-      .collectFirst { case bytes if bytes != null => bytes }
-      .orNull
+  /** Raw bytes of bucket `b`'s image in bank dir `dir`; null when the
+    * bucket never received a row. */
+  def loadBucketBytes(dir: String, b: Int): Array[Byte] =
+    graft.sources.StateIO.forPath(dir).readBytesIfExists(s"$dir/bucket_$b.bin")
 
   /** The BASE probe face of the seen state: per-bucket filter images in
     * shared storage (the IceLite state root in production), loaded
     * LAZILY per bucket on first probe and cached per JVM instance.
     *
     * This is what keeps the probe O(seen/B)-resident per executor at the
-    * 10^10 design point: the broadcast itself carries only paths (O(B)
-    * strings), and because [[bucketOf]] equals the candidate exchange's
+    * 10^10 design point: the broadcast itself carries only the bank dir
+    * path, and because [[bucketOf]] equals the candidate exchange's
     * partition id, an executor only ever faults in the buckets of the
     * partitions it runs — never the whole bank. (A full-bank broadcast is
     * O(seen) ≈ 12 GB per executor at 10^10/0.01 FPP — the round-2 design
     * this replaces.)
     *
-    * `dirs` is an overlay chain, newest first (cuckoo unsee rewrites only
-    * the affected buckets into a fresh overlay dir). Reads go through the
-    * [[graft.sources.StateIO]] seam against the shared state root — the
-    * same storage contract as [[graft.sources.IceLite]]: a URI root
-    * (hdfs://, s3a://, file://) runs on the Hadoop FileSystem API, so a
-    * multi-executor deployment probes images any node wrote. */
-  final case class FileBank(dirs: Seq[String], buckets: Int, cuckoo: Boolean)
+    * Reads go through the [[graft.sources.StateIO]] seam against the
+    * shared state root — the same storage contract as
+    * [[graft.sources.IceLite]]: a URI root (hdfs://, s3a://, file://)
+    * runs on the Hadoop FileSystem API, so a multi-executor deployment
+    * probes images any node wrote. */
+  final case class FileBank(dir: String, buckets: Int, cuckoo: Boolean)
     extends LongMembership {
 
     @transient private lazy val cache = new AtomicReferenceArray[LongMembership](buckets)
@@ -101,7 +96,7 @@ object LongMembership {
     }
 
     private def load(b: Int): LongMembership = {
-      val bytes = loadBucketBytes(dirs, b)
+      val bytes = loadBucketBytes(dir, b)
       if (bytes == null) Empty else deserializeFilter(bytes, cuckoo)
     }
   }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.model.RobotsRule
 import graft.plans.SeenState
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,15 +25,6 @@ object FrontierKernel {
 
   private val priorityKeys = Seq(col("depth"), col("parent_ord"), col("link_index"))
   private val obsCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Back-compat face: builds the size-adaptive policy from a rule Seq
-    * (compiled predicate ≤64 hosts, broadcast packed-rules join above —
-    * the same cutover the production wave loop uses). */
-  def scheduleDedup(spark: SparkSession, frontier: DataFrame, frontierTotal: Long,
-      seen: SeenState, rules: Seq[RobotsRule], hostBudget: Int, saltBuckets: Int,
-      numPartitions: Int): KernelResult =
-    scheduleDedup(spark, frontier, frontierTotal, seen,
-      Robots.policy(rules, spark), hostBudget, saltBuckets, numPartitions)
 
   /** One schedule+dedup pass.
     * frontier: (url, url_hash, host, depth, parent_ord, link_index)

@@ -60,9 +60,8 @@ object Politeness {
     * is worth paying to skip the windowed branch outright when the set
     * is empty — that branch otherwise scans the WHOLE frontier just to
     * keep zero rows. Below it, a per-wave count job costs more than the
-    * scan it might save. Env-overridable like the other scale knobs. */
-  val SkipContendedProbeAt: Long =
-    sys.env.get("GRAFT_CONTENDED_PROBE_AT").map(_.toLong).getOrElse(1L << 22)
+    * scan it might save. */
+  val SkipContendedProbeAt: Long = 1L << 22
 
   /** Back-compat entry point for driver-resident rule Seqs. */
   def select(frontier: DataFrame, rules: Seq[RobotsRule], hostBudget: Int,

@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * Longest-prefix-match-wins over the URL path. Two physical forms behind
   * one [[RobotsPolicy]] face, selected by rule-set size:
   *
-  *  - **Compiled** (≤ maxCompileHosts distinct hosts): a constant-folded
-  *    `when`-chain that stays inside whole-stage codegen — zero join,
-  *    zero shuffle. Past ~64 hosts the chain blows the 64 KB JVM method
-  *    limit (codegen falls back to interpreted) and plan construction
-  *    itself becomes O(hosts) per wave, so it is capped.
+  *  - **Compiled** (≤ [[Robots.MaxCompileHosts]] distinct hosts): a
+  *    constant-folded `when`-chain that stays inside whole-stage codegen
+  *    — zero join, zero shuffle. Past ~64 hosts the chain blows the 64 KB
+  *    JVM method limit (codegen falls back to interpreted) and plan
+  *    construction itself becomes O(hosts) per wave, so it is capped.
   *  - **Joined** (any size): rules pre-packed to ONE row per host with
   *    the prefix list sorted longest-first and joined on `host` alone;
   *    the longest-match decision is a codegen'd array scan
@@ -37,6 +37,10 @@ object Robots {
     * autoBroadcastJoinThreshold, i.e. the size at which Spark itself
     * stops choosing broadcast. */
   val MaxBroadcastHosts: Long = 1L << 16
+
+  /** Distinct ruled hosts up to which rules compile to the codegen'd
+    * `when`-chain; above it they take the packed-rules join. */
+  val MaxCompileHosts: Int = 64
 
   /** The one rules-join used by every [[Joined]]/[[RobotsTxt.JoinedTxt]]
     * use site: broadcast below the host cutover, shuffle-hash above
@@ -128,10 +132,9 @@ object Robots {
       max(col("crawl_delay")).as("__delay"))
 
   /** Size-based cutover from a driver-resident rule Seq. */
-  def policy(rules: Seq[RobotsRule], spark: SparkSession,
-      maxCompileHosts: Int = 64): RobotsPolicy = {
+  def policy(rules: Seq[RobotsRule], spark: SparkSession): RobotsPolicy = {
     val nHosts = rules.iterator.map(_.host).toSet.size
-    if (nHosts <= maxCompileHosts) Compiled(rules)
+    if (nHosts <= MaxCompileHosts) Compiled(rules)
     else {
       import spark.implicits._
       Joined(packRules(rules.toDF()).persist(), nHosts.toLong)
@@ -141,9 +144,9 @@ object Robots {
   /** Size-based cutover from a rules DataFrame — the large-table entry
     * point: the driver never collects the raw rules above the threshold
     * (only the per-host packed rows travel, as a broadcast). */
-  def policyFromDf(rulesDf: DataFrame, maxCompileHosts: Int = 64): RobotsPolicy = {
+  def policyFromDf(rulesDf: DataFrame): RobotsPolicy = {
     val nHosts = rulesDf.select(col("host")).distinct().count()
-    if (nHosts <= maxCompileHosts) {
+    if (nHosts <= MaxCompileHosts) {
       val collected = rulesDf
         .select(col("host"), col("path_prefix"), col("allow"), col("crawl_delay"))
         .collect()

@@ -263,7 +263,7 @@ object RobotsTxt {
     * codegen'd compiled chain, above it only the packed per-host rows
     * ever move (broadcast join) and the driver never holds a rule. */
   def policyFromTxt(bodies: org.apache.spark.sql.DataFrame, agent: String,
-      maxCompileHosts: Int = 64): Robots.RobotsPolicy = {
+      maxCompileHosts: Int = Robots.MaxCompileHosts): Robots.RobotsPolicy = {
     val parsed = bodies.select(col("host"),
       parse_robots_txt(col("body"), lit(agent)).as("p"))
     val nHosts = parsed.select(col("host")).distinct().count()

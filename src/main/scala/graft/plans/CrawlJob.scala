@@ -31,7 +31,7 @@ import scala.concurrent.duration.Duration
   *  - each wave round-trips state through IceLite parquet: lineage
   *    truncation + atomic checkpoint + exact kill/resume for free;
   *  - robots rules ride a [[Robots.RobotsPolicy]]: a constant-folded
-  *    codegen predicate below `robotsCompileMaxHosts` distinct hosts, a
+  *    codegen predicate up to [[Robots.MaxCompileHosts]] distinct hosts, a
   *    broadcast packed-rules join above it (the compiled `when`-chain
   *    blows the 64 KB codegen method limit past ~64 hosts).
   */
@@ -45,23 +45,26 @@ object CrawlJob {
       numPartitions: Int = 32,
       saltBuckets: Int = 8,
       bloomItems: Long = 4L * 1000 * 1000, // expected total seen URLs (filters resize past it)
-      bloomFpp: Double = 0.01,
       seenFilter: String = "bloom", // "bloom" | "cuckoo" (north_rule names both)
-      seenBuckets: Int = 32,        // hash buckets for the seen LSM + filter bank
-      compactPieces: Int = 8,       // LSM compaction threshold (anti-join chain bound)
       maxRetries: Int = 0,          // bounded fetch-miss retry (0 = reference behavior)
-      robotsCompileMaxHosts: Int = 64, // compile→join cutover for robots/budget rules
       snapshotKeep: Int = 16,       // IceLite retention: snapshots kept per table (0 = keep all)
       virtualClock: Boolean = false, // cross-wave ts_next(host) politeness carryover (P1)
       stopRequested: () => Boolean = () => false, // graceful stop: finish wave, commit, exit
-      expireEvery: Int = 4,         // snapshot-expiry cadence in waves (the per-wave
-                                    // 8-table metadata listing is commit-tail cost)
       // Concurrent intake (reference: Init returns while the crawl runs,
       // crawler.go:63-67): while true, an empty frontier WAITS for the
       // seed inbox instead of ending the crawl — seeds POSTed mid-crawl
       // are drained into the next wave by the loop itself.
       intakeActive: () => Boolean = () => false,
-      onWaveEnd: Int => Unit = _ => ()) // after wave w commits (tests/instrumentation)
+      onWaveEnd: Int => Unit = _ => ()) { // after wave w commits (tests/instrumentation)
+    // fixed seen-state shape: members, not fields, so no caller sets them
+    val bloomFpp: Double = 0.01
+    val seenBuckets: Int = 32   // hash buckets for the seen LSM + filter bank
+    val compactPieces: Int = 8  // LSM compaction threshold (anti-join chain bound)
+  }
+
+  /** Snapshot-expiry and frontier-compaction cadence in waves: the
+    * per-wave 10-table metadata listing is commit-tail cost. */
+  private val ExpireEvery = 4
 
   // Observation names must be unique per SparkSession lifetime; a process-
   // wide counter is collision-proof across runs sharing a session.
@@ -122,7 +125,7 @@ object CrawlJob {
       .select(col("host"), col("__m").getField("next_ts").as("next_ts"))
 
   /** The live frontier: delta-appended rows minus consumed-markers. The
-    * marker table holds at most `expireEvery` waves of fetched hashes
+    * marker table holds at most [[ExpireEvery]] waves of fetched hashes
     * (compaction folds them into a full rewrite on that cadence), so the
     * anti-join is O(frontier + recent waves) — per-wave frontier IO is
     * O(wave-consumed + wave-admitted), never the O(frontier) rewrite
@@ -140,7 +143,7 @@ object CrawlJob {
   def run(spark: SparkSession, docsDf: DataFrame, rules: Seq[RobotsRule],
       cfg: Config, stateRoot: String): Seq[WaveMetrics] =
     runWithPolicy(spark, docsDf,
-      Robots.policy(rules, spark, cfg.robotsCompileMaxHosts), cfg, stateRoot)
+      Robots.policy(rules, spark), cfg, stateRoot)
 
   /** Large-rule-table entry point: the rules stay distributed; the driver
     * only ever sees the per-host packed broadcast (or a small collected
@@ -148,7 +151,7 @@ object CrawlJob {
   def runWithRulesDf(spark: SparkSession, docsDf: DataFrame, rulesDf: DataFrame,
       cfg: Config, stateRoot: String): Seq[WaveMetrics] =
     runWithPolicy(spark, docsDf,
-      Robots.policyFromDf(rulesDf, cfg.robotsCompileMaxHosts), cfg, stateRoot)
+      Robots.policyFromDf(rulesDf), cfg, stateRoot)
 
   def runWithPolicy(spark: SparkSession, docsDf: DataFrame,
       policy: Robots.RobotsPolicy, cfg: Config, stateRoot: String): Seq[WaveMetrics] = {
@@ -230,7 +233,7 @@ object CrawlJob {
       // Never written on the exception path — a bank must only ever exist
       // for a committed, marker-consistent state. A final expiry sweep
       // leaves the state at rest within the keep horizon even when the
-      // in-loop cadence (expireEvery) last ran waves ago.
+      // in-loop cadence (ExpireEvery) last ran waves ago.
       persistFilterBank(spark, t, seen, cfg)
       Seq(t.frontier, t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed,
         t.clock, t.inbox, t.consumed).foreach(_.expire(cfg.snapshotKeep))
@@ -386,32 +389,34 @@ object CrawlJob {
         // addWave(Async) before the next boundary.
         seen.freshAndConfirmed(winners)
     }).persist()
-    // one job populates the cache and takes both the admitted count and
-    // the distinct-host sketch the host high-water mark advances by
-    val stats = admitted.agg(count(lit(1)), approx_count_distinct(col("host"))).head
-    val n = stats.getLong(0)
-    if (n > 0 && crashed.isEmpty) {
-      t.seen.append(
-        admitted.select(col("url_hash"), col("url"), lit(0).as("wave")),
-        Map("intake_drain_v" -> target.toLong))
-      // the in-memory prefilter/pieces must cover the admitted seeds too
-      // (a replayed drain skips this: the post-crash bootstrap already
-      // read them from the durable seen table)
-      seen.addWave(admitted.select(col("url_hash")), n)
-    }
-    if (n > 0) {
-      // keep the host high-water mark covering intake hosts too (frozen
-      // once past the join cutover); it starts at 0 on a fresh root, and
-      // roots written before the counter existed keep -1
-      val prevHwm = prev.getOrElse("host_hwm", if (prev.contains("next_wave")) -1L else 0L)
-      val hwm =
-        if (prevHwm < 0 || prevHwm > Robots.MaxBroadcastHosts) prevHwm
-        else prevHwm + stats.getLong(1)
-      t.frontier.append(admitted, prev ++ marker +
-        ("frontier_size" -> (prev.getOrElse("frontier_size", 0L) + n)) +
-        ("host_hwm" -> hwm))
-    } else t.frontier.amendCounters(marker)
-    admitted.unpersist()
+    // freed on every exit, a failed drain included
+    try {
+      // one job populates the cache and takes both the admitted count and
+      // the distinct-host sketch the host high-water mark advances by
+      val stats = admitted.agg(count(lit(1)), approx_count_distinct(col("host"))).head
+      val n = stats.getLong(0)
+      if (n > 0 && crashed.isEmpty) {
+        t.seen.append(
+          admitted.select(col("url_hash"), col("url"), lit(0).as("wave")),
+          Map("intake_drain_v" -> target.toLong))
+        // the in-memory prefilter/pieces must cover the admitted seeds too
+        // (a replayed drain skips this: the post-crash bootstrap already
+        // read them from the durable seen table)
+        seen.addWave(admitted.select(col("url_hash")), n)
+      }
+      if (n > 0) {
+        // keep the host high-water mark covering intake hosts too (frozen
+        // once past the join cutover); it starts at 0 on a fresh root, and
+        // roots written before the counter existed keep -1
+        val prevHwm = prev.getOrElse("host_hwm", if (prev.contains("next_wave")) -1L else 0L)
+        val hwm =
+          if (prevHwm < 0 || prevHwm > Robots.MaxBroadcastHosts) prevHwm
+          else prevHwm + stats.getLong(1)
+        t.frontier.append(admitted, prev ++ marker +
+          ("frontier_size" -> (prev.getOrElse("frontier_size", 0L) + n)) +
+          ("host_hwm" -> hwm))
+      } else t.frontier.amendCounters(marker)
+    } finally admitted.unpersist()
   }
 
   // Bank image layout version: bump whenever the bucket function or the
@@ -469,344 +474,350 @@ object CrawlJob {
       tLast = now
     }
 
-    // --- politeness: contended-host split + two-phase salted top-k
-    //     (SURVEY §2.4 P1/P4; see graft.operators.Politeness). With the
-    //     virtual clock on, the per-host budget carries ts_next across
-    //     waves (a hot host's overhang from wave w SHRINKS its wave-w+1
-    //     budget — the pacing a constant per-wave budget cannot express).
-    //     All per-host state joins (clock, contended set) ride the
-    //     broadcast→shuffle cutover keyed by the host high-water mark.
-    //     clockLatest is an O(hosts) distributed groupBy-max over the
-    //     clock log; ONE persisted aggregate per wave feeds both the
-    //     budgeter here and the delta advance below (it was computed
-    //     twice per wave — VERDICT r5 what's-wrong #2). Both consumers
-    //     read the same pre-append table state, so sharing is exact.
-    val clockCur: DataFrame =
-      if (cfg.virtualClock) clockLatest(spark, t).persist() else null
-    val (fetchRaw, deferRaw) =
-      if (!cfg.virtualClock)
-        Politeness.select(frontier, policy, cfg.hostBudget, cfg.saltBuckets, hostHwm,
-          frontierHint = frontierSize)
-      else Politeness.selectWith(frontier,
-        Politeness.clockedBudgeter(policy, clockCur, wave,
-          cfg.hostBudget, hostHwm),
-        cfg.saltBuckets, hostHwm, frontierHint = frontierSize)
+    // Every frame this wave persists goes through `hold`, and one finally
+    // frees them all, on success and failure alike.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df; df.persist() }
+    var ok = false
+    val result = try {
+      // --- politeness: contended-host split + two-phase salted top-k
+      //     (SURVEY §2.4 P1/P4; see graft.operators.Politeness). With the
+      //     virtual clock on, the per-host budget carries ts_next across
+      //     waves (a hot host's overhang from wave w SHRINKS its wave-w+1
+      //     budget — the pacing a constant per-wave budget cannot express).
+      //     All per-host state joins (clock, contended set) ride the
+      //     broadcast→shuffle cutover keyed by the host high-water mark.
+      //     clockLatest is an O(hosts) distributed groupBy-max over the
+      //     clock log; ONE persisted aggregate per wave feeds both the
+      //     budgeter here and the delta advance below (it was computed
+      //     twice per wave — VERDICT r5 what's-wrong #2). Both consumers
+      //     read the same pre-append table state, so sharing is exact.
+      val clockCur: DataFrame =
+        if (cfg.virtualClock) hold(clockLatest(spark, t)) else null
+      val (fetchRaw, deferRaw) =
+        if (!cfg.virtualClock)
+          Politeness.select(frontier, policy, cfg.hostBudget, cfg.saltBuckets, hostHwm,
+            frontierHint = frontierSize)
+        else Politeness.selectWith(frontier,
+          Politeness.clockedBudgeter(policy, clockCur, wave,
+            cfg.hostBudget, hostHwm),
+          cfg.saltBuckets, hostHwm, frontierHint = frontierSize)
 
-    // Delta-frontier mode: deferred rows stay in place in the durable
-    // frontier (consumed-markers suppress fetched rows), so the deferred
-    // side is only ever materialized on compaction waves. Retry mode
-    // (maxRetries > 0) re-admits already-consumed hashes — markers can't
-    // express that, so it keeps the full-rewrite commit.
-    val deltaMode = cfg.maxRetries <= 0
-    val compactCadence = cfg.expireEvery <= 1 || (wave + 1) % cfg.expireEvery == 0
-    val needDeferred = !deltaMode || compactCadence
-    val deferred0 = if (needDeferred) deferRaw.persist() else null
+      // Delta-frontier mode: deferred rows stay in place in the durable
+      // frontier (consumed-markers suppress fetched rows), so the deferred
+      // side is only ever materialized on compaction waves. Retry mode
+      // (maxRetries > 0) re-admits already-consumed hashes — markers can't
+      // express that, so it keeps the full-rewrite commit.
+      val deltaMode = cfg.maxRetries <= 0
+      val compactCadence = (wave + 1) % ExpireEvery == 0
+      val needDeferred = !deltaMode || compactCadence
+      val deferred0 = if (needDeferred) hold(deferRaw) else null
 
-    // --- visit-order ids: order-isomorphic, no global window ------------
-    val waveBase = (wave.toLong + 1L) << 50
-    val fetchSet = Ranker.orderIsomorphicId(
-        fetchRaw, priorityKeys, "ord", waveBase, p)
-      .persist()
-    // One synchronous pass populates the cache that every concurrent
-    // consumer (visits, consumed and clock sinks, the fetch join) then
-    // only re-reads — no recompute races; the count IS the visits total.
-    // It also gives the cached relation its true (wave-sized) size stat,
-    // which the fetch join's broadcast decision below reads.
-    val nFetch = fetchSet.count()
-    mark("fetch_materialize")
+      // --- visit-order ids: order-isomorphic, no global window ------------
+      val waveBase = (wave.toLong + 1L) << 50
+      val fetchSet = hold(Ranker.orderIsomorphicId(
+        fetchRaw, priorityKeys, "ord", waveBase, p))
+      // One synchronous pass populates the cache that every concurrent
+      // consumer (visits, consumed and clock sinks, the fetch join) then
+      // only re-reads — no recompute races; the count IS the visits total.
+      // It also gives the cached relation its true (wave-sized) size stat,
+      // which the fetch join's broadcast decision below reads.
+      val nFetch = fetchSet.count()
+      mark("fetch_materialize")
 
-    implicit val ec: ExecutionContext = ExecutionContext.global
+      implicit val ec: ExecutionContext = ExecutionContext.global
 
-    // Concurrent sinks: visits, consumed markers and the clock delta read
-    // only the cached fetch set, and the doc sink only the fetch join, so
-    // each runs as its own Spark job overlapping the link expansion + seen
-    // append on the main thread (the wave pays max, not sum). Every sink
-    // is wave-tagged and awaited — on the failure path too — before the
-    // wave's frontier commit marker, so the resume trim rolls back
-    // whichever subset landed if that marker never does.
+      // Concurrent sinks: visits, consumed markers and the clock delta read
+      // only the cached fetch set, and the doc sink only the fetch join, so
+      // each runs as its own Spark job overlapping the link expansion + seen
+      // append on the main thread (the wave pays max, not sum). Every sink
+      // is wave-tagged and awaited — on the failure path too — before the
+      // wave's frontier commit marker, so the resume trim rolls back
+      // whichever subset landed if that marker never does.
 
-    // visits: every scheduled fetch consumes a rank, misses included.
-    val visitsF: Future[Unit] = Future {
-      t.visits.append(
-        fetchSet.select(col("ord"), lit(wave).as("wave"), col("url"), col("depth")),
-        Map("wave" -> wave.toLong))
-    }
-
-    // --- fetch = equi-join against the synthetic web (S2) ---------------
-    // Only hits are joined; misses (needed by the retry path alone) are
-    // the fetch set minus the hits. Cached by the first of its two
-    // consumers (doc sink, link expansion).
-    val hits = fetchHits(docsDf, fetchSet).persist()
-
-    // --- extraction sink: the doc rows don't feed the frontier update ---
-    val obsDocs = Observation(obsName(s"docs$wave"))
-    val docsF: Future[Unit] = Future {
-      t.docs.append(
-        DocExtract.extract(hits, "url", "spans").observe(obsDocs, count(lit(1)).as("n")),
-        Map("wave" -> wave.toLong))
-    }
-    val nDeferred = frontierSize - nFetch
-
-    // delta-mode consumed markers: the fetched hashes, written straight
-    // from the p-partition fetch set (no reader depends on their layout)
-    val consumedF: Future[Unit] =
-      if (deltaMode && !compactCadence && nFetch > 0) Future {
-        t.consumed.append(fetchSet.select(col("url_hash")), Map("wave" -> wave.toLong))
-      } else Future.successful(())
-
-    // --- virtual-clock advance (DELTA): only hosts fetched this wave get
-    // a new (host, next_ts, w) row — last writer wins on read. The prior
-    // next_ts arrives through the same size-cutover join as the budgeter
-    // (shuffle-hash past the host cutover — never an O(clock) broadcast),
-    // and the append is O(wave hosts) instead of a full-table rewrite.
-    val clockF: Future[Unit] =
-      if (cfg.virtualClock) Future {
-        val counts = fetchSet.groupBy(col("host")).agg(count(lit(1)).as("__k"))
-        val delta = policy.withDelay(
-            Politeness.hostStateJoin(counts, clockCur, hostHwm), "__vd")
-          .select(col("host"),
-            (greatest(coalesce(col("next_ts"), lit(0L)),
-              lit(wave.toLong * cfg.hostBudget)) + col("__k") * col("__vd"))
-              .as("next_ts"),
-            lit(wave).as("w"))
-        t.clock.append(delta.coalesce(p), Map("wave" -> wave.toLong))
-      } else Future.successful(())
-
-    // Main-path work between the fork and the join: guarded so a failure
-    // NEVER orphans the sink jobs — the futures are awaited on both paths
-    // before control leaves this wave.
-    val (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nextFrontier, nextSize,
-        nextHwm, toFree) = try {
-      // --- link expansion → candidates (A-span posexplode, O5/O6/O7) ----
-      val aSpans = DocExtract.sortedSpans(col("spans"))
-      val links = hits
-        .select(col("url").as("base"), col("ord").as("parent_ord"), col("depth"),
-          posexplode(filter(aSpans, s => s.getField("kind") === lit("a")))
-            .as(Seq("link_index", "span")))
-        .select(col("base"), col("parent_ord"), col("depth"), col("link_index"),
-          col("span").getField("text").as("href"))
-      var cands = links
-        .withColumn("cand", resolve_url(col("base"), col("href")))
-        .filter(col("cand").isNotNull && !is_media_url(col("cand")))
-        .withColumn("chost", url_host(col("cand")))
-      if (cfg.onDomain)
-        cands = cands.filter(col("chost").isin(seedHosts.toSeq: _*))
-
-      // --- within-wave first-wins + cross-wave dedup (D2/D3) ------------
-      // grp_n (candidates folded into each winner) makes the group-agg
-      // carry the dedup accounting — the candidate total is summed from
-      // the CACHE after the seen write populates it (deterministic:
-      // exactly-once regardless of cache races or task retries).
-      val winners = cands
-        .groupBy(col("cand"))
-        .agg(min(struct(col("parent_ord"), col("link_index"), col("depth"))).as("w"),
-          count(lit(1)).as("grp_n"))
-        .select(col("cand"),
-          col("w").getField("parent_ord").as("parent_ord"),
-          col("w").getField("link_index").as("link_index"),
-          (col("w").getField("depth") + 1).as("depth"),
-          xxhash64(col("cand")).as("url_hash"),
-          col("grp_n"))
-        .persist()
-      mark("winners_plan")
-      // materialize the expansion chain (links → candidates → winners)
-      // NOW, populating the winners cache, and take the deterministic
-      // candidate total + winner count in the same job. This splits the
-      // old monolithic seen_write span into expand (the chain compute)
-      // vs seen_write (dedup probe + robots + parquet append) — VERDICT
-      // r5 next-round #7 — and replaces the separate post-write grp_n
-      // aggregate, so the wave runs the same number of jobs as before.
-      val aggRow = winners.agg(sum(col("grp_n")), count(lit(1))).head
-      val nCand = Option(aggRow.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val nWinners = aggRow.getLong(1)
-      mark("expand")
-
-      // dedup: candidates exchange ONCE into the seen bucket partitioning,
-      // then the layered prefilter probes POST-exchange (task p faults in
-      // only bucket p's image from the file bank — O(seen/B) resident per
-      // executor, O(wave) broadcast bytes for the delta layers) and
-      // filter-negatives skip the exact anti-join chain entirely
-      // (SeenState.freshAndConfirmed; probe is native codegen, no UDF
-      // boxing in the hot path). The winner count rides along so a large
-      // wave materializes the candidate exchange exactly once.
-      val newCands = seen.freshAndConfirmed(winners, nWinners)
-      // --- robots decision through the size-adaptive policy (O8) --------
-      val path = coalesce(nullif(parse_url(col("cand"), lit("PATH")), lit("")), lit("/"))
-      val newSeen = policy.withAllowed(
-          newCands.withColumn("host", url_host(col("cand"))),
-          path, "__allowed")
-        .persist()
-
-      // seen append carries the dedup/robots counters and the admitted
-      // rows' distinct-host sketch via observe (the write job computes
-      // each row exactly once — safe for metrics). Coalesced to the wave
-      // width: the rows sit in the B seen buckets, but no reader of the
-      // table depends on its file layout.
-      val obsSeen = Observation(obsName(s"seen$wave"))
-      t.seen.append(
-        newSeen
-          .observe(obsSeen, count(lit(1)).as("n"),
-            sum(when(col("__allowed"), 1L).otherwise(0L)).as("adm"),
-            approx_count_distinct(when(col("__allowed"), col("host"))).as("hosts"))
-          .select(col("url_hash"), col("cand").as("url"), lit(wave + 1).as("wave"))
-          .coalesce(p),
-        Map("wave" -> wave.toLong))
-      val nNewSeen = obsSeen.get("n").asInstanceOf[Long]
-      val nAdmitted = Option(obsSeen.get("adm")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      // host high-water delta: distinct hosts among the admitted rows,
-      // frozen once the cutover has flipped
-      val nextHwm =
-        if (hostHwm < 0 || hostHwm > Robots.MaxBroadcastHosts || nAdmitted == 0) hostHwm
-        else hostHwm + obsSeen.get("hosts").asInstanceOf[Long]
-      mark("seen_write")
-      val admitted = newSeen.filter(col("__allowed"))
-
-      // fold the wave's hashes into the seen state (pieces + filters) on
-      // a future: the fold is only needed by the NEXT wave, so it
-      // overlaps this wave's commit tail instead of serializing behind
-      // it. The observed count lets both filter images (merge-sized +
-      // wave-sized delta) build in a single distributed pass.
-      if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")), nNewSeen)
-      mark("seen_fold")
-
-      // --- bounded fetch-miss retry: misses re-enter the frontier directly
-      //     and stay in the seen set, so link rediscovery still dedups ----
-      val (retryRows, nRetried, missCache) =
-        if (cfg.maxRetries <= 0) (null: DataFrame, 0L, null: DataFrame)
-        else {
-          val misses = fetchSet.join(hits.select(col("url")), Seq("url"), "left_anti")
-            .select(frontierCols: _*)
-          val prevFails = t.failed
-            .readOr(spark.range(0).select(col("id").as("url_hash"), col("id").as("fails")))
-            .groupBy(col("url_hash")).agg(max(col("fails")).as("__pf"))
-          val missF = misses.join(prevFails, Seq("url_hash"), "left_outer")
-            .withColumn("fails", coalesce(col("__pf"), lit(0L)) + lit(1L))
-            .drop("__pf")
-            .persist()
-          val obsFail = Observation(obsName(s"failed$wave"))
-          t.failed.append(
-            missF.observe(obsFail,
-                sum(when(col("fails") <= cfg.maxRetries, 1L).otherwise(0L)).as("r"))
-              .select(col("url_hash"), col("fails")),
-            Map("wave" -> wave.toLong))
-          val nR = Option(obsFail.get("r")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          val rr = missF.filter(col("fails") <= cfg.maxRetries).select(frontierCols: _*)
-          (rr, nR, missF)
-        }
-
-      val admittedRows = admitted.select(col("cand").as("url"), col("url_hash"),
-        col("host"), col("depth"), col("parent_ord"), col("link_index"))
-      var nf = if (deferred0 == null) null else deferred0.unionByName(admittedRows)
-      if (retryRows != null) nf = nf.unionByName(retryRows)
-      val nextSize = nDeferred + nAdmitted + nRetried
-      (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nf, nextSize, nextHwm,
-        Seq(winners, newSeen) ++ Option(missCache).toSeq)
-    } catch {
-      case e: Throwable =>
-        Seq(docsF, visitsF, consumedF, clockF)
-          .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-        throw e
-    }
-    val nDedup = nCand - nNewSeen
-    val nRobots = nNewSeen - nAdmitted
-
-    // --- commit state (atomic IceLite snapshots; parquet round-trip
-    //     truncates lineage across waves). Every concurrent sink must be
-    //     durable before the frontier commit marker lands. ---------------
-    Await.ready(docsF, Duration.Inf)
-    mark("docs_await")
-    Await.ready(visitsF, Duration.Inf)
-    mark("visits_await")
-    Await.ready(clockF, Duration.Inf)
-    if (cfg.virtualClock) mark("clock_await")
-    // consumed markers durable before any branch below touches the
-    // consumed table (replaceEmpty on drain/compaction) or lands the
-    // frontier commit marker
-    Await.ready(consumedF, Duration.Inf)
-    // a sink failure surfaces only once every sink has landed, so none is
-    // left running when control leaves the wave
-    Seq(docsF, visitsF, clockF, consumedF).foreach(Await.result(_, Duration.Inf))
-    val nHits = obsDocs.get("n").asInstanceOf[Long]
-    val nMiss = nFetch - nHits
-    val metrics = WaveMetrics(wave, nHits, nDeferred, nRobots, nDedup, nMiss, nRetried)
-    // the metrics row joins the concurrent-sink pattern (VERDICT r5
-    // next-round #8): its payload is fully known here, the table is
-    // written by nobody else, and the wave tag lets the resume trim roll
-    // it back if the frontier marker below never lands — overlapping it
-    // with the frontier commit turns its per-wave single-file write from
-    // serial commit-tail latency into max(commit, metrics).
-    val metricsF: Future[Unit] = Future {
-      t.metrics.append(Seq(metrics).toDF().coalesce(1), Map("wave" -> wave.toLong))
-    }
-    // the intake high-water mark must ride EVERY frontier commit — a
-    // commit that dropped it would make the next boundary re-drain (and,
-    // via the time-travel replay path, re-admit) already-drained seeds
-    val drainMark = t.frontier.currentSnapshot
-      .flatMap(_.counters.get("intake_drained")).map("intake_drained" -> _)
-    val counters = countersOf(metrics) +
-      ("next_wave" -> (wave + 1L)) + ("frontier_size" -> nextSize) +
-      ("host_hwm" -> nextHwm) ++ drainMark
-    val nextP = math.max(1, math.min(cfg.numPartitions,
-      ((nextSize * 8) / 50000L).toInt + 1))
-    val consumedLive = t.consumed.currentSnapshot.exists(_.dataDirs.nonEmpty)
-    try {
-      if (nextSize == 0L) {
-        t.frontier.replaceEmpty(counters)
-        // stale markers reference hashes absent from the (empty) frontier —
-        // clearing AFTER the marker is safe on any crash interleaving
-        if (consumedLive) t.consumed.replaceEmpty(Map("wave" -> wave.toLong))
-      } else if (!deltaMode || compactCadence) {
-        // compaction wave: fold markers + deferred rows back into one full
-        // rewrite (amortized O(frontier / expireEvery) per wave)
-        t.frontier.replace(
-          nextFrontier.repartition(nextP, col("url_hash")), counters)
-        if (consumedLive) t.consumed.replaceEmpty(Map("wave" -> wave.toLong))
-      } else {
-        // delta commit: O(wave) IO — consumed markers for this wave's
-        // fetches landed first (appended concurrently above, awaited; the
-        // resume trim rolls them back if the marker below never lands),
-        // then the admitted rows carry the counters as the wave's commit
-        // marker. Deferred rows are not rewritten.
-        if (nAdmitted > 0)
-          t.frontier.append(admittedRows.coalesce(nextP), counters)
-        else t.frontier.amendCounters(counters)
-      }
-    } catch {
-      case e: Throwable => // never orphan the concurrent metrics job
-        scala.util.Try(Await.ready(metricsF, Duration.Inf))
-        throw e
-    }
-    Await.result(metricsF, Duration.Inf)
-    mark("frontier_commit")
-    // retention: a long crawl must not accumulate every wave's frontier
-    // forever — expire old snapshots (metadata + unreferenced data dirs)
-    // past the keep horizon. The resume trim only ever walks the newest
-    // versions, so exact kill/resume is unaffected (gated by tests).
-    // Cadence `expireEvery`: each expire is O(snapshots) metadata listings
-    // over 10 tables — pure commit-tail latency on small waves (VERDICT r3
-    // #7); at most expireEvery-1 extra snapshots ride between sweeps. The
-    // clock log compacts back to one row per host on the same cadence.
-    if (compactCadence) {
-      if (cfg.virtualClock && t.clock.currentSnapshot.exists(_.dataDirs.size > 1))
-        t.clock.replace(
-          clockLatest(spark, t).withColumn("w", lit(wave)).repartition(p, col("host")),
+      // visits: every scheduled fetch consumes a rank, misses included.
+      val visitsF: Future[Unit] = Future {
+        t.visits.append(
+          fetchSet.select(col("ord"), lit(wave).as("wave"), col("url"), col("depth")),
           Map("wave" -> wave.toLong))
-      Seq(t.frontier, t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed,
-        t.clock, t.inbox, t.consumed).foreach(_.expire(cfg.snapshotKeep))
-      mark("expire")
-    }
+      }
 
-    // the async fold reads this wave's cached newSeen — land it before
-    // anything it depends on is unpersisted
-    seen.awaitFold()
-    (Seq(fetchSet, hits) ++ Option(deferred0).toSeq ++ Option(clockCur).toSeq
-      ++ toFree).foreach(_.unpersist())
+      // --- fetch = equi-join against the synthetic web (S2) ---------------
+      // Only hits are joined; misses (needed by the retry path alone) are
+      // the fetch set minus the hits. Cached by the first of its two
+      // consumers (doc sink, link expansion).
+      val hits = hold(fetchHits(docsDf, fetchSet))
+
+      // --- extraction sink: the doc rows don't feed the frontier update ---
+      val obsDocs = Observation(obsName(s"docs$wave"))
+      val docsF: Future[Unit] = Future {
+        t.docs.append(
+          DocExtract.extract(hits, "url", "spans").observe(obsDocs, count(lit(1)).as("n")),
+          Map("wave" -> wave.toLong))
+      }
+      val nDeferred = frontierSize - nFetch
+
+      // delta-mode consumed markers: the fetched hashes, written straight
+      // from the p-partition fetch set (no reader depends on their layout)
+      val consumedF: Future[Unit] =
+        if (deltaMode && !compactCadence && nFetch > 0) Future {
+          t.consumed.append(fetchSet.select(col("url_hash")), Map("wave" -> wave.toLong))
+        } else Future.successful(())
+
+      // --- virtual-clock advance (DELTA): only hosts fetched this wave get
+      // a new (host, next_ts, w) row — last writer wins on read. The prior
+      // next_ts arrives through the same size-cutover join as the budgeter
+      // (shuffle-hash past the host cutover — never an O(clock) broadcast),
+      // and the append is O(wave hosts) instead of a full-table rewrite.
+      val clockF: Future[Unit] =
+        if (cfg.virtualClock) Future {
+          val counts = fetchSet.groupBy(col("host")).agg(count(lit(1)).as("__k"))
+          val delta = policy.withDelay(
+              Politeness.hostStateJoin(counts, clockCur, hostHwm), "__vd")
+            .select(col("host"),
+              (greatest(coalesce(col("next_ts"), lit(0L)),
+                lit(wave.toLong * cfg.hostBudget)) + col("__k") * col("__vd"))
+                .as("next_ts"),
+              lit(wave).as("w"))
+          t.clock.append(delta.coalesce(p), Map("wave" -> wave.toLong))
+        } else Future.successful(())
+
+      // Main-path work between the fork and the join: guarded so a failure
+      // NEVER orphans the sink jobs — the futures are awaited on both paths
+      // before control leaves this wave.
+      val (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nextFrontier, nextSize,
+          nextHwm) = try {
+        // --- link expansion → candidates (A-span posexplode, O5/O6/O7) ----
+        val aSpans = DocExtract.sortedSpans(col("spans"))
+        val links = hits
+          .select(col("url").as("base"), col("ord").as("parent_ord"), col("depth"),
+            posexplode(filter(aSpans, s => s.getField("kind") === lit("a")))
+              .as(Seq("link_index", "span")))
+          .select(col("base"), col("parent_ord"), col("depth"), col("link_index"),
+            col("span").getField("text").as("href"))
+        var cands = links
+          .withColumn("cand", resolve_url(col("base"), col("href")))
+          .filter(col("cand").isNotNull && !is_media_url(col("cand")))
+          .withColumn("chost", url_host(col("cand")))
+        if (cfg.onDomain)
+          cands = cands.filter(col("chost").isin(seedHosts.toSeq: _*))
+
+        // --- within-wave first-wins + cross-wave dedup (D2/D3) ------------
+        // grp_n (candidates folded into each winner) makes the group-agg
+        // carry the dedup accounting — the candidate total is summed from
+        // the CACHE after the seen write populates it (deterministic:
+        // exactly-once regardless of cache races or task retries).
+        val winners = hold(cands
+          .groupBy(col("cand"))
+          .agg(min(struct(col("parent_ord"), col("link_index"), col("depth"))).as("w"),
+            count(lit(1)).as("grp_n"))
+          .select(col("cand"),
+            col("w").getField("parent_ord").as("parent_ord"),
+            col("w").getField("link_index").as("link_index"),
+            (col("w").getField("depth") + 1).as("depth"),
+            xxhash64(col("cand")).as("url_hash"),
+            col("grp_n")))
+        mark("winners_plan")
+        // materialize the expansion chain (links → candidates → winners)
+        // NOW, populating the winners cache, and take the deterministic
+        // candidate total + winner count in the same job. This splits the
+        // old monolithic seen_write span into expand (the chain compute)
+        // vs seen_write (dedup probe + robots + parquet append) — VERDICT
+        // r5 next-round #7 — and replaces the separate post-write grp_n
+        // aggregate, so the wave runs the same number of jobs as before.
+        val aggRow = winners.agg(sum(col("grp_n")), count(lit(1))).head
+        val nCand = Option(aggRow.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
+        val nWinners = aggRow.getLong(1)
+        mark("expand")
+
+        // dedup: candidates exchange ONCE into the seen bucket partitioning,
+        // then the layered prefilter probes POST-exchange (task p faults in
+        // only bucket p's image from the file bank — O(seen/B) resident per
+        // executor, O(wave) broadcast bytes for the delta layers) and
+        // filter-negatives skip the exact anti-join chain entirely
+        // (SeenState.freshAndConfirmed; probe is native codegen, no UDF
+        // boxing in the hot path). The winner count rides along so a large
+        // wave materializes the candidate exchange exactly once.
+        val newCands = seen.freshAndConfirmed(winners, nWinners)
+        // --- robots decision through the size-adaptive policy (O8) --------
+        val path = coalesce(nullif(parse_url(col("cand"), lit("PATH")), lit("")), lit("/"))
+        val newSeen = hold(policy.withAllowed(
+          newCands.withColumn("host", url_host(col("cand"))),
+          path, "__allowed"))
+
+        // seen append carries the dedup/robots counters and the admitted
+        // rows' distinct-host sketch via observe (the write job computes
+        // each row exactly once — safe for metrics). Coalesced to the wave
+        // width: the rows sit in the B seen buckets, but no reader of the
+        // table depends on its file layout.
+        val obsSeen = Observation(obsName(s"seen$wave"))
+        t.seen.append(
+          newSeen
+            .observe(obsSeen, count(lit(1)).as("n"),
+              sum(when(col("__allowed"), 1L).otherwise(0L)).as("adm"),
+              approx_count_distinct(when(col("__allowed"), col("host"))).as("hosts"))
+            .select(col("url_hash"), col("cand").as("url"), lit(wave + 1).as("wave"))
+            .coalesce(p),
+          Map("wave" -> wave.toLong))
+        val nNewSeen = obsSeen.get("n").asInstanceOf[Long]
+        val nAdmitted = Option(obsSeen.get("adm")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        // host high-water delta: distinct hosts among the admitted rows,
+        // frozen once the cutover has flipped
+        val nextHwm =
+          if (hostHwm < 0 || hostHwm > Robots.MaxBroadcastHosts || nAdmitted == 0) hostHwm
+          else hostHwm + obsSeen.get("hosts").asInstanceOf[Long]
+        mark("seen_write")
+        val admitted = newSeen.filter(col("__allowed"))
+
+        // fold the wave's hashes into the seen state (pieces + filters) on
+        // a future: the fold is only needed by the NEXT wave, so it
+        // overlaps this wave's commit tail instead of serializing behind
+        // it. The observed count lets both filter images (merge-sized +
+        // wave-sized delta) build in a single distributed pass.
+        if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")), nNewSeen)
+        mark("seen_fold")
+
+        // --- bounded fetch-miss retry: misses re-enter the frontier directly
+        //     and stay in the seen set, so link rediscovery still dedups ----
+        val (retryRows, nRetried) =
+          if (cfg.maxRetries <= 0) (null: DataFrame, 0L)
+          else {
+            val misses = fetchSet.join(hits.select(col("url")), Seq("url"), "left_anti")
+              .select(frontierCols: _*)
+            val prevFails = t.failed
+              .readOr(spark.range(0).select(col("id").as("url_hash"), col("id").as("fails")))
+              .groupBy(col("url_hash")).agg(max(col("fails")).as("__pf"))
+            val missF = hold(misses.join(prevFails, Seq("url_hash"), "left_outer")
+              .withColumn("fails", coalesce(col("__pf"), lit(0L)) + lit(1L))
+              .drop("__pf"))
+            val obsFail = Observation(obsName(s"failed$wave"))
+            t.failed.append(
+              missF.observe(obsFail,
+                  sum(when(col("fails") <= cfg.maxRetries, 1L).otherwise(0L)).as("r"))
+                .select(col("url_hash"), col("fails")),
+              Map("wave" -> wave.toLong))
+            val nR = Option(obsFail.get("r")).map(_.asInstanceOf[Long]).getOrElse(0L)
+            val rr = missF.filter(col("fails") <= cfg.maxRetries).select(frontierCols: _*)
+            (rr, nR)
+          }
+
+        val admittedRows = admitted.select(col("cand").as("url"), col("url_hash"),
+          col("host"), col("depth"), col("parent_ord"), col("link_index"))
+        var nf = if (deferred0 == null) null else deferred0.unionByName(admittedRows)
+        if (retryRows != null) nf = nf.unionByName(retryRows)
+        val nextSize = nDeferred + nAdmitted + nRetried
+        (nCand, nNewSeen, nAdmitted, nRetried, admittedRows, nf, nextSize, nextHwm)
+      } catch {
+        case e: Throwable =>
+          Seq(docsF, visitsF, consumedF, clockF)
+            .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
+          throw e
+      }
+      val nDedup = nCand - nNewSeen
+      val nRobots = nNewSeen - nAdmitted
+
+      // --- commit state (atomic IceLite snapshots; parquet round-trip
+      //     truncates lineage across waves). Every concurrent sink must be
+      //     durable before the frontier commit marker lands. ---------------
+      Await.ready(docsF, Duration.Inf)
+      mark("docs_await")
+      Await.ready(visitsF, Duration.Inf)
+      mark("visits_await")
+      Await.ready(clockF, Duration.Inf)
+      if (cfg.virtualClock) mark("clock_await")
+      // consumed markers durable before any branch below touches the
+      // consumed table (replaceEmpty on drain/compaction) or lands the
+      // frontier commit marker
+      Await.ready(consumedF, Duration.Inf)
+      // a sink failure surfaces only once every sink has landed, so none is
+      // left running when control leaves the wave
+      Seq(docsF, visitsF, clockF, consumedF).foreach(Await.result(_, Duration.Inf))
+      val nHits = obsDocs.get("n").asInstanceOf[Long]
+      val nMiss = nFetch - nHits
+      val metrics = WaveMetrics(wave, nHits, nDeferred, nRobots, nDedup, nMiss, nRetried)
+      // the metrics row joins the concurrent-sink pattern (VERDICT r5
+      // next-round #8): its payload is fully known here, the table is
+      // written by nobody else, and the wave tag lets the resume trim roll
+      // it back if the frontier marker below never lands — overlapping it
+      // with the frontier commit turns its per-wave single-file write from
+      // serial commit-tail latency into max(commit, metrics).
+      val metricsF: Future[Unit] = Future {
+        t.metrics.append(Seq(metrics).toDF().coalesce(1), Map("wave" -> wave.toLong))
+      }
+      // the intake high-water mark must ride EVERY frontier commit — a
+      // commit that dropped it would make the next boundary re-drain (and,
+      // via the time-travel replay path, re-admit) already-drained seeds
+      val drainMark = t.frontier.currentSnapshot
+        .flatMap(_.counters.get("intake_drained")).map("intake_drained" -> _)
+      val counters = countersOf(metrics) +
+        ("next_wave" -> (wave + 1L)) + ("frontier_size" -> nextSize) +
+        ("host_hwm" -> nextHwm) ++ drainMark
+      val nextP = math.max(1, math.min(cfg.numPartitions,
+        ((nextSize * 8) / 50000L).toInt + 1))
+      val consumedLive = t.consumed.currentSnapshot.exists(_.dataDirs.nonEmpty)
+      try {
+        if (nextSize == 0L) {
+          t.frontier.replaceEmpty(counters)
+          // stale markers reference hashes absent from the (empty) frontier —
+          // clearing AFTER the marker is safe on any crash interleaving
+          if (consumedLive) t.consumed.replaceEmpty(Map("wave" -> wave.toLong))
+        } else if (!deltaMode || compactCadence) {
+          // compaction wave: fold markers + deferred rows back into one full
+          // rewrite (amortized O(frontier / ExpireEvery) per wave)
+          t.frontier.replace(
+            nextFrontier.repartition(nextP, col("url_hash")), counters)
+          if (consumedLive) t.consumed.replaceEmpty(Map("wave" -> wave.toLong))
+        } else {
+          // delta commit: O(wave) IO — consumed markers for this wave's
+          // fetches landed first (appended concurrently above, awaited; the
+          // resume trim rolls them back if the marker below never lands),
+          // then the admitted rows carry the counters as the wave's commit
+          // marker. Deferred rows are not rewritten.
+          if (nAdmitted > 0)
+            t.frontier.append(admittedRows.coalesce(nextP), counters)
+          else t.frontier.amendCounters(counters)
+        }
+      } catch {
+        case e: Throwable => // never orphan the concurrent metrics job
+          scala.util.Try(Await.ready(metricsF, Duration.Inf))
+          throw e
+      }
+      Await.result(metricsF, Duration.Inf)
+      mark("frontier_commit")
+      // retention: a long crawl must not accumulate every wave's frontier
+      // forever — expire old snapshots (metadata + unreferenced data dirs)
+      // past the keep horizon. The resume trim only ever walks the newest
+      // versions, so exact kill/resume is unaffected (gated by tests).
+      // Cadence `ExpireEvery`: each expire is O(snapshots) metadata
+      // listings over 10 tables — pure commit-tail latency on small waves
+      // (VERDICT r3 #7); at most ExpireEvery-1 extra snapshots ride between
+      // sweeps. The clock log compacts back to one row per host on the same
+      // cadence.
+      if (compactCadence) {
+        if (cfg.virtualClock && t.clock.currentSnapshot.exists(_.dataDirs.size > 1))
+          t.clock.replace(
+            clockLatest(spark, t).withColumn("w", lit(wave)).repartition(p, col("host")),
+            Map("wave" -> wave.toLong))
+        Seq(t.frontier, t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed,
+          t.clock, t.inbox, t.consumed).foreach(_.expire(cfg.snapshotKeep))
+        mark("expire")
+      }
+      ok = true
+      metrics
+    } finally {
+      // the async fold reads this wave's cached newSeen — land it before
+      // anything is unpersisted. Neither a fold failure nor a failed
+      // unpersist may replace the wave's own exception.
+      val fold = scala.util.Try(seen.awaitFold())
+      held.foreach(df => scala.util.Try(df.unpersist()))
+      if (ok) fold.get
+    }
     // wave boundary: every plan that referenced this wave's probe layers
     // is committed + unpersisted, and the next wave's frontier lineage
     // starts from the IceLite parquet — broadcasts retired by a rebase
     // this wave are now unreachable and safe to destroy.
     seen.releaseRetired()
-    metrics
+    result
   }
 
   /** The fetch: the corpus inner-joined with the wave's fetch set. The

@@ -53,15 +53,16 @@ import java.nio.file.Files
   *    lossy layer is never pushed (a filter false negative would skip the
   *    exact anti-join and re-admit a seen URL).
   *  - **The merged bank lives in shared storage, not on the driver and
-  *    not in a broadcast.** Every `rebaseEvery` waves (and on saturation
-  *    resize) the bank is rebuilt FROM THE PIECES by one distributed pass
-  *    whose tasks write per-bucket image files under `bankRoot` — the
-  *    driver never holds or ships an O(seen-capacity) image (round 2
-  *    collected ~12 GB/wave to the driver at the 10^10 design point; this
-  *    collects the per-bucket (count, dropped) stats only). Amortized
-  *    bank-rebuild cost is O(seen/rebaseEvery) rows per wave.
+  *    not in a broadcast.** Every [[SeenState.RebaseEvery]] waves (and on
+  *    saturation resize) the bank is rebuilt FROM THE PIECES by one
+  *    distributed pass whose tasks write per-bucket image files under
+  *    `bankRoot` — the driver never holds or ships an O(seen-capacity)
+  *    image (round 2 collected ~12 GB/wave to the driver at the 10^10
+  *    design point; this collects the per-bucket (count, dropped) stats
+  *    only). Amortized bank-rebuild cost is O(seen/RebaseEvery) rows per
+  *    wave.
   *  - **Probe face = FileBank base + per-wave delta broadcasts.** The
-  *    base broadcast carries only the bank dir paths
+  *    base broadcast carries only the bank dir path
   *    ([[LongMembership.FileBank]]); executors fault in per-bucket images
   *    lazily. Because the bank bucket function IS the candidate
   *    exchange's partition id ([[LongMembership.bucketOf]]), probing
@@ -69,7 +70,7 @@ import java.nio.file.Files
   *    bucket per task — executor residency is O(seen/B) per task slot,
   *    not O(seen). Wave deltas ride as small in-memory broadcast layers
   *    (O(wave) bytes) OR-ed in codegen (MightContainLong), folded into
-  *    the bank at the next rebase; probe depth ≤ rebaseEvery+1.
+  *    the bank at the next rebase; probe depth ≤ RebaseEvery+1.
   *  - **Nothing broadcast-reachable is ever mutated.** Delta layers are
   *    immutable once broadcast; bank files are immutable once written
   *    (rebase/resize write NEW versioned dirs); retired broadcasts and
@@ -84,7 +85,6 @@ final class SeenState(
     expectedItems: Long,
     fpp: Double,
     compactAt: Int,
-    rebaseEvery: Int = 8,
     bankRoot: String = null) {
 
   import spark.implicits._
@@ -105,10 +105,9 @@ final class SeenState(
   private var deltaFaces: Vector[LongMembership] = Vector.empty
   private var retiredBcs: Vector[Broadcast[LongMembership]] = Vector.empty
   private var retiredDirs: Vector[String] = Vector.empty
-  private var bankDirs: Vector[String] = Vector.empty
+  private var bankDir: String = null
   private var bankVersion: Int = 0
   private var lastCollected: Long = 0L
-  private var totalCollected: Long = 0L
 
   // Unique instance root: a crashed run's stale bank files must never be
   // read as current state (the durable bank rides the IceLite filters
@@ -227,24 +226,25 @@ final class SeenState(
       .collect()
   }
 
-  /** Retire the current probe layers and install `dirs` as the new base.
+  /** Retire the current probe layers and install `dir` as the new base.
     * The new bank covers every piece, hence every delta: the deltas fold
     * into it. */
-  private def swapBase(dirs: Vector[String]): Unit = {
+  private def swapBase(dir: String): Unit = {
     if (baseBc != null) { retiredBcs :+= baseBc; nRebases += 1 }
     retiredBcs ++= deltaBcs
     deltaBcs = Vector.empty
     deltaFaces = Vector.empty
-    retiredDirs ++= bankDirs.diff(dirs)
-    bankDirs = dirs
+    retiredDirs ++= Option(bankDir)
+    bankDir = dir
     baseBc = spark.sparkContext.broadcast(
-      LongMembership.FileBank(dirs, B, useCuckoo): LongMembership)
+      LongMembership.FileBank(dir, B, useCuckoo): LongMembership)
   }
 
   /** Rebuild the bank from the pieces at the current capacity (growing it
     * if a bucket outgrew the cap or a cuckoo build saturated) and swap it
-    * in. Amortized: called every `rebaseEvery` waves (delta fold), on
-    * saturation resize, and at bootstrap. Returns per-bucket counts. */
+    * in. Amortized: called every [[SeenState.RebaseEvery]] waves (delta
+    * fold), on saturation resize, and at bootstrap. Returns per-bucket
+    * counts. */
   private def materializeBank(): Array[(Int, Long)] = {
     var out: Array[(Int, Long)] = null
     var done = false
@@ -259,7 +259,7 @@ final class SeenState(
         SeenState.deleteDir(dir) // scrapped attempt — never broadcast
         perBucketCap = math.max(perBucketCap * 2, maxN * 2)
       } else {
-        swapBase(Vector(dir))
+        swapBase(dir)
         out = stats.map(t => (t._1, t._2))
         done = true
       }
@@ -329,11 +329,10 @@ final class SeenState(
     pieceSizes :+= fs.map(_._3).sum
     fs.foreach { case (b, _, n, _) => bucketCounts(b) += n }
     lastCollected = fs.map(_._2.length.toLong).sum
-    totalCollected += lastCollected
     if (bucketCounts.max > perBucketCap) resize()
     else if (fs.nonEmpty) {
       pushDelta(fs.map { case (b, img, _, _) => (b, img) })
-      if (deltaBcs.size >= rebaseEvery) rebase()
+      if (deltaBcs.size >= SeenState.RebaseEvery) rebase()
     }
     if (pieces.size >= compactAt) compact()
   }
@@ -347,7 +346,7 @@ final class SeenState(
   }
 
   /** Fold the delta layers into a fresh bank rebuilt from the pieces —
-    * one distributed pass, amortized O(seen/rebaseEvery) rows per wave;
+    * one distributed pass, amortized O(seen/RebaseEvery) rows per wave;
     * nothing O(seen) touches the driver. */
   private def rebase(): Unit = {
     materializeBank()
@@ -357,7 +356,7 @@ final class SeenState(
   /** The probe face (driver-side view, for tests/tools): bank ∨ deltas. */
   def prefilter: LongMembership =
     LongMembership.Layered(
-      (LongMembership.FileBank(bankDirs, B, useCuckoo): LongMembership) +: deltaFaces)
+      (LongMembership.FileBank(bankDir, B, useCuckoo): LongMembership) +: deltaFaces)
 
   /** The layered probe column for this wave: base ∨ deltas, all inside
     * whole-stage codegen. Capture per wave (the layer set changes).
@@ -372,7 +371,7 @@ final class SeenState(
 
   private def materializeBankIfAny(): Unit =
     if (pieces.nonEmpty) { materializeBank(); () }
-    else swapBase(Vector(nextBankDir())) // empty bank
+    else swapBase(nextBankDir()) // empty bank
 
   /** Destroy broadcasts and bank dirs retired by rebase/resize.
     * Call ONLY at a wave boundary, after every plan that could
@@ -450,30 +449,6 @@ final class SeenState(
     candCk = null
   }
 
-  /** Driver-side snapshot of the merged filter bank (pending deltas are
-    * folded first): (bucket, image, exactCount) per bucket + capacity.
-    * O(seen-capacity) driver bytes — a test/tool face; the production
-    * persistence path is the distributed [[bankDf]]. */
-  def exportImages(): (Array[(Int, Array[Byte], Long)], Long) = {
-    awaitFold()
-    if (deltaBcs.nonEmpty) rebase()
-    if (baseBc == null) materializeBankIfAny()
-    val imgs = (0 until B).map { b =>
-      val bytes = Option(LongMembership.loadBucketBytes(bankDirs, b))
-        .getOrElse(emptyImage())
-      (b, bytes, bucketCounts(b))
-    }.toArray
-    (imgs, perBucketCap)
-  }
-
-  private def emptyImage(): Array[Byte] =
-    if (useCuckoo) CuckooFilterImpl.create(perBucketCap).serialize()
-    else {
-      val o = new java.io.ByteArrayOutputStream()
-      BloomFilter.create(perBucketCap, fpp).writeTo(o)
-      o.toByteArray
-    }
-
   /** Distributed (bucket, image, n) frame over the merged bank — B rows
     * built by tasks reading the bank files from shared storage; no
     * O(seen) bytes ever land on the driver (the durable-bank write path:
@@ -482,7 +457,7 @@ final class SeenState(
     awaitFold()
     if (deltaBcs.nonEmpty) rebase()
     if (baseBc == null) materializeBankIfAny()
-    val dirs = bankDirs
+    val dir = bankDir
     val counts = bucketCounts.clone()
     val cuckoo = useCuckoo
     val cap = perBucketCap
@@ -490,7 +465,7 @@ final class SeenState(
     spark.createDataset(0 until B)
       .repartition(math.min(B, spark.sparkContext.defaultParallelism))
       .map { b =>
-        val bytes = Option(LongMembership.loadBucketBytes(dirs, b)).getOrElse {
+        val bytes = Option(LongMembership.loadBucketBytes(dir, b)).getOrElse {
           if (cuckoo) CuckooFilterImpl.create(cap).serialize()
           else {
             val o = new java.io.ByteArrayOutputStream()
@@ -501,24 +476,6 @@ final class SeenState(
         (b, bytes, counts(b))
       }
       .toDF("bucket", "image", "n")
-  }
-
-  /** Resume fast path from driver-held images (test face; the production
-    * resume is [[bootstrapFromBank]]): replaces both the per-bucket count
-    * job AND the distributed filter build of [[bootstrap]]. */
-  def bootstrapFromImages(seenDf: DataFrame,
-      images: Array[(Int, Array[Byte], Long)], cap: Long): Unit = {
-    awaitFold()
-    require(images.length == B, s"bank has ${images.length} buckets, want $B")
-    pieces.foreach(GraftShim.freeCheckpoint)
-    pieces = Vector(prep(seenDf))
-    java.util.Arrays.fill(bucketCounts, 0L)
-    images.foreach { case (b, _, n) => bucketCounts(b) = n }
-    pieceSizes = Vector(bucketCounts.sum)
-    perBucketCap = cap
-    val dir = nextBankDir()
-    images.foreach { case (b, bytes, _) => SeenState.writeBucketFile(dir, b, bytes) }
-    swapBase(Vector(dir))
   }
 
   /** Resume fast path, fully distributed: `bank` is a (bucket, image, n)
@@ -545,7 +502,7 @@ final class SeenState(
     stats.foreach { case (b, n) => bucketCounts(b) = n }
     pieceSizes = Vector(bucketCounts.sum)
     perBucketCap = cap
-    swapBase(Vector(dir))
+    swapBase(dir)
     dropEmptyBase()
   }
 
@@ -606,7 +563,7 @@ final class SeenState(
     deltaBcs = Vector.empty
     deltaFaces = Vector.empty
     SeenState.deleteDir(instRoot)
-    bankDirs = Vector.empty
+    bankDir = null
   }
 
   // introspection (tests + trace)
@@ -626,9 +583,8 @@ final class SeenState(
   /** Filter-image bytes the LAST addWave collected to the driver — the
     * O(wave) contract's witness (a merge-sized build would be ∝ capacity). */
   def lastWaveCollectedFilterBytes: Long = lastCollected
-  def totalCollectedFilterBytes: Long = totalCollected
-  def currentBankDirs: Seq[String] = bankDirs
-  /** Test face: the BASE probe broadcast's payload (must stay O(B) paths —
+  def currentBankDir: String = bankDir
+  /** Test face: the BASE probe broadcast's payload (must stay one path —
     * a full filter-bank broadcast here is the 12 GB/executor regression). */
   private[graft] def baseFace: LongMembership = baseBc.value
 }
@@ -640,15 +596,17 @@ object SeenState {
     * plain two-branch plan is cheaper (the two branch map stages run
     * CONCURRENTLY when cores are idle, so at small waves the duplicated
     * exchange costs near-zero wall while the cache serializes
-    * populate→read). Env-overridable (`GRAFT_SEEN_CAND_CACHE_AT`) like
-    * the other scale-dependent knobs; the default sits at the measured
-    * crossover band (A/B at 16M rows: no-cache ~5–7% faster; at 64M the
-    * cache is the difference between one and two full 2.3 GB shuffle
-    * materializations — OPTIMIZATION_r06.md Change 1). On a real cluster
-    * the duplicated exchange also doubles NETWORK bytes, so production
-    * deployments may set it lower. */
-  val CheckpointCandsAt: Long =
-    sys.env.get("GRAFT_SEEN_CAND_CACHE_AT").map(_.toLong).getOrElse(1L << 25)
+    * populate→read). It sits at the measured crossover band (A/B at 16M
+    * rows: no-cache ~5–7% faster; at 64M the cache is the difference
+    * between one and two full 2.3 GB shuffle materializations —
+    * OPTIMIZATION_r06.md Change 1). On a real cluster the duplicated
+    * exchange also doubles NETWORK bytes, so the crossover may sit lower
+    * there. */
+  val CheckpointCandsAt: Long = 1L << 25
+
+  /** Wave deltas held as broadcast layers before a rebase folds them into
+    * a freshly built bank: bounds probe depth at RebaseEvery+1 layers. */
+  val RebaseEvery: Int = 8
 
   /** Atomic per-bucket image write (temp + rename; task-retry-safe:
     * last-writer-wins on identical content). Runs INSIDE executor tasks

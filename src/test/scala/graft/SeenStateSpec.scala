@@ -58,18 +58,26 @@ class SeenStateSpec extends AnyFunSuite {
 
   test("layered probe (base + wave deltas) has no false negatives across rebase and resize") {
     val s = new SeenState(spark, buckets = 4, useCuckoo = false,
-      expectedItems = 4096L, fpp = 0.01, compactAt = 100, rebaseEvery = 2)
+      expectedItems = 4096L, fpp = 0.01, compactAt = 100)
     def allPositive(from: Long, until: Long): Boolean =
       hashes(from, until).select(s.probe(col("url_hash")).as("m"))
         .collect().forall(_.getBoolean(0))
     s.bootstrap(hashes(0, 1000))          // base broadcast #1
     assert(s.deltaLayers == 0)
-    s.addWave(hashes(1000, 2000), knownCount = 1000L) // delta 1, one-pass path
-    assert(s.deltaLayers == 1 && allPositive(0, 2000))
-    s.addWave(hashes(2000, 3000))         // delta 2 (two-pass path) -> rebase folds them
-    assert(s.deltaLayers == 0 && s.rebases >= 1, "expected a rebase at rebaseEvery")
-    assert(allPositive(0, 3000))
-    s.addWave(hashes(3000, 9000))         // > cap -> resize, which rebases
+    // RebaseEvery waves of 250 rows: ~750 rows per bucket at the end, under
+    // the 1024 cap, so the deltas fold by rebase, never by resize
+    val n = SeenState.RebaseEvery
+    def wave(i: Int): (Long, Long) = (1000L + 250L * i, 1250L + 250L * i)
+    s.addWave(hashes(wave(0)._1, wave(0)._2), knownCount = 250L) // delta 1, one-pass path
+    assert(s.deltaLayers == 1 && allPositive(0, wave(0)._2))
+    (1 until n - 1).foreach(i => s.addWave(hashes(wave(i)._1, wave(i)._2))) // two-pass path
+    assert(s.deltaLayers == n - 1 && s.rebases == 0 && allPositive(0, wave(n - 2)._2))
+    s.addWave(hashes(wave(n - 1)._1, wave(n - 1)._2)) // delta n -> rebase folds them
+    assert(s.deltaLayers == 0 && s.rebases >= 1, "expected a rebase at RebaseEvery")
+    assert(s.resizes == 0)
+    val end = wave(n - 1)._2
+    assert(allPositive(0, end))
+    s.addWave(hashes(end, 9000))          // > cap -> resize, which rebases
     assert(s.resizes >= 1 && s.deltaLayers == 0)
     assert(allPositive(0, 9000), "false negative after resize rebase")
     // the layered probe must still prefilter: unseen hashes mostly negative
@@ -85,12 +93,15 @@ class SeenStateSpec extends AnyFunSuite {
         expectedItems = 4096L, fpp = 0.01, compactAt = 100)
       a.bootstrap(hashes(0, 2000))
       a.addWave(hashes(2000, 6000), knownCount = 4000L) // forces a resize past cap0
-      val (images, cap) = a.exportImages()
-      assert(cap == a.capacityPerBucket && images.map(_._3).sum == 6000L)
+      val bank = a.bankDf()
+      val cap = a.capacityPerBucket
+      val counts = bank.select("bucket", "n").collect().map(r => (r.getInt(0), r.getLong(1)))
+      assert(counts.map(_._1).sorted.toSeq == (0 until 4) && counts.map(_._2).sum == 6000L)
 
       val b = new SeenState(spark, buckets = 4, useCuckoo = cuckoo,
         expectedItems = 4096L, fpp = 0.01, compactAt = 100)
-      b.bootstrapFromImages(hashes(0, 6000), images, cap)
+      // the bank frame reads a's bank files: import before a closes
+      b.bootstrapFromBank(hashes(0, 6000), bank, cap)
       assert(b.capacityPerBucket == cap && b.totalSeen == 6000L)
       // no false negative: every seen hash probes positive on the resumed bank
       val pos = hashes(0, 6000).select(b.probe(col("url_hash")).as("m")).collect()
@@ -201,7 +212,7 @@ class SeenStateSpec extends AnyFunSuite {
       expectedItems = 800000L, fpp = 0.01, compactAt = 100)
     s.bootstrap(hashes(0, 200000)) // bank capacity 200k/bucket
     val bankBytes = (0 until 4).map { b =>
-      graft.functions.LongMembership.loadBucketBytes(s.currentBankDirs, b).length.toLong
+      graft.functions.LongMembership.loadBucketBytes(s.currentBankDir, b).length.toLong
     }.sum
     s.addWave(hashes(200000, 201000), knownCount = 1000L) // 1k-row wave
     val waveBytes = s.lastWaveCollectedFilterBytes
@@ -225,7 +236,7 @@ class SeenStateSpec extends AnyFunSuite {
     s.bootstrap(hashes(0, 100000))
     s.baseFace match {
       case fb: graft.functions.LongMembership.FileBank =>
-        assert(fb.buckets == 4 && fb.dirs.nonEmpty)
+        assert(fb.buckets == 4 && fb.dir == s.currentBankDir && fb.dir != null)
       case other => fail(s"base broadcast is ${other.getClass.getSimpleName}, want FileBank")
     }
     s.close()

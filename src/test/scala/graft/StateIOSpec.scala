@@ -90,9 +90,9 @@ class StateIOSpec extends AnyFunSuite {
           col("id").cast("string").as("url"))
       seen.bootstrap(hashes(0, 2000))
       seen.addWave(hashes(2000, 2500).select("url_hash"), 500L)
-      // the bank dirs really live under the URI root (Hadoop-written)
-      assert(seen.currentBankDirs.forall(_.startsWith("file://")),
-        s"bank dirs not on the URI root: ${seen.currentBankDirs}")
+      // the bank dir really lives under the URI root (Hadoop-written)
+      assert(seen.currentBankDir.startsWith("file://"),
+        s"bank dir not on the URI root: ${seen.currentBankDir}")
       val cands = spark.range(1000, 3000)
         .select(xxhash64(col("id")).as("url_hash"))
       val fresh = seen.freshAndConfirmed(cands).select("url_hash").collect().map(_.getLong(0)).toSet
