@@ -43,7 +43,7 @@ object PlanDump {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4, useCuckoo = false,
+      val seen = new plans.SeenState(spark, buckets = 4,
         expectedItems = 10000L, fpp = 0.01, compactAt = 8)
       try {
         seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
@@ -70,7 +70,7 @@ object PlanDump {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4, useCuckoo = false,
+      val seen = new plans.SeenState(spark, buckets = 4,
         expectedItems = 10000L, fpp = 0.01, compactAt = 8)
       try {
         seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),

@@ -5,9 +5,9 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import java.util.concurrent.atomic.AtomicReferenceArray
 
-/** Approximate-membership probe over 64-bit keys — the common face of the
-  * bloom and cuckoo URL-seen prefilters, broadcast to executors and probed
-  * from generated code (UrlExpressions.MightContainLong).
+/** Approximate-membership probe over 64-bit keys — the face of the bloom
+  * URL-seen prefilter layers, broadcast to executors and probed from
+  * generated code (UrlExpressions.MightContainLong).
   */
 trait LongMembership extends Serializable {
   def mightContain(h: Long): Boolean
@@ -36,9 +36,6 @@ object LongMembership {
   final case class Bloom(bf: BloomFilter) extends LongMembership {
     def mightContain(h: Long): Boolean = bf.mightContainLong(h)
   }
-  final case class Cuckoo(cf: CuckooFilterImpl) extends LongMembership {
-    def mightContain(h: Long): Boolean = cf.mightContain(h)
-  }
 
   /** Hash-bucketed filter bank resident in memory (per-wave DELTA layers:
     * wave-sized, shipped whole as one small broadcast). The probe routes
@@ -54,9 +51,8 @@ object LongMembership {
     def mightContain(h: Long): Boolean = layers.exists(_.mightContain(h))
   }
 
-  def deserializeFilter(bytes: Array[Byte], cuckoo: Boolean): LongMembership =
-    if (cuckoo) Cuckoo(CuckooFilterImpl.deserialize(bytes))
-    else Bloom(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
+  def deserializeFilter(bytes: Array[Byte]): LongMembership =
+    Bloom(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
 
   /** Raw bytes of bucket `b`'s image in bank dir `dir`; null when the
     * bucket never received a row. */
@@ -80,8 +76,7 @@ object LongMembership {
     * [[graft.sources.IceLite]]: a URI root (hdfs://, s3a://, file://)
     * runs on the Hadoop FileSystem API, so a multi-executor deployment
     * probes images any node wrote. */
-  final case class FileBank(dir: String, buckets: Int, cuckoo: Boolean)
-    extends LongMembership {
+  final case class FileBank(dir: String, buckets: Int) extends LongMembership {
 
     @transient private lazy val cache = new AtomicReferenceArray[LongMembership](buckets)
 
@@ -97,7 +92,7 @@ object LongMembership {
 
     private def load(b: Int): LongMembership = {
       val bytes = loadBucketBytes(dir, b)
-      if (bytes == null) Empty else deserializeFilter(bytes, cuckoo)
+      if (bytes == null) Empty else deserializeFilter(bytes)
     }
   }
 }

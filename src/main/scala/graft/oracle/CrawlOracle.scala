@@ -115,8 +115,7 @@ object CrawlOracle {
     }
 
     var pending = frontier.result()
-    // bounded fetch-miss retry policy (exercises the cuckoo unsee path in
-    // the engine): a missed URL with remaining retry budget re-enters the
+    // bounded fetch-miss retry policy: a missed URL with remaining retry budget re-enters the
     // next wave at its ORIGINAL priority; its visit consumes a fresh rank
     // each attempt; the seen set is unchanged (the URL stays seen, so link
     // rediscovery still counts dedup_hits).

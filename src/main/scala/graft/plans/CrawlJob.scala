@@ -45,7 +45,6 @@ object CrawlJob {
       numPartitions: Int = 32,
       saltBuckets: Int = 8,
       bloomItems: Long = 4L * 1000 * 1000, // expected total seen URLs (filters resize past it)
-      seenFilter: String = "bloom", // "bloom" | "cuckoo" (north_rule names both)
       maxRetries: Int = 0,          // bounded fetch-miss retry (0 = reference behavior)
       snapshotKeep: Int = 16,       // IceLite retention: snapshots kept per table (0 = keep all)
       virtualClock: Boolean = false, // cross-wave ts_next(host) politeness carryover (P1)
@@ -185,8 +184,8 @@ object CrawlJob {
     // crashed run's leftovers are swept here — the durable bank is the
     // version-gated filters table, never these dirs.
     SeenState.deleteDir(s"$stateRoot/seen_bank")
-    val seen = new SeenState(spark, cfg.seenBuckets, cfg.seenFilter == "cuckoo",
-      cfg.bloomItems, cfg.bloomFpp, cfg.compactPieces,
+    val seen = new SeenState(spark, cfg.seenBuckets, expectedItems = cfg.bloomItems,
+      fpp = cfg.bloomFpp, compactAt = cfg.compactPieces,
       bankRoot = s"$stateRoot/seen_bank")
     bootstrapSeen(spark, t, seen, cfg)
 
@@ -247,7 +246,7 @@ object CrawlJob {
     * only trims versions above the commit marker, so tag equality proves
     * the bank covers exactly the committed seen rows — the completeness
     * the prefilter's no-false-negative contract depends on. Anything
-    * off (stale tag, bucket/kind/shape mismatch, unreadable images)
+    * off (stale tag, bucket/format/shape mismatch, unreadable images)
     * falls back to the full rebuild. */
   private def bootstrapSeen(spark: SparkSession, t: Tables, seen: SeenState,
       cfg: Config): Unit = {
@@ -257,7 +256,6 @@ object CrawlJob {
       s.counters.get("seen_version").contains(t.seen.currentVersion.toLong) &&
       s.counters.get("bank_format").contains(BankFormat) &&
       s.counters.get("buckets").contains(cfg.seenBuckets.toLong) &&
-      s.counters.get("cuckoo").contains(if (cfg.seenFilter == "cuckoo") 1L else 0L) &&
       s.counters.contains("cap") &&
       scala.util.Try {
         // distributed: tasks copy the persisted images into the bank dir;
@@ -422,8 +420,9 @@ object CrawlJob {
   // Bank image layout version: bump whenever the bucket function or the
   // filter serialization changes — a stale-format bank must fall back to
   // the full rebuild, never probe wrong. (v2: murmur3 partition-aligned
-  // buckets + cuckoo dropped-count header.)
-  private val BankFormat = 2L
+  // buckets; v3: bloom is the only image kind — a v2 bank may hold images
+  // of the other filter kind v2 supported, which must never parse as bloom.)
+  private val BankFormat = 3L
 
   /** Durable (bucket, image, count) bank + capacity, tagged with the seen
     * table version it covers. Fully distributed: tasks read the bank
@@ -438,7 +437,6 @@ object CrawlJob {
         "seen_version" -> t.seen.currentVersion.toLong,
         "bank_format" -> BankFormat,
         "buckets" -> cfg.seenBuckets.toLong,
-        "cuckoo" -> (if (cfg.seenFilter == "cuckoo") 1L else 0L),
         "cap" -> seen.capacityPerBucket))
   }
 

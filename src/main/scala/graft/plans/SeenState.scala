@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{CuckooFilterImpl, LongMembership, UrlExpressions}
+import graft.functions.{LongMembership, UrlExpressions}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShim
@@ -13,8 +13,7 @@ import java.nio.file.Files
 
 /** Distributed URL-seen state for the 10^10 path (SURVEY §7.5(4)): an
   * LSM-style stack of hash-bucketed, executor-resident pieces (the EXACT
-  * side of dedup) + one approximate prefilter per bucket (bloom or
-  * cuckoo).
+  * side of dedup) + one bloom prefilter per bucket.
   *
   * Scale design — per-wave maintenance is O(wave) in BOTH directions and
   * the probe face is O(seen/B) per executor:
@@ -46,21 +45,17 @@ import java.nio.file.Files
   *    filter images sized to the WAVE's own counts (one distributed
   *    aggregate over the wave's cached rows) — the bytes collected to the
   *    driver per wave are ∝ wave size ([[lastWaveCollectedFilterBytes]]
-  *    proves it), never ∝ seen capacity. Cuckoo deltas are verified
-  *    LOSSLESS: the aggregate carries a dropped-insert count in the image
-  *    header, and any saturation (a skewed bucket overflowing its sizing
-  *    guess) rebuilds the delta at the bucket's exact cardinality — a
-  *    lossy layer is never pushed (a filter false negative would skip the
-  *    exact anti-join and re-admit a seen URL).
+  *    proves it), never ∝ seen capacity. A skewed bucket that overflows
+  *    the sizing guess rebuilds the delta at its exact cardinality, so
+  *    every layer holds its configured FPP.
   *  - **The merged bank lives in shared storage, not on the driver and
   *    not in a broadcast.** Every [[SeenState.RebaseEvery]] waves (and on
   *    saturation resize) the bank is rebuilt FROM THE PIECES by one
   *    distributed pass whose tasks write per-bucket image files under
   *    `bankRoot` — the driver never holds or ships an O(seen-capacity)
   *    image (round 2 collected ~12 GB/wave to the driver at the 10^10
-  *    design point; this collects the per-bucket (count, dropped) stats
-  *    only). Amortized bank-rebuild cost is O(seen/RebaseEvery) rows per
-  *    wave.
+  *    design point; this collects the per-bucket counts only).
+  *    Amortized bank-rebuild cost is O(seen/RebaseEvery) rows per wave.
   *  - **Probe face = FileBank base + per-wave delta broadcasts.** The
   *    base broadcast carries only the bank dir path
   *    ([[LongMembership.FileBank]]); executors fault in per-bucket images
@@ -77,15 +72,21 @@ import java.nio.file.Files
   *    dirs are destroyed only at the caller's wave boundary
   *    ([[releaseRetired]]) because a cache-evicted partition of a live
   *    wave plan may recompute the probe mid-wave.
+  *
+  * `useCuckoo` is a compatibility parameter: the cuckoo prefilter is
+  * gone, the parameter keeps its name and position for callers that
+  * still pass `false`, and `true` is rejected.
   */
 final class SeenState(
     spark: SparkSession,
     buckets: Int,
-    useCuckoo: Boolean,
+    useCuckoo: Boolean = false,
     expectedItems: Long,
     fpp: Double,
     compactAt: Int,
     bankRoot: String = null) {
+
+  require(!useCuckoo, "the cuckoo seen prefilter was removed; bloom is the only prefilter")
 
   import spark.implicits._
 
@@ -143,12 +144,10 @@ final class SeenState(
   // count, so its buffers stop merging with BloomFilter.create(...)
   // filters once a bucket resizes past 4M (see BloomFilterAgg doc)
   private def aggFor(cap: Long): Column =
-    if (useCuckoo)
-      graft.functions.CuckooFilterAgg.cuckoo_filter_agg(col("url_hash"), cap)
-    else graft.functions.BloomFilterAgg.graft_bloom_agg(col("url_hash"), cap, fpp)
+    graft.functions.BloomFilterAgg.graft_bloom_agg(col("url_hash"), cap, fpp)
 
   private def estFilterBytes(cap: Long): Long =
-    if (useCuckoo) cap * 2 else BloomFilter.optimalNumOfBits(cap, fpp) / 8
+    BloomFilter.optimalNumOfBits(cap, fpp) / 8
 
   /** Partial aggregation holds one filter buffer PER BUCKET PER input
     * partition. Past ~64 MB of per-partition buffer state (the 10^8+
@@ -166,41 +165,23 @@ final class SeenState(
     pre.groupBy(col("__b"))
   }
 
-  /** One distributed pass: per-bucket (image, exact count, dropped
-    * inserts). `dropped` is nonzero only for a saturated cuckoo build —
-    * the caller must treat such an image as LOSSY and rebuild bigger. */
-  private def buildImages(df: DataFrame, cap: Long): Array[(Int, Array[Byte], Long, Long)] =
+  /** One distributed pass: per-bucket (image, exact count). */
+  private def buildImages(df: DataFrame, cap: Long): Array[(Int, Array[Byte], Long)] =
     grouped(df, estFilterBytes(cap))
       .agg(aggFor(cap).as("f"), count(lit(1)).as("n"))
       .collect()
-      .map { r =>
-        val img = r.getAs[Array[Byte]](1)
-        val dropped = if (useCuckoo) CuckooFilterImpl.droppedOf(img) else 0L
-        (r.getInt(0), img, r.getLong(2), dropped)
-      }
+      .map(r => (r.getInt(0), r.getAs[Array[Byte]](1), r.getLong(2)))
 
-  /** Wave-sized delta images, guaranteed lossless (cuckoo) and sized to
-    * the real per-bucket cardinality (a skewed bucket past the initial
-    * guess triggers a rebuild at its exact count — bloom keeps its FPP,
-    * cuckoo keeps the no-false-negative contract). Collected bytes are
-    * ∝ the wave's row count, never ∝ seen capacity. */
-  private def buildDelta(df: DataFrame, capGuess: Long): Array[(Int, Array[Byte], Long, Long)] = {
-    var cap = capGuess
-    var fs = buildImages(df, cap)
-    var attempts = 0
-    while (fs.nonEmpty && attempts < 6 &&
-        (fs.map(_._4).sum > 0L || fs.map(_._3).max > cap)) {
-      cap = math.max(2 * fs.map(_._3).max, cap * 2)
-      fs = buildImages(df, cap)
-      attempts += 1
-    }
-    require(fs.forall(_._4 == 0L),
-      s"cuckoo delta still lossy after $attempts rebuilds (cap=$cap)")
-    fs
+  /** Wave-sized delta images sized to the real per-bucket cardinality: a
+    * skewed bucket past the initial guess triggers a rebuild at its exact
+    * count, so the layer keeps its FPP. Collected bytes are ∝ the wave's
+    * row count, never ∝ seen capacity. */
+  private def buildDelta(df: DataFrame, capGuess: Long): Array[(Int, Array[Byte], Long)] = {
+    val fs = buildImages(df, capGuess)
+    val maxN = if (fs.isEmpty) 0L else fs.map(_._3).max
+    // the counts are exact, so one rebuild at the new cap always fits
+    if (maxN > capGuess) buildImages(df, math.max(2 * maxN, capGuess * 2)) else fs
   }
-
-  private def membershipOf(bytes: Array[Byte]): LongMembership =
-    LongMembership.deserializeFilter(bytes, useCuckoo)
 
   private def nextBankDir(): String = {
     bankVersion += 1
@@ -209,19 +190,17 @@ final class SeenState(
 
   /** One distributed pass over `df` building the bank at `cap`: tasks
     * write per-bucket image files under `dir` (shared storage) and only
-    * per-bucket (count, dropped) stats return to the driver — the images
-    * themselves never leave the executors. */
-  private def writeBankFiles(df: DataFrame, cap: Long, dir: String): Array[(Int, Long, Long)] = {
+    * per-bucket counts return to the driver — the images themselves
+    * never leave the executors. */
+  private def writeBankFiles(df: DataFrame, cap: Long, dir: String): Array[(Int, Long)] = {
     StateIO.forPath(dir).mkdirs(dir)
-    val cuckoo = useCuckoo
     grouped(df, estFilterBytes(cap))
       .agg(aggFor(cap).as("f"), count(lit(1)).as("n"))
       .select(col("__b"), col("f"), col("n"))
       .as[(Int, Array[Byte], Long)]
       .map { case (b, img, n) =>
-        val dropped = if (cuckoo) CuckooFilterImpl.droppedOf(img) else 0L
-        if (dropped == 0L) SeenState.writeBucketFile(dir, b, img)
-        (b, n, dropped)
+        SeenState.writeBucketFile(dir, b, img)
+        (b, n)
       }
       .collect()
   }
@@ -237,34 +216,28 @@ final class SeenState(
     retiredDirs ++= Option(bankDir)
     bankDir = dir
     baseBc = spark.sparkContext.broadcast(
-      LongMembership.FileBank(dir, B, useCuckoo): LongMembership)
+      LongMembership.FileBank(dir, B): LongMembership)
   }
 
   /** Rebuild the bank from the pieces at the current capacity (growing it
-    * if a bucket outgrew the cap or a cuckoo build saturated) and swap it
-    * in. Amortized: called every [[SeenState.RebaseEvery]] waves (delta
-    * fold), on saturation resize, and at bootstrap. Returns per-bucket
-    * counts. */
+    * once if a bucket outgrew the cap, so every image holds its FPP) and
+    * swap it in. Amortized: called every [[SeenState.RebaseEvery]] waves
+    * (delta fold), on saturation resize, and at bootstrap. Returns
+    * per-bucket counts. */
   private def materializeBank(): Array[(Int, Long)] = {
-    var out: Array[(Int, Long)] = null
-    var done = false
-    while (!done) {
-      val dir = nextBankDir()
-      val stats =
-        if (pieces.isEmpty) Array.empty[(Int, Long, Long)]
-        else writeBankFiles(allPieces, perBucketCap, dir)
-      val maxN = if (stats.isEmpty) 0L else stats.map(_._2).max
-      val drops = stats.map(_._3).sum
-      if (drops > 0L || maxN > perBucketCap) {
-        SeenState.deleteDir(dir) // scrapped attempt — never broadcast
-        perBucketCap = math.max(perBucketCap * 2, maxN * 2)
-      } else {
-        swapBase(dir)
-        out = stats.map(t => (t._1, t._2))
-        done = true
-      }
+    val dir = nextBankDir()
+    val stats =
+      if (pieces.isEmpty) Array.empty[(Int, Long)]
+      else writeBankFiles(allPieces, perBucketCap, dir)
+    val maxN = if (stats.isEmpty) 0L else stats.map(_._2).max
+    if (maxN > perBucketCap) {
+      SeenState.deleteDir(dir) // scrapped attempt — never broadcast
+      perBucketCap = math.max(perBucketCap * 2, maxN * 2)
+      materializeBank() // the new cap covers maxN: one more pass
+    } else {
+      swapBase(dir)
+      stats
     }
-    out
   }
 
   private def allPieces: DataFrame = pieces.reduce(_ unionByName _)
@@ -327,11 +300,11 @@ final class SeenState(
       if (knownCount >= 0L) math.max(2L * knownCount / B, 1024L) else 1024L
     val fs = buildDelta(piece, capGuess)
     pieceSizes :+= fs.map(_._3).sum
-    fs.foreach { case (b, _, n, _) => bucketCounts(b) += n }
+    fs.foreach { case (b, _, n) => bucketCounts(b) += n }
     lastCollected = fs.map(_._2.length.toLong).sum
     if (bucketCounts.max > perBucketCap) resize()
     else if (fs.nonEmpty) {
-      pushDelta(fs.map { case (b, img, _, _) => (b, img) })
+      pushDelta(fs.map { case (b, img, _) => (b, img) })
       if (deltaBcs.size >= SeenState.RebaseEvery) rebase()
     }
     if (pieces.size >= compactAt) compact()
@@ -339,7 +312,7 @@ final class SeenState(
 
   private def pushDelta(images: Array[(Int, Array[Byte])]): Unit = {
     val layers: Array[LongMembership] = Array.fill(B)(LongMembership.Empty)
-    images.foreach { case (b, bytes) => layers(b) = membershipOf(bytes) }
+    images.foreach { case (b, bytes) => layers(b) = LongMembership.deserializeFilter(bytes) }
     val face: LongMembership = LongMembership.Bucketed(layers)
     deltaFaces :+= face
     deltaBcs :+= spark.sparkContext.broadcast(face)
@@ -356,7 +329,7 @@ final class SeenState(
   /** The probe face (driver-side view, for tests/tools): bank ∨ deltas. */
   def prefilter: LongMembership =
     LongMembership.Layered(
-      (LongMembership.FileBank(bankDir, B, useCuckoo): LongMembership) +: deltaFaces)
+      (LongMembership.FileBank(bankDir, B): LongMembership) +: deltaFaces)
 
   /** The layered probe column for this wave: base ∨ deltas, all inside
     * whole-stage codegen. Capture per wave (the layer set changes).
@@ -424,7 +397,14 @@ final class SeenState(
     * branch to touch a partition computes and caches it. Below the
     * threshold the plain plan wins (a small wave should not pay a cache
     * round-trip). The cache is released at the next call, at
-    * [[releaseRetired]] (wave boundary), and at [[close]]. */
+    * [[releaseRetired]] (wave boundary), and at [[close]].
+    *
+    * One live result per SeenState: on the large path the returned frame
+    * reads that cache, and the next `freshAndConfirmed`, [[releaseRetired]]
+    * or [[close]] frees it. A result read after that is still correct,
+    * but recomputes the candidate exchange instead of sharing it, so a
+    * caller materializes (or persists) one result before asking for the
+    * next. */
   def freshAndConfirmed(cands: DataFrame, candsHint: Long = -1L): DataFrame = {
     awaitFold()
     if (pieces.isEmpty) return cands
@@ -459,19 +439,15 @@ final class SeenState(
     if (baseBc == null) materializeBankIfAny()
     val dir = bankDir
     val counts = bucketCounts.clone()
-    val cuckoo = useCuckoo
     val cap = perBucketCap
     val fppLocal = fpp
     spark.createDataset(0 until B)
       .repartition(math.min(B, spark.sparkContext.defaultParallelism))
       .map { b =>
         val bytes = Option(LongMembership.loadBucketBytes(dir, b)).getOrElse {
-          if (cuckoo) CuckooFilterImpl.create(cap).serialize()
-          else {
-            val o = new java.io.ByteArrayOutputStream()
-            BloomFilter.create(cap, fppLocal).writeTo(o)
-            o.toByteArray
-          }
+          val o = new java.io.ByteArrayOutputStream()
+          BloomFilter.create(cap, fppLocal).writeTo(o)
+          o.toByteArray
         }
         (b, bytes, counts(b))
       }

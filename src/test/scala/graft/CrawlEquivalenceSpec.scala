@@ -107,21 +107,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assertEquivalent(o, root, m)
   }
 
-  test("cuckoo seen-filter: exactness is prefilter-independent") {
-    val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 4, seed = 55L)
-    val corpus = Corpus.generate(cfg)
-    val rules = Corpus.robotsRules(cfg)
-    val seeds = Seq("http://hot.example.com/p/0")
-    val o = CrawlOracle.run(corpus, rules, CrawlOracle.CrawlConfig(seeds))
-    val root = tmpDir("cuckoo")
-    val m = CrawlJob.run(spark, corpusDf(corpus), rules,
-      CrawlJob.Config(seeds, onDomain = false, hostBudget = 4, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
-        seenFilter = "cuckoo"), root)
-    assertEquivalent(o, root, m)
-  }
-
-  test("bounded retry (cuckoo unsee): engine replays oracle incl. retried counter") {
+  test("bounded retry: engine replays oracle incl. retried counter") {
     val cfg = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
     val corpus = Corpus.generate(cfg)
     val rules = Corpus.robotsRules(cfg)
@@ -135,7 +121,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val m = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 2, maxWaves = 64,
         numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
-        seenFilter = "cuckoo", maxRetries = 2), root)
+        maxRetries = 2), root)
     assertEquivalent(o, root, m)
   }
 
@@ -150,7 +136,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("retry-resume")
     def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 2,
       maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
-      seenFilter = "cuckoo", maxRetries = 1)
+      maxRetries = 1)
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
     assertEquivalent(o, root, m1 ++ m2)
@@ -436,5 +422,41 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
         numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
     assertEquivalent(oracleRes, root, m1 ++ m2)
+  }
+
+  test("older-format filter bank is never probed: resume rebuilds, stays exact") {
+    import spark.implicits._
+    val cfg = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
+    val corpus = Corpus.generate(cfg)
+    val rules = Corpus.robotsRules(cfg)
+    val seeds = Seq("http://hot.example.com/p/0", "http://site1.example.org/p/0")
+    val o = CrawlOracle.run(corpus, rules,
+      CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 2))
+    val df = corpusDf(corpus)
+    val root = tmpDir("bankgate")
+    def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 2,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L)
+    val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
+    assert(m1.size == 3)
+    // a format-2 bank from a cuckoo-mode run: every tag but the format
+    // matches, and each image has the cuckoo layout (bucket count, dropped
+    // count, 16-bit fingerprint slots) — bytes that are not a bloom image
+    // (per-bucket counts kept, so the resumed state is non-empty and the
+    // first wave would probe these images if the gate let them through)
+    val t = CrawlJob.tables(root, spark)
+    val clean = t.filters.currentSnapshot.get.counters
+    val counts = t.filters.read().select("bucket", "n").as[(Int, Long)].collect()
+    assert(counts.length == cfgJob(64).seenBuckets && counts.map(_._2).sum > 0L)
+    val cuckooImage = {
+      val buf = java.nio.ByteBuffer.allocate(4 + 8 + 4 * 512 * 2)
+      buf.putInt(512).putLong(0L)
+      buf.array()
+    }
+    t.filters.replace(counts.toSeq.map { case (i, n) => (i, cuckooImage, n) }
+        .toDF("bucket", "image", "n"),
+      Map("seen_version" -> t.seen.currentVersion.toLong, "bank_format" -> 2L,
+        "buckets" -> counts.length.toLong, "cuckoo" -> 1L, "cap" -> clean("cap")))
+    val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
+    assertEquivalent(o, root, m1 ++ m2)
   }
 }

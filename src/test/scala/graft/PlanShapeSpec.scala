@@ -167,7 +167,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val seen = new graft.plans.SeenState(spark, buckets = 4, useCuckoo = false,
+      val seen = new graft.plans.SeenState(spark, buckets = 4,
         expectedItems = 10000L, fpp = 0.01, compactAt = 8)
       seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
         col("id").cast("string").as("url")))

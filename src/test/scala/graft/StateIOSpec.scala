@@ -82,7 +82,7 @@ class StateIOSpec extends AnyFunSuite {
 
   test("SeenState with a file:// bank root: executor-written images probe correctly") {
     val root = fileUri("bank")
-    val seen = new SeenState(spark, buckets = 8, useCuckoo = false,
+    val seen = new SeenState(spark, buckets = 8,
       expectedItems = 10000L, fpp = 0.01, compactAt = 8, bankRoot = s"$root/seen_bank")
     try {
       def hashes(a: Long, b: Long) =
