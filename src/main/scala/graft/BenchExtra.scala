@@ -158,7 +158,7 @@ object BenchExtra {
         val sizes = Seq(16000000L, 160000000L)
         sizes.foreach { n =>
           val seen = new graft.plans.SeenState(spark, buckets = cpus * 2,
-            expectedItems = n, fpp = 0.01, compactAt = 8)
+            fpp = 0.01, compactAt = 8)
           val seenDf = spark.range(0, n, 1, cpus * 2)
             .select(xxhash64(concat(lit("http://h"), pmod(col("id"), lit(1000)),
               lit(".example.org/p/"), col("id"))).as("url_hash"))
@@ -197,7 +197,7 @@ object BenchExtra {
         import org.apache.spark.sql.functions._
         def check(tag: String, cands: org.apache.spark.sql.DataFrame): Unit = {
           val seen = new graft.plans.SeenState(spark, buckets = 8,
-            expectedItems = 100000L, fpp = 0.01, compactAt = 8)
+            fpp = 0.01, compactAt = 8)
           try {
             seen.bootstrap(spark.range(0, 50000)
               .select(xxhash64(col("id")).as("url_hash"), col("id").cast("string").as("url")))

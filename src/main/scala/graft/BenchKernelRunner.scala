@@ -118,9 +118,7 @@ object BenchKernelRunner {
     val frontier = frontierDf(spark, n, parts).persist()
     frontier.count()
     val seenHashes = seenDf(spark, n, parts, seenFactor)
-    val seen = new SeenState(spark, buckets = parts,
-      expectedItems = math.max((n * seenFactor).toLong, 1000L),
-      fpp = 0.01, compactAt = 8)
+    val seen = new SeenState(spark, buckets = parts, fpp = 0.01, compactAt = 8)
     seen.bootstrap(seenHashes)
     val policy =
       if (ruledHosts == 16) graft.operators.Robots.policy(benchRules, spark)

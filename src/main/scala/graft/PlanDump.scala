@@ -43,8 +43,7 @@ object PlanDump {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4,
-        expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+      val seen = new plans.SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 8)
       try {
         seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
           col("id").cast("string").as("url")))
@@ -61,17 +60,16 @@ object PlanDump {
     }
 
     // The production wave-dedup plan (SeenState.freshAndConfirmed): ONE
-    // candidate exchange into the bucket partitioning, THEN the layered
-    // prefilter probe (MightContainLong over the FileBank base + delta
-    // broadcasts) runs post-exchange — task p faults in only bucket p's
-    // image, so executor residency is O(seen/B). Filter-negatives skip
+    // candidate exchange into the bucket partitioning, THEN the pieces'
+    // prefilter probe (MightContainLong over one FileBank broadcast per
+    // piece) runs post-exchange — task p faults in only bucket p's
+    // images, so executor residency is O(seen/B). Filter-negatives skip
     // the exact anti-join chain entirely.
     val probePlan = {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4,
-        expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+      val seen = new plans.SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 8)
       try {
         seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
           col("id").cast("string").as("url")))
@@ -169,11 +167,11 @@ object PlanDump {
           "exchanges==1 and sorts==1 on this exact plan.",
         seenPlan),
       ("wave dedup probe (freshAndConfirmed) — post-exchange O(seen/B) probe",
-        "The layered prefilter (FileBank base + wave-delta broadcasts, " +
+        "The pieces' prefilter (one FileBank broadcast per seen piece, " +
           "`might_contain_any`) filters AFTER the candidate bucket " +
           "exchange: the Filter sits above the Exchange, so task p faults " +
-          "in only bucket p's bank image — executor residency is " +
-          "O(seen/B), and the base broadcast carries only dir paths, " +
+          "in only bucket p's images — executor residency is " +
+          "O(seen/B), and each broadcast carries only a dir path, " +
           "never filter bytes (SeenStateSpec asserts the FileBank " +
           "payload). Filter-negatives ('provably unseen') bypass the " +
           "exact anti-join chain; positives confirm against the " +

@@ -20,9 +20,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   * items per filter its buffers get a different optimal hash-function
   * count than a `BloomFilter.create(items, fpp)` built anywhere else —
   * `mergeInPlace` then throws IncompatibleMergeException. The engine's
-  * per-bucket filters resize PAST that clamp by design (saturation-aware
-  * doubling, SeenState), so the aggregate must track the exact same
-  * (items, fpp) sizing as the driver-side filters it merges into. */
+  * per-bucket images are sized from each seen piece's row count and pass
+  * that clamp at scale (SeenState), so the aggregate must track the exact
+  * same (items, fpp) sizing as `BloomFilter.create` everywhere else. */
 case class BloomFilterAggImpl(
     child: Expression,
     expectedItems: Long,

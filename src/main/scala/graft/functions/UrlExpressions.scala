@@ -97,13 +97,13 @@ object UrlExpressions {
   }
 
   /** `might_contain_long(hash)` — probe of broadcast approximate-
-    * membership LAYERS (a base filter image + per-wave deltas), as a
-    * native expression so the probe stays inside whole-stage codegen. A
-    * hash is "maybe seen" if ANY layer claims it (short-circuit `||`).
-    * The layers are SEPARATE broadcasts on purpose: the big base image
-    * ships to executors only on rebase/resize while each wave ships only
-    * its own wave-sized delta — per-wave driver→executor bytes are
-    * O(wave), never O(seen) (SeenState broadcast-LSM). The Scala-UDF
+    * membership LAYERS (one per seen piece), as a native expression so
+    * the probe stays inside whole-stage codegen. A hash is "maybe seen"
+    * if ANY layer claims it (short-circuit `||`). The layers are
+    * SEPARATE broadcasts on purpose: each carries only its piece's image
+    * path, so a new piece ships one small broadcast and the older ones
+    * are never re-shipped — per-wave driver→executor bytes are O(1) per
+    * piece, never O(seen) (SeenState). The Scala-UDF
     * alternative boxes every hash and breaks the codegen span around the
     * dedup prefilter — the hottest path of the engine (SURVEY §2.3 D3). */
   case class MightContainLong(

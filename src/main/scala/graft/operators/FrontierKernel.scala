@@ -52,9 +52,9 @@ object FrontierKernel {
     val scheduled = fetchSet.count()
 
     // 3. dedup: one candidate exchange into the seen bucket partitioning,
-    // post-exchange layered prefilter (task p faults in only bucket p's
-    // file-bank image — O(seen/B) resident per executor; delta layers are
-    // O(wave) broadcasts), filter-negatives skip the exact anti-join
+    // post-exchange per-piece prefilter (task p faults in only bucket p's
+    // images — O(seen/B) resident per executor; each piece's broadcast is
+    // one path), filter-negatives skip the exact anti-join
     // chain; the seen pieces never re-shuffle (SeenState.freshAndConfirmed).
     // The just-counted cardinality rides along so the large-wave path
     // materializes the candidate exchange exactly once.

@@ -23,7 +23,7 @@ import scala.concurrent.duration.Duration
   *    first, so a hot host (30% of the frontier) never lands in one task;
   *    the second window sees ≤ saltBuckets × budget rows per host;
   *  - the URL-seen state is an LSM stack of hash-bucketed pieces with
-  *    per-bucket saturation-aware prefilters ([[SeenState]]): the wave
+  *    per-piece, per-bucket bloom prefilters ([[SeenState]]): the wave
   *    anti-join exchanges ONLY candidate rows — the seen side is
   *    pre-partitioned once and never re-shuffled or re-read;
   *  - parent ranks are order-isomorphic range-partitioned ids, never a
@@ -44,7 +44,6 @@ object CrawlJob {
       maxWaves: Int = 64,
       numPartitions: Int = 32,
       saltBuckets: Int = 8,
-      bloomItems: Long = 4L * 1000 * 1000, // expected total seen URLs (filters resize past it)
       maxRetries: Int = 0,          // bounded fetch-miss retry (0 = reference behavior)
       snapshotKeep: Int = 16,       // IceLite retention: snapshots kept per table (0 = keep all)
       virtualClock: Boolean = false, // cross-wave ts_next(host) politeness carryover (P1)
@@ -56,8 +55,11 @@ object CrawlJob {
       intakeActive: () => Boolean = () => false,
       onWaveEnd: Int => Unit = _ => ()) { // after wave w commits (tests/instrumentation)
     // fixed seen-state shape: members, not fields, so no caller sets them
+    // (bloomItems is read only by crawlbench, which still passes it to
+    // SeenState's unused expectedItems)
+    val bloomItems: Long = 4L * 1000 * 1000
     val bloomFpp: Double = 0.01
-    val seenBuckets: Int = 32   // hash buckets for the seen LSM + filter bank
+    val seenBuckets: Int = 32   // hash buckets for the seen LSM + bloom images
     val compactPieces: Int = 8  // LSM compaction threshold (anti-join chain bound)
   }
 
@@ -177,14 +179,14 @@ object CrawlJob {
       _.trimWhile(s => s.counters.get("wave").exists(_ >= wave))
     }
 
-    // seen state: bucketed pieces + per-bucket prefilters, rebuilt from
-    // the durable table on (re)start, then fed incrementally per wave.
-    // Bank scratch dirs live under the state root (shared storage, like
-    // every IceLite table) so executors can fault bucket images in; a
-    // crashed run's leftovers are swept here — the durable bank is the
-    // version-gated filters table, never these dirs.
+    // seen state: bucketed pieces, each with its own per-bucket bloom
+    // images, rebuilt from the durable table on (re)start, then fed one
+    // piece per wave. Image dirs live under the state root (shared
+    // storage, like every IceLite table) so executors can fault bucket
+    // images in; a crashed run's leftovers are swept here — the durable
+    // bank is the version-gated filters table, never these dirs.
     SeenState.deleteDir(s"$stateRoot/seen_bank")
-    val seen = new SeenState(spark, cfg.seenBuckets, expectedItems = cfg.bloomItems,
+    val seen = new SeenState(spark, cfg.seenBuckets,
       fpp = cfg.bloomFpp, compactAt = cfg.compactPieces,
       bankRoot = s"$stateRoot/seen_bank")
     bootstrapSeen(spark, t, seen, cfg)
@@ -246,7 +248,7 @@ object CrawlJob {
     * only trims versions above the commit marker, so tag equality proves
     * the bank covers exactly the committed seen rows — the completeness
     * the prefilter's no-false-negative contract depends on. Anything
-    * off (stale tag, bucket/format/shape mismatch, unreadable images)
+    * off (stale tag, bucket/format/shape mismatch, unparsable images)
     * falls back to the full rebuild. */
   private def bootstrapSeen(spark: SparkSession, t: Tables, seen: SeenState,
       cfg: Config): Unit = {
@@ -256,12 +258,11 @@ object CrawlJob {
       s.counters.get("seen_version").contains(t.seen.currentVersion.toLong) &&
       s.counters.get("bank_format").contains(BankFormat) &&
       s.counters.get("buckets").contains(cfg.seenBuckets.toLong) &&
-      s.counters.contains("cap") &&
       scala.util.Try {
-        // distributed: tasks copy the persisted images into the bank dir;
-        // only the (bucket, n) stats reach the driver — never the images
-        seen.bootstrapFromBank(seenDf,
-          t.filters.read().select("bucket", "image", "n"), s.counters("cap"))
+        // distributed: tasks parse and copy the persisted images into the
+        // bootstrap piece's dir; only the (bucket, n) stats reach the
+        // driver — never the images
+        seen.bootstrapFromBank(seenDf, t.filters.read().select("bucket", "image", "n"))
         true
       }.getOrElse(false)
     }
@@ -400,7 +401,7 @@ object CrawlJob {
         // the in-memory prefilter/pieces must cover the admitted seeds too
         // (a replayed drain skips this: the post-crash bootstrap already
         // read them from the durable seen table)
-        seen.addWave(admitted.select(col("url_hash")), n)
+        seen.addWave(admitted.select(col("url_hash")))
       }
       if (n > 0) {
         // keep the host high-water mark covering intake hosts too (frozen
@@ -424,11 +425,12 @@ object CrawlJob {
   // of the other filter kind v2 supported, which must never parse as bloom.)
   private val BankFormat = 3L
 
-  /** Durable (bucket, image, count) bank + capacity, tagged with the seen
-    * table version it covers. Fully distributed: tasks read the bank
-    * files and write the parquet in B-wide parallelism — at the 10^10
-    * design point this is a ~12 GB table and a single-task write (the
-    * round-2 coalesce(1)) would serialize it through one executor. */
+  /** Durable (bucket, image, count) bank, tagged with the seen table
+    * version it covers (each image records its own size). Fully
+    * distributed: tasks read the image files and write the parquet in
+    * B-wide parallelism — at the 10^10 design point this is a ~12 GB
+    * table and a single-task write (the round-2 coalesce(1)) would
+    * serialize it through one executor. */
   private def persistFilterBank(spark: SparkSession, t: Tables, seen: SeenState,
       cfg: Config): Unit = {
     t.filters.replace(
@@ -436,8 +438,7 @@ object CrawlJob {
       Map(
         "seen_version" -> t.seen.currentVersion.toLong,
         "bank_format" -> BankFormat,
-        "buckets" -> cfg.seenBuckets.toLong,
-        "cap" -> seen.capacityPerBucket))
+        "buckets" -> cfg.seenBuckets.toLong))
   }
 
   private val priorityKeys = Seq(col("depth"), col("parent_ord"), col("link_index"))
@@ -629,9 +630,9 @@ object CrawlJob {
         mark("expand")
 
         // dedup: candidates exchange ONCE into the seen bucket partitioning,
-        // then the layered prefilter probes POST-exchange (task p faults in
-        // only bucket p's image from the file bank — O(seen/B) resident per
-        // executor, O(wave) broadcast bytes for the delta layers) and
+        // then the pieces' prefilters probe POST-exchange (task p faults in
+        // only bucket p's images — O(seen/B) resident per executor, one
+        // path-only broadcast per piece) and
         // filter-negatives skip the exact anti-join chain entirely
         // (SeenState.freshAndConfirmed; probe is native codegen, no UDF
         // boxing in the hot path). The winner count rides along so a large
@@ -667,12 +668,11 @@ object CrawlJob {
         mark("seen_write")
         val admitted = newSeen.filter(col("__allowed"))
 
-        // fold the wave's hashes into the seen state (pieces + filters) on
-        // a future: the fold is only needed by the NEXT wave, so it
-        // overlaps this wave's commit tail instead of serializing behind
-        // it. The observed count lets both filter images (merge-sized +
-        // wave-sized delta) build in a single distributed pass.
-        if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")), nNewSeen)
+        // fold the wave's hashes into the seen state (a new piece with its
+        // own images) on a future: the fold is only needed by the NEXT
+        // wave, so it overlaps this wave's commit tail instead of
+        // serializing behind it.
+        if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")))
         mark("seen_fold")
 
         // --- bounded fetch-miss retry: misses re-enter the frontier directly
@@ -812,8 +812,8 @@ object CrawlJob {
     }
     // wave boundary: every plan that referenced this wave's probe layers
     // is committed + unpersisted, and the next wave's frontier lineage
-    // starts from the IceLite parquet — broadcasts retired by a rebase
-    // this wave are now unreachable and safe to destroy.
+    // starts from the IceLite parquet — broadcasts of pieces retired by a
+    // compaction this wave are now unreachable and safe to destroy.
     seen.releaseRetired()
     result
   }

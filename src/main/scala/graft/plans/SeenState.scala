@@ -13,7 +13,7 @@ import java.nio.file.Files
 
 /** Distributed URL-seen state for the 10^10 path (SURVEY §7.5(4)): an
   * LSM-style stack of hash-bucketed, executor-resident pieces (the EXACT
-  * side of dedup) + one bloom prefilter per bucket.
+  * side of dedup), each carrying its own per-bucket bloom prefilter.
   *
   * Scale design — per-wave maintenance is O(wave) in BOTH directions and
   * the probe face is O(seen/B) per executor:
@@ -41,47 +41,41 @@ import java.nio.file.Files
   *    (VERDICT r3 "what's wrong" #3). [[compactedRowsTotal]] witnesses
   *    the volume; the SeenStateSpec 30-wave gate asserts the base piece
   *    stays un-reshuffled while waves ≪ base.
-  *  - **Per-wave filter builds are DELTA-ONLY.** A wave builds per-bucket
-  *    filter images sized to the WAVE's own counts (one distributed
-  *    aggregate over the wave's cached rows) — the bytes collected to the
-  *    driver per wave are ∝ wave size ([[lastWaveCollectedFilterBytes]]
-  *    proves it), never ∝ seen capacity. A skewed bucket that overflows
-  *    the sizing guess rebuilds the delta at its exact cardinality, so
-  *    every layer holds its configured FPP.
-  *  - **The merged bank lives in shared storage, not on the driver and
-  *    not in a broadcast.** Every [[SeenState.RebaseEvery]] waves (and on
-  *    saturation resize) the bank is rebuilt FROM THE PIECES by one
-  *    distributed pass whose tasks write per-bucket image files under
-  *    `bankRoot` — the driver never holds or ships an O(seen-capacity)
-  *    image (round 2 collected ~12 GB/wave to the driver at the 10^10
-  *    design point; this collects the per-bucket counts only).
-  *    Amortized bank-rebuild cost is O(seen/RebaseEvery) rows per wave.
-  *  - **Probe face = FileBank base + per-wave delta broadcasts.** The
-  *    base broadcast carries only the bank dir path
+  *  - **Each piece's bloom images are built once, from its own rows.**
+  *    When a piece is built (bootstrap, bank import, wave fold or
+  *    compaction), one distributed pass writes one image per bucket into
+  *    the piece's own dir under `bankRoot`, sized max(1024, 2n/B) for n
+  *    rows; only per-bucket counts reach the driver, never an image. A
+  *    skewed bucket past that guess triggers one rebuild at twice its
+  *    exact count, so every image holds the configured FPP. A piece never
+  *    changes, so its images never saturate and are never rebuilt:
+  *    filter work per wave is the wave's rows plus the rows compaction
+  *    re-merges, and it is retired with the piece.
+  *  - **Probe face = one path-only FileBank broadcast per piece.** Each
+  *    broadcast carries only its piece's image dir
   *    ([[LongMembership.FileBank]]); executors fault in per-bucket images
-  *    lazily. Because the bank bucket function IS the candidate
-  *    exchange's partition id ([[LongMembership.bucketOf]]), probing
-  *    AFTER the exchange ([[freshAndConfirmed]]) touches exactly one
-  *    bucket per task — executor residency is O(seen/B) per task slot,
-  *    not O(seen). Wave deltas ride as small in-memory broadcast layers
-  *    (O(wave) bytes) OR-ed in codegen (MightContainLong), folded into
-  *    the bank at the next rebase; probe depth ≤ RebaseEvery+1.
-  *  - **Nothing broadcast-reachable is ever mutated.** Delta layers are
-  *    immutable once broadcast; bank files are immutable once written
-  *    (rebase/resize write NEW versioned dirs); retired broadcasts and
-  *    dirs are destroyed only at the caller's wave boundary
-  *    ([[releaseRetired]]) because a cache-evicted partition of a live
-  *    wave plan may recompute the probe mid-wave.
+  *    lazily. Because the bucket function IS the candidate exchange's
+  *    partition id ([[LongMembership.bucketOf]]), probing AFTER the
+  *    exchange ([[freshAndConfirmed]]) touches one bucket per piece per
+  *    task — executor residency is O(seen/B) per task slot, not O(seen).
+  *    The pieces' broadcasts are OR-ed in codegen (MightContainLong);
+  *    compaction bounds the depth at compactAt − 1.
+  *  - **Nothing broadcast-reachable is ever mutated.** Image files are
+  *    immutable once broadcast; a piece retired by compaction or a
+  *    re-bootstrap keeps its broadcast and dir until the caller's wave
+  *    boundary ([[releaseRetired]]) because a cache-evicted partition of
+  *    a live wave plan may recompute the probe mid-wave.
   *
-  * `useCuckoo` is a compatibility parameter: the cuckoo prefilter is
-  * gone, the parameter keeps its name and position for callers that
-  * still pass `false`, and `true` is rejected.
+  * `useCuckoo` and `expectedItems` are compatibility parameters that keep
+  * their names and positions for callers that still pass them: the cuckoo
+  * prefilter is gone (`true` is rejected), and each piece sizes its images
+  * from its own row count, so `expectedItems` is unused.
   */
 final class SeenState(
     spark: SparkSession,
     buckets: Int,
     useCuckoo: Boolean = false,
-    expectedItems: Long,
+    expectedItems: Long = 0L,
     fpp: Double,
     compactAt: Int,
     bankRoot: String = null) {
@@ -91,26 +85,21 @@ final class SeenState(
   import spark.implicits._
 
   private val B = buckets
-  private var pieces: Vector[DataFrame] = Vector.empty
-  // Exact row count per piece, parallel to `pieces` — drives the
-  // size-tiered merge policy (which runs are "similar-sized").
-  private var pieceSizes: Vector[Long] = Vector.empty
+
+  /** One immutable LSM run: its bucketed rows, its exact row count (which
+    * drives the size-tiered merge policy), and its per-bucket bloom images
+    * in `dir` (per-bucket row counts in `counts`), probed through `bc`. */
+  private case class Piece(rows: DataFrame, n: Long, dir: String, counts: Array[Long],
+      bc: Broadcast[LongMembership])
+
+  private var pieces: Vector[Piece] = Vector.empty
   private var compactedRows: Long = 0L
-  private var perBucketCap: Long = math.max(1024L, expectedItems / B)
-  private val bucketCounts: Array[Long] = Array.fill(B)(0L)
-  private var nResizes: Int = 0
   private var nCompactions: Int = 0
-  private var nRebases: Int = 0
-  private var baseBc: Broadcast[LongMembership] = _
-  private var deltaBcs: Vector[Broadcast[LongMembership]] = Vector.empty
-  private var deltaFaces: Vector[LongMembership] = Vector.empty
   private var retiredBcs: Vector[Broadcast[LongMembership]] = Vector.empty
   private var retiredDirs: Vector[String] = Vector.empty
-  private var bankDir: String = null
-  private var bankVersion: Int = 0
-  private var lastCollected: Long = 0L
+  private var dirVersion: Int = 0
 
-  // Unique instance root: a crashed run's stale bank files must never be
+  // Unique instance root: a crashed run's stale image files must never be
   // read as current state (the durable bank rides the IceLite filters
   // table, version-gated — these dirs are scratch).
   private val instRoot: String = {
@@ -124,15 +113,16 @@ final class SeenState(
 
   /** Bucket column — MUST equal the partition id `repartition(B,
     * url_hash)` assigns (pmod(murmur3, B), see LongMembership.bucketOf)
-    * so bank buckets co-locate with exchanged candidates. */
+    * so image buckets co-locate with exchanged candidates. */
   private def bucketCol: Column = pmod(hash(col("url_hash")), lit(B)).cast("int")
 
   /** Hash-bucket + sort + truncate lineage: the retained physical layout
     * every later anti-join aligns to without exchanging this side.
     * (checkpointPartitioned = eager localCheckpoint that KEEPS the
     * partitioning visible — plain localCheckpoint loses it under AQE and
-    * every wave would re-exchange the whole seen set.) */
-  private def prep(hashes: DataFrame): DataFrame =
+    * every wave would re-exchange the whole seen set.) Returns the piece
+    * rows with their exact count. */
+  private def prep(hashes: DataFrame): (DataFrame, Long) =
     GraftShim.checkpointPartitioned(
       hashes.select(col("url_hash"))
         .repartition(B, col("url_hash"))
@@ -141,8 +131,8 @@ final class SeenState(
 
   // graft_bloom_agg, not Spark's bloom_filter_agg: the builtin clamps
   // items to the 4M runtime-filter conf while keeping the caller's bit
-  // count, so its buffers stop merging with BloomFilter.create(...)
-  // filters once a bucket resizes past 4M (see BloomFilterAgg doc)
+  // count, so its images stop matching BloomFilter.create(...) sizing
+  // once a bucket grows past 4M (see BloomFilterAgg doc)
   private def aggFor(cap: Long): Column =
     graft.functions.BloomFilterAgg.graft_bloom_agg(col("url_hash"), cap, fpp)
 
@@ -151,7 +141,7 @@ final class SeenState(
 
   /** Partial aggregation holds one filter buffer PER BUCKET PER input
     * partition. Past ~64 MB of per-partition buffer state (the 10^8+
-    * bootstrap / resized-cap regime) that is gigabytes of aggregation
+    * bootstrap / compaction regime) that is gigabytes of aggregation
     * state, so pre-exchange the rows by bucket — each partition then
     * aggregates exactly one bucket. Below the threshold aggregate in
     * place: exchanging B small partial buffers beats re-shuffling the
@@ -165,34 +155,16 @@ final class SeenState(
     pre.groupBy(col("__b"))
   }
 
-  /** One distributed pass: per-bucket (image, exact count). */
-  private def buildImages(df: DataFrame, cap: Long): Array[(Int, Array[Byte], Long)] =
-    grouped(df, estFilterBytes(cap))
-      .agg(aggFor(cap).as("f"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getInt(0), r.getAs[Array[Byte]](1), r.getLong(2)))
-
-  /** Wave-sized delta images sized to the real per-bucket cardinality: a
-    * skewed bucket past the initial guess triggers a rebuild at its exact
-    * count, so the layer keeps its FPP. Collected bytes are ∝ the wave's
-    * row count, never ∝ seen capacity. */
-  private def buildDelta(df: DataFrame, capGuess: Long): Array[(Int, Array[Byte], Long)] = {
-    val fs = buildImages(df, capGuess)
-    val maxN = if (fs.isEmpty) 0L else fs.map(_._3).max
-    // the counts are exact, so one rebuild at the new cap always fits
-    if (maxN > capGuess) buildImages(df, math.max(2 * maxN, capGuess * 2)) else fs
+  private def nextDir(): String = {
+    dirVersion += 1
+    s"$instRoot/v$dirVersion"
   }
 
-  private def nextBankDir(): String = {
-    bankVersion += 1
-    s"$instRoot/v$bankVersion"
-  }
-
-  /** One distributed pass over `df` building the bank at `cap`: tasks
+  /** One distributed pass over `df` building images at `cap`: tasks
     * write per-bucket image files under `dir` (shared storage) and only
     * per-bucket counts return to the driver — the images themselves
     * never leave the executors. */
-  private def writeBankFiles(df: DataFrame, cap: Long, dir: String): Array[(Int, Long)] = {
+  private def writeImagesAt(df: DataFrame, cap: Long, dir: String): Array[(Int, Long)] = {
     StateIO.forPath(dir).mkdirs(dir)
     grouped(df, estFilterBytes(cap))
       .agg(aggFor(cap).as("f"), count(lit(1)).as("n"))
@@ -205,65 +177,56 @@ final class SeenState(
       .collect()
   }
 
-  /** Retire the current probe layers and install `dir` as the new base.
-    * The new bank covers every piece, hence every delta: the deltas fold
-    * into it. */
-  private def swapBase(dir: String): Unit = {
-    if (baseBc != null) { retiredBcs :+= baseBc; nRebases += 1 }
-    retiredBcs ++= deltaBcs
-    deltaBcs = Vector.empty
-    deltaFaces = Vector.empty
-    retiredDirs ++= Option(bankDir)
-    bankDir = dir
-    baseBc = spark.sparkContext.broadcast(
-      LongMembership.FileBank(dir, B): LongMembership)
+  /** Images for the `n` rows of `df` in a fresh dir, sized max(1024, 2n/B)
+    * per bucket. The counts are exact, so a skewed bucket past the guess
+    * costs one rebuild at twice its count, which always fits (the rebuild
+    * overwrites every image of the first pass). Returns the dir and the
+    * per-bucket counts. */
+  private def writeImages(df: DataFrame, n: Long): (String, Array[Long]) = {
+    val dir = nextDir()
+    val guess = math.max(1024L, 2L * n / B)
+    val first = writeImagesAt(df, guess, dir)
+    val maxN = if (first.isEmpty) 0L else first.map(_._2).max
+    val stats = if (maxN > guess) writeImagesAt(df, 2L * maxN, dir) else first
+    val counts = new Array[Long](B)
+    stats.foreach { case (b, c) => counts(b) = c }
+    (dir, counts)
   }
 
-  /** Rebuild the bank from the pieces at the current capacity (growing it
-    * once if a bucket outgrew the cap, so every image holds its FPP) and
-    * swap it in. Amortized: called every [[SeenState.RebaseEvery]] waves
-    * (delta fold), on saturation resize, and at bootstrap. Returns
-    * per-bucket counts. */
-  private def materializeBank(): Array[(Int, Long)] = {
-    val dir = nextBankDir()
-    val stats =
-      if (pieces.isEmpty) Array.empty[(Int, Long)]
-      else writeBankFiles(allPieces, perBucketCap, dir)
-    val maxN = if (stats.isEmpty) 0L else stats.map(_._2).max
-    if (maxN > perBucketCap) {
-      SeenState.deleteDir(dir) // scrapped attempt — never broadcast
-      perBucketCap = math.max(perBucketCap * 2, maxN * 2)
-      materializeBank() // the new cap covers maxN: one more pass
-    } else {
-      swapBase(dir)
-      stats
+  private def piece(rows: DataFrame, n: Long, dir: String, counts: Array[Long]): Piece =
+    Piece(rows, n, dir, counts,
+      spark.sparkContext.broadcast(LongMembership.FileBank(dir, B): LongMembership))
+
+  /** Prep `hashes` into a piece with its own images. Zero rows make no
+    * piece: the empty checkpoint has zero partitions while still claiming
+    * the B-way partitioning, so no candidate exchange could zip with it
+    * ([[freshAndConfirmed]] passes every candidate through while there is
+    * no piece, and the first [[addWave]] creates one). */
+  private def build(hashes: DataFrame): Option[Piece] = {
+    val (rows, n) = prep(hashes)
+    if (n == 0L) { GraftShim.freeCheckpoint(rows); None }
+    else {
+      val (dir, counts) = writeImages(rows, n)
+      Some(piece(rows, n, dir, counts))
     }
   }
 
-  private def allPieces: DataFrame = pieces.reduce(_ unionByName _)
-
-  /** Init or resume: absorb the durable seen table in one pass. The bank
-    * build sizes itself off the real per-bucket cardinality (capacity
-    * doubles until every bucket fits). */
-  def bootstrap(seenDf: DataFrame): Unit = {
-    awaitFold()
-    pieces.foreach(GraftShim.freeCheckpoint) // re-bootstrap (e.g. bank fallback)
-    pieces = Vector(prep(seenDf))
-    java.util.Arrays.fill(bucketCounts, 0L)
-    materializeBank().foreach { case (b, n) => bucketCounts(b) = n }
-    pieceSizes = Vector(bucketCounts.sum)
-    dropEmptyBase()
+  /** Free a piece's rows now; its broadcast and dir wait for
+    * [[releaseRetired]] (a live wave plan may still probe them). */
+  private def retire(p: Piece): Unit = {
+    GraftShim.freeCheckpoint(p.rows)
+    retiredBcs :+= p.bc
+    retiredDirs :+= p.dir
   }
 
-  /** A bootstrap that absorbed zero rows keeps no piece: the empty
-    * checkpoint has zero partitions while still claiming the B-way
-    * partitioning, so no candidate exchange could zip with it.
-    * [[freshAndConfirmed]] then passes every candidate through, and the
-    * first [[addWave]] creates the first piece. */
-  private def dropEmptyBase(): Unit = if (totalSeen == 0L) {
-    pieces.foreach(GraftShim.freeCheckpoint)
-    pieces = Vector.empty
-    pieceSizes = Vector.empty
+  private def allRows: DataFrame = pieces.map(_.rows).reduce(_ unionByName _)
+
+  /** Init or resume: absorb the durable seen table in one pass, as one
+    * piece with its own images. */
+  def bootstrap(seenDf: DataFrame): Unit = {
+    awaitFold()
+    pieces.foreach(retire) // re-bootstrap (e.g. bank fallback)
+    pieces = build(seenDf).toVector
   }
 
   // In-flight asynchronous fold (addWaveAsync). Every state-reading
@@ -276,77 +239,44 @@ final class SeenState(
     scala.concurrent.Await.result(p, scala.concurrent.duration.Duration.Inf)
   }
 
-  /** [[addWave]] on a future: the fold's result (updated pieces + probe
-    * layers) is only needed by the NEXT wave's probe/anti-join, so the
-    * caller's commit tail overlaps the piece checkpoint + filter build
+  /** [[addWave]] on a future: the fold's result (a new piece with its
+    * images) is only needed by the NEXT wave's probe/anti-join, so the
+    * caller's commit tail overlaps the piece checkpoint + image build
     * instead of serializing behind it (~1 s/wave of barrier latency on a
     * 23-wave crawl). Durable state does not depend on the fold — a crash
     * mid-fold resumes by re-bootstrapping from the seen table. */
-  def addWaveAsync(newSeenHashes: DataFrame, knownCount: Long)(
+  def addWaveAsync(newSeenHashes: DataFrame)(
       implicit ec: scala.concurrent.ExecutionContext): Unit = {
     awaitFold()
-    pending = scala.concurrent.Future(addWave(newSeenHashes, knownCount))
+    pending = scala.concurrent.Future(addWave(newSeenHashes))
   }
 
-  /** Absorb one wave's new seen hashes (caller guarantees non-empty and
-    * cached upstream — the delta aggregate reads the cache, not the
-    * plan). Per-wave cost: one piece prep + one WAVE-SIZED delta build;
-    * the merged bank is only touched at rebase/resize/compact
-    * boundaries. */
-  def addWave(newSeenHashes: DataFrame, knownCount: Long = -1L): Unit = {
-    val piece = prep(newSeenHashes)
-    pieces :+= piece
-    val capGuess =
-      if (knownCount >= 0L) math.max(2L * knownCount / B, 1024L) else 1024L
-    val fs = buildDelta(piece, capGuess)
-    pieceSizes :+= fs.map(_._3).sum
-    fs.foreach { case (b, _, n) => bucketCounts(b) += n }
-    lastCollected = fs.map(_._2.length.toLong).sum
-    if (bucketCounts.max > perBucketCap) resize()
-    else if (fs.nonEmpty) {
-      pushDelta(fs.map { case (b, img, _) => (b, img) })
-      if (deltaBcs.size >= SeenState.RebaseEvery) rebase()
-    }
+  /** Absorb one wave's new seen hashes (caller guarantees cached upstream
+    * — the piece checkpoint reads the cache, not the plan) as one new
+    * piece. Per-wave cost: one piece prep + one WAVE-SIZED image pass;
+    * older pieces are only touched when compaction merges them. */
+  def addWave(newSeenHashes: DataFrame): Unit = {
+    pieces ++= build(newSeenHashes)
     if (pieces.size >= compactAt) compact()
   }
 
-  private def pushDelta(images: Array[(Int, Array[Byte])]): Unit = {
-    val layers: Array[LongMembership] = Array.fill(B)(LongMembership.Empty)
-    images.foreach { case (b, bytes) => layers(b) = LongMembership.deserializeFilter(bytes) }
-    val face: LongMembership = LongMembership.Bucketed(layers)
-    deltaFaces :+= face
-    deltaBcs :+= spark.sparkContext.broadcast(face)
-  }
-
-  /** Fold the delta layers into a fresh bank rebuilt from the pieces —
-    * one distributed pass, amortized O(seen/RebaseEvery) rows per wave;
-    * nothing O(seen) touches the driver. */
-  private def rebase(): Unit = {
-    materializeBank()
-    ()
-  }
-
-  /** The probe face (driver-side view, for tests/tools): bank ∨ deltas. */
+  /** The probe face (driver-side view, for tests/tools): the OR of the
+    * pieces' images. */
   def prefilter: LongMembership =
-    LongMembership.Layered(
-      (LongMembership.FileBank(bankDir, B): LongMembership) +: deltaFaces)
+    LongMembership.Layered(pieces.map(p => LongMembership.FileBank(p.dir, B)))
 
-  /** The layered probe column for this wave: base ∨ deltas, all inside
-    * whole-stage codegen. Capture per wave (the layer set changes).
-    * NOTE: memory-bounded only AFTER a repartition(B, url_hash) — use
-    * [[freshAndConfirmed]] on the hot path so each task faults in just
-    * its own bucket's image. */
+  /** The probe column for this wave: the OR of every piece's images, all
+    * inside whole-stage codegen. Capture per wave (the piece set
+    * changes). NOTE: memory-bounded only AFTER a repartition(B, url_hash)
+    * — use [[freshAndConfirmed]] on the hot path so each task faults in
+    * just its own bucket's images. */
   def probe(c: Column): Column = {
     awaitFold()
-    if (baseBc == null) materializeBankIfAny()
-    UrlExpressions.might_contain_any(c, baseBc +: deltaBcs)
+    if (pieces.isEmpty) lit(false)
+    else UrlExpressions.might_contain_any(c, pieces.map(_.bc))
   }
 
-  private def materializeBankIfAny(): Unit =
-    if (pieces.nonEmpty) { materializeBank(); () }
-    else swapBase(nextBankDir()) // empty bank
-
-  /** Destroy broadcasts and bank dirs retired by rebase/resize.
+  /** Destroy broadcasts and image dirs of retired pieces.
     * Call ONLY at a wave boundary, after every plan that could
     * re-evaluate the previous wave's probe has been committed and
     * unpersisted (a recomputed partition may lazily fault in a retired
@@ -372,14 +302,14 @@ final class SeenState(
     * bucket partitioning, then a zero-exchange join chain over pieces. */
   def antiJoin(cands: DataFrame): DataFrame = {
     awaitFold()
-    pieces.foldLeft(cands)((acc, p) => acc.join(p, Seq("url_hash"), "left_anti"))
+    pieces.foldLeft(cands)((acc, p) => acc.join(p.rows, Seq("url_hash"), "left_anti"))
   }
 
   /** The wave dedup in one plan, scale-shaped: candidates exchange ONCE
     * into the bucket partitioning (O(wave) bytes — the only shuffle),
-    * the layered prefilter probes POST-exchange (task p loads only bucket
-    * p's image: O(seen/B) resident), filter-negatives skip the join chain
-    * entirely, filter-positives get exact confirmation against the
+    * the pieces' prefilters probe POST-exchange (task p loads only bucket
+    * p's images: O(seen/B) resident), filter-negatives skip the join
+    * chain entirely, filter-positives get exact confirmation against the
     * pre-partitioned pieces with zero seen-side exchange. Returns
     * fresh ∪ confirmed (the truly-new candidates).
     *
@@ -408,17 +338,16 @@ final class SeenState(
   def freshAndConfirmed(cands: DataFrame, candsHint: Long = -1L): DataFrame = {
     awaitFold()
     if (pieces.isEmpty) return cands
-    if (baseBc == null) materializeBankIfAny()
     freeCandCk()
     val parts =
       if (candsHint >= SeenState.CheckpointCandsAt) {
         candCk = cands.repartition(B, col("url_hash")).persist()
         candCk
       } else cands.repartition(B, col("url_hash"))
-    val might = UrlExpressions.might_contain_any(col("url_hash"), baseBc +: deltaBcs)
+    val might = UrlExpressions.might_contain_any(col("url_hash"), pieces.map(_.bc))
     val fresh = parts.filter(!might)
     val confirmed = pieces.foldLeft(parts.filter(might))(
-      (acc, p) => acc.join(p, Seq("url_hash"), "left_anti"))
+      (acc, p) => acc.join(p.rows, Seq("url_hash"), "left_anti"))
     fresh.unionByName(confirmed)
   }
 
@@ -429,24 +358,25 @@ final class SeenState(
     candCk = null
   }
 
-  /** Distributed (bucket, image, n) frame over the merged bank — B rows
-    * built by tasks reading the bank files from shared storage; no
-    * O(seen) bytes ever land on the driver (the durable-bank write path:
-    * CrawlJob.persistFilterBank). Pending deltas fold first. */
+  /** Distributed (bucket, image, n) frame over every seen row — B rows
+    * built by tasks reading image files from shared storage; no O(seen)
+    * bytes ever land on the driver (the durable-bank write path:
+    * CrawlJob.persistFilterBank). One piece exports its own images;
+    * several are first merged by one image pass over all pieces, into a
+    * dir that lives until [[close]] (the frame reads it lazily). */
   def bankDf(): DataFrame = {
     awaitFold()
-    if (deltaBcs.nonEmpty) rebase()
-    if (baseBc == null) materializeBankIfAny()
-    val dir = bankDir
-    val counts = bucketCounts.clone()
-    val cap = perBucketCap
+    val (dir, counts) =
+      if (pieces.size == 1) (pieces.head.dir, pieces.head.counts)
+      else if (pieces.isEmpty) (nextDir(), new Array[Long](B))
+      else writeImages(allRows, totalSeen)
     val fppLocal = fpp
     spark.createDataset(0 until B)
       .repartition(math.min(B, spark.sparkContext.defaultParallelism))
       .map { b =>
         val bytes = Option(LongMembership.loadBucketBytes(dir, b)).getOrElse {
           val o = new java.io.ByteArrayOutputStream()
-          BloomFilter.create(cap, fppLocal).writeTo(o)
+          BloomFilter.create(1024L, fppLocal).writeTo(o)
           o.toByteArray
         }
         (b, bytes, counts(b))
@@ -455,38 +385,45 @@ final class SeenState(
   }
 
   /** Resume fast path, fully distributed: `bank` is a (bucket, image, n)
-    * frame (the persisted IceLite filters table) — tasks copy the images
-    * into a fresh bank dir; the driver sees only the (bucket, n) stats.
-    * Restart cost drops to the single piece-prep pass + an O(bank) copy
-    * that never troubles the driver. */
-  def bootstrapFromBank(seenDf: DataFrame, bank: DataFrame, cap: Long): Unit = {
+    * frame (the persisted IceLite filters table) — tasks parse each image
+    * and copy it into a fresh dir; the driver sees only the (bucket, n)
+    * stats. The images become the single bootstrap piece's, so restart
+    * cost drops to the piece-prep pass + an O(bank) copy that never
+    * troubles the driver. An unparsable image, a missing bucket or a row
+    * count the bank does not cover throws, and the failed import leaves
+    * no piece, broadcast or dir behind (the caller falls back to
+    * [[bootstrap]]). */
+  def bootstrapFromBank(seenDf: DataFrame, bank: DataFrame): Unit = {
     awaitFold()
-    pieces.foreach(GraftShim.freeCheckpoint)
-    pieces = Vector(prep(seenDf))
-    val dir = nextBankDir()
-    StateIO.forPath(dir).mkdirs(dir)
-    val stats = bank.select(col("bucket").cast("int"), col("image"), col("n").cast("long"))
-      .as[(Int, Array[Byte], Long)]
-      .map { case (b, img, n) =>
-        SeenState.writeBucketFile(dir, b, img)
-        (b, n)
-      }
-      .collect()
-    require(stats.length == B && stats.map(_._1).toSet == (0 until B).toSet,
-      s"bank rows cover ${stats.length} buckets, want $B")
-    java.util.Arrays.fill(bucketCounts, 0L)
-    stats.foreach { case (b, n) => bucketCounts(b) = n }
-    pieceSizes = Vector(bucketCounts.sum)
-    perBucketCap = cap
-    swapBase(dir)
-    dropEmptyBase()
-  }
-
-  private def resize(): Unit = {
-    perBucketCap = math.max(perBucketCap * 2, bucketCounts.max * 2)
-    nResizes += 1
-    materializeBank() // the rebuilt bank covers every piece — deltas fold in
-    ()
+    pieces.foreach(retire)
+    pieces = Vector.empty
+    val dir = nextDir()
+    var rows: DataFrame = null
+    try {
+      StateIO.forPath(dir).mkdirs(dir)
+      val stats = bank.select(col("bucket").cast("int"), col("image"), col("n").cast("long"))
+        .as[(Int, Array[Byte], Long)]
+        .map { case (b, img, n) =>
+          LongMembership.deserializeFilter(img) // a corrupt image fails here, not in a probe
+          SeenState.writeBucketFile(dir, b, img)
+          (b, n)
+        }
+        .collect()
+      require(stats.length == B && stats.map(_._1).toSet == (0 until B).toSet,
+        s"bank rows cover ${stats.length} buckets, want $B")
+      val (r, n) = prep(seenDf)
+      rows = r
+      require(stats.map(_._2).sum == n, s"bank covers ${stats.map(_._2).sum} rows, seen has $n")
+      val counts = new Array[Long](B)
+      stats.foreach { case (b, c) => counts(b) = c }
+      if (n > 0L) pieces = Vector(piece(rows, n, dir, counts))
+      else { GraftShim.freeCheckpoint(rows); SeenState.deleteDir(dir) }
+    } catch {
+      case e: Throwable =>
+        if (rows != null) GraftShim.freeCheckpoint(rows)
+        SeenState.deleteDir(dir)
+        throw e
+    }
   }
 
   /** Size-tiered compaction (LSM economics, VERDICT r3 #3): merge ONLY
@@ -497,10 +434,11 @@ final class SeenState(
     * times over a crawl instead of every ~compactAt waves. If the
     * invariant admits no ≥2-piece group (sizes form a >2× geometric
     * ladder), the two smallest merge — guaranteed progress, cheapest
-    * possible merge. Loops until the chain is back under `compactAt`. */
+    * possible merge. The merged piece builds its own images; the merged
+    * pieces retire. Loops until the chain is back under `compactAt`. */
   private def compact(): Unit = {
     while (pieces.size >= compactAt) {
-      val asc = pieceSizes.zipWithIndex.sortBy(_._1) // (size, pieceIdx) ascending
+      val asc = pieces.map(_.n).zipWithIndex.sortBy(_._1) // (size, pieceIdx) ascending
       var group = Vector(asc.head._2)
       var total = asc.head._1
       var i = 1
@@ -511,58 +449,46 @@ final class SeenState(
         group :+= asc(1)._2; total += asc(1)._1
       }
       val inGroup = group.toSet
-      val old = pieces
-      val merged = prep(group.map(pieces).reduce(_ unionByName _)) // eager
+      val merged = build(group.map(pieces(_).rows).reduce(_ unionByName _)) // eager
       compactedRows += total
-      pieces = pieces.indices.filterNot(inGroup).map(pieces).toVector :+ merged
-      pieceSizes = pieceSizes.indices.filterNot(inGroup).map(pieceSizes).toVector :+ total
-      group.foreach(g => GraftShim.freeCheckpoint(old(g)))
+      group.foreach(g => retire(pieces(g)))
+      pieces = pieces.indices.filterNot(inGroup).map(pieces).toVector ++ merged
       nCompactions += 1
     }
   }
 
-  /** Release every persisted piece RDD, broadcast, and bank dir (end of
-    * run / bench rep) — leaked pieces, broadcasts, or bank files degrade
+  /** Release every persisted piece RDD, broadcast, and image dir (end of
+    * run / bench rep) — leaked pieces, broadcasts, or image files degrade
     * later reps and long sessions. */
   def close(): Unit = {
     scala.util.Try(awaitFold())
-    pieces.foreach(GraftShim.freeCheckpoint)
+    pieces.foreach { p =>
+      GraftShim.freeCheckpoint(p.rows)
+      scala.util.Try(p.bc.destroy())
+    }
     pieces = Vector.empty
-    pieceSizes = Vector.empty
     // BLOCKING here (end of run / bench rep, never wave-path latency):
     // an async-freed 2+ GB candidate cache still draining while the next
     // rep allocates its own caused bimodal rep walls (storage churn)
     freeCandCk(blocking = true)
     releaseRetired()
-    (Option(baseBc).toVector ++ deltaBcs).foreach(b => scala.util.Try(b.destroy()))
-    baseBc = null
-    deltaBcs = Vector.empty
-    deltaFaces = Vector.empty
     SeenState.deleteDir(instRoot)
-    bankDir = null
   }
 
   // introspection (tests + trace)
   def pieceCount: Int = pieces.size
-  def capacityPerBucket: Long = perBucketCap
-  def totalSeen: Long = bucketCounts.sum
-  def resizes: Int = nResizes
+  def totalSeen: Long = pieces.map(_.n).sum
   def compactions: Int = nCompactions
   /** Total rows re-shuffled by piece compaction since construction — the
     * tiered policy's witness: with waves ≪ base, the base piece never
     * joins a merge group, so this stays ∝ Σwaves·log(waves), not
     * ∝ seen·waves/compactAt. */
   def compactedRowsTotal: Long = compactedRows
-  private[graft] def pieceSizesView: Seq[Long] = pieceSizes
-  def rebases: Int = nRebases
-  def deltaLayers: Int = deltaBcs.size
-  /** Filter-image bytes the LAST addWave collected to the driver — the
-    * O(wave) contract's witness (a merge-sized build would be ∝ capacity). */
-  def lastWaveCollectedFilterBytes: Long = lastCollected
-  def currentBankDir: String = bankDir
-  /** Test face: the BASE probe broadcast's payload (must stay one path —
-    * a full filter-bank broadcast here is the 12 GB/executor regression). */
-  private[graft] def baseFace: LongMembership = baseBc.value
+  private[graft] def pieceSizesView: Seq[Long] = pieces.map(_.n)
+  /** Test face: each piece's probe broadcast payload (must stay one path
+    * — a full image broadcast here is the 12 GB/executor regression). */
+  private[graft] def pieceFaces: Seq[LongMembership] = pieces.map(_.bc.value)
+  private[graft] def instanceDir: String = instRoot
 }
 
 object SeenState {
@@ -579,10 +505,6 @@ object SeenState {
     * exchange also doubles NETWORK bytes, so the crossover may sit lower
     * there. */
   val CheckpointCandsAt: Long = 1L << 25
-
-  /** Wave deltas held as broadcast layers before a rebase folds them into
-    * a freshly built bank: bounds probe depth at RebaseEvery+1 layers. */
-  val RebaseEvery: Int = 8
 
   /** Atomic per-bucket image write (temp + rename; task-retry-safe:
     * last-writer-wins on identical content). Runs INSIDE executor tasks

@@ -26,8 +26,10 @@ object GraftShim {
     * of `repartition(numParts, col).sortWithinPartitions(col)` (a
     * user-specified repartition AQE never coalesces), so the partitioning
     * is known by construction and re-attached to the LogicalRDD — later
-    * joins on `colName` exchange only their OTHER side. */
-  def checkpointPartitioned(df: Dataset[Row], colName: String, numParts: Int): DataFrame = {
+    * joins on `colName` exchange only their OTHER side. Returns the frame
+    * with its row count (the eager materialization counts anyway). */
+  def checkpointPartitioned(df: Dataset[Row], colName: String,
+      numParts: Int): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
@@ -42,14 +44,14 @@ object GraftShim {
     // retained piece, and retired-broadcast handles kept reachable
     // indefinitely.
     rdd.localCheckpoint()
-    rdd.count() // eager: compute while upstream caches are still alive
+    val n = rdd.count() // eager: compute while upstream caches are still alive
     val output: Seq[Attribute] = qe.analyzed.output
     val attr = output.find(_.name == colName).getOrElse(
       throw new IllegalArgumentException(s"no column $colName in ${output.map(_.name)}"))
     val part = HashPartitioning(Seq(attr), numParts)
     val order = Seq(SortOrder(attr, Ascending))
-    classic.Dataset.ofRows(session,
-      LogicalRDD(output, rdd, part, order, isStreaming = false)(session))
+    (classic.Dataset.ofRows(session,
+      LogicalRDD(output, rdd, part, order, isStreaming = false)(session)), n)
   }
 
   /** Release the persisted RDD behind a [[checkpointPartitioned]] frame. */

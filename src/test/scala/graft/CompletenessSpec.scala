@@ -72,7 +72,7 @@ class CompletenessSpec extends AnyFunSuite {
     val metrics = CrawlJob.run(spark, spark.createDataFrame(corpus),
       Corpus.robotsRules(cfg),
       CrawlJob.Config(Seq("http://hot.example.com/p/0"), maxWaves = 3,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     val docs = CrawlJob.crawlDocs(spark, root)
     val env = ExportOps.appsearchEnvelopes(docs)
     val fetched = metrics.map(_.fetched).sum

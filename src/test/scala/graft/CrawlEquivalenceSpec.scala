@@ -38,7 +38,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir(tag)
     val metrics = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain, hostBudget, maxWaves,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     (oracleRes, root, metrics)
   }
 
@@ -120,7 +120,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("retry")
     val m = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 2, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+        numPartitions = 4, saltBuckets = 4,
         maxRetries = 2), root)
     assertEquivalent(o, root, m)
   }
@@ -135,7 +135,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val df = corpusDf(corpus)
     val root = tmpDir("retry-resume")
     def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 2,
-      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4,
       maxRetries = 1)
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
@@ -158,7 +158,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("bigrules")
     val m = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m)
   }
 
@@ -186,7 +186,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val m = CrawlJob.runWithPolicy(spark, corpusDf(corpus),
       graft.operators.RobotsTxt.policyFromTxt(bodiesDf, "graftbot"),
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 2, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m)
   }
 
@@ -207,7 +207,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("txtbig")
     val m = CrawlJob.runWithPolicy(spark, corpusDf(corpus), policy,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m)
   }
 
@@ -229,7 +229,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("vclock")
     val m = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+        numPartitions = 4, saltBuckets = 4,
         virtualClock = true), root)
     assertEquivalent(o, root, m)
   }
@@ -245,7 +245,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val df = corpusDf(corpus)
     val root = tmpDir("vclock-resume")
     def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 3,
-      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4,
       virtualClock = true)
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(2), root)
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
@@ -266,12 +266,12 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     var polls = 0
     val m1 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+        numPartitions = 4, saltBuckets = 4,
         stopRequested = () => { polls += 1; polls > 2 }), root)
     assert(m1.size == 2, s"graceful stop should land after wave 2, got ${m1.size}")
     val m2 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m1 ++ m2)
   }
 
@@ -287,7 +287,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("seenfirst")
     val m1 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 2,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     // simulate the widest crash interleaving the concurrent doc sinks
     // allow: wave 2's SEEN (and visits) landed, docs/frontier did not
     val t = CrawlJob.tables(root, spark)
@@ -299,7 +299,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
       Map("wave" -> 2L))
     val m2 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m1 ++ m2)
   }
 
@@ -315,7 +315,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val root = tmpDir("consumedcrash")
     val m1 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 2,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     // simulate the delta-commit crash window: wave 2's CONSUMED markers
     // landed (the concurrent append), the frontier commit marker did not.
     // The phantom marker carries a REAL deferred frontier row's hash — if
@@ -330,7 +330,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     t.consumed.append(Seq(victim).toDF("url_hash"), Map("wave" -> 2L))
     val m2 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m1 ++ m2)
   }
 
@@ -346,7 +346,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val df = corpusDf(corpus)
     val root = tmpDir("clockcrash")
     def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 3,
-      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4,
       virtualClock = true)
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(2), root)
     // simulate the crash window of the concurrent clock sink: wave 2's
@@ -391,7 +391,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assert(t.frontier.currentSnapshot.isEmpty)
     val m = CrawlJob.run(spark, corpusDf(corpus), rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 2, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(o, root, m)
   }
 
@@ -415,12 +415,12 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     // phase 1: stop after 2 waves (simulated kill between wave commits)
     val m1 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 2,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assert(m1.size == 2)
     // phase 2: resume from IceLite snapshots to completion
     val m2 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
-        numPartitions = 4, saltBuckets = 4, bloomItems = 100000L), root)
+        numPartitions = 4, saltBuckets = 4), root)
     assertEquivalent(oracleRes, root, m1 ++ m2)
   }
 
@@ -435,7 +435,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val df = corpusDf(corpus)
     val root = tmpDir("bankgate")
     def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 2,
-      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L)
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4)
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
     assert(m1.size == 3)
     // a format-2 bank from a cuckoo-mode run: every tag but the format
@@ -444,7 +444,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     // (per-bucket counts kept, so the resumed state is non-empty and the
     // first wave would probe these images if the gate let them through)
     val t = CrawlJob.tables(root, spark)
-    val clean = t.filters.currentSnapshot.get.counters
     val counts = t.filters.read().select("bucket", "n").as[(Int, Long)].collect()
     assert(counts.length == cfgJob(64).seenBuckets && counts.map(_._2).sum > 0L)
     val cuckooImage = {
@@ -455,7 +454,36 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     t.filters.replace(counts.toSeq.map { case (i, n) => (i, cuckooImage, n) }
         .toDF("bucket", "image", "n"),
       Map("seen_version" -> t.seen.currentVersion.toLong, "bank_format" -> 2L,
-        "buckets" -> counts.length.toLong, "cuckoo" -> 1L, "cap" -> clean("cap")))
+        "buckets" -> counts.length.toLong, "cuckoo" -> 1L))
+    val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
+    assertEquivalent(o, root, m1 ++ m2)
+  }
+
+  test("unparsable bank images are never probed: resume rebuilds, stays exact") {
+    import spark.implicits._
+    val cfg = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
+    val corpus = Corpus.generate(cfg)
+    val rules = Corpus.robotsRules(cfg)
+    val seeds = Seq("http://hot.example.com/p/0", "http://site1.example.org/p/0")
+    val o = CrawlOracle.run(corpus, rules,
+      CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 2))
+    val df = corpusDf(corpus)
+    val root = tmpDir("bankimages")
+    def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 2,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4)
+    val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
+    assert(m1.size == 3)
+    // every tag matches the current format (seen_version, bank_format 3,
+    // buckets), but no image parses as bloom: the import must fail and
+    // fall back to the rebuild instead of failing the first probe
+    val t = CrawlJob.tables(root, spark)
+    val counts = t.filters.read().select("bucket", "n").as[(Int, Long)].collect()
+    assert(counts.length == cfgJob(64).seenBuckets && counts.map(_._2).sum > 0L)
+    val badImage = Array.fill[Byte](64)(9)
+    t.filters.replace(counts.toSeq.map { case (i, n) => (i, badImage, n) }
+        .toDF("bucket", "image", "n"),
+      Map("seen_version" -> t.seen.currentVersion.toLong, "bank_format" -> 3L,
+        "buckets" -> counts.length.toLong))
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
     assertEquivalent(o, root, m1 ++ m2)
   }

@@ -154,7 +154,7 @@ class IceLiteSpec extends AnyFunSuite {
     val df = spark.createDataset(corpus).toDF()
     val root = Files.createTempDirectory("graft-expire-crawl").toString
     def jobCfg(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 3,
-      maxWaves = waves, numPartitions = 4, saltBuckets = 4, bloomItems = 100000L,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4,
       snapshotKeep = 3)
     val m1 = CrawlJob.run(spark, df, rules, jobCfg(2), root)
     val m2 = CrawlJob.run(spark, df, rules, jobCfg(64), root) // resume past expiry

@@ -168,7 +168,7 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val seen = new graft.plans.SeenState(spark, buckets = 4,
-        expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+        fpp = 0.01, compactAt = 8)
       seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
         col("id").cast("string").as("url")))
       // two more pieces → a 3-join chain

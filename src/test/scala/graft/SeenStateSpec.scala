@@ -1,11 +1,14 @@
 package graft
 
+import graft.functions.LongMembership
 import graft.plans.SeenState
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit gates for the bucketed LSM seen state: saturation-aware filter
-  * resizing, piece compaction, the prefilter no-false-negative contract,
+/** Unit gates for the bucketed LSM seen state: per-piece filter images
+  * (sized from each piece's rows, rebuilt once when a bucket outgrows the
+  * guess), piece compaction, the prefilter no-false-negative contract,
   * and the empty bootstrap — the properties the 10^10 design hangs on
   * (exactness itself is prefilter-independent and covered by
   * CrawlEquivalenceSpec). */
@@ -15,25 +18,71 @@ class SeenStateSpec extends AnyFunSuite {
   private def hashes(from: Long, until: Long) =
     spark.range(from, until).select(xxhash64(col("id")).as("url_hash"))
 
-  test("filters resize past saturation and keep the no-false-negative contract") {
-    val s = new SeenState(spark, buckets = 4,
-      expectedItems = 4096L, fpp = 0.01, compactAt = 100)
-    val cap0 = s.capacityPerBucket
-    s.bootstrap(hashes(0, 1000))
-    s.addWave(hashes(1000, 3000))
-    s.addWave(hashes(3000, 9000)) // ~2250/bucket > 1024 → resize
-    assert(s.resizes >= 1, s"expected a resize, cap=${s.capacityPerBucket}")
-    assert(s.capacityPerBucket > cap0)
-    assert(s.totalSeen == 9000L)
-    // every inserted hash must still probe positive after the rebuild
-    val pf = s.prefilter
-    val all = hashes(0, 9000).collect().map(_.getLong(0))
-    assert(all.forall(pf.mightContain), "false negative after resize")
-    // and the exact anti-join agrees with set-minus
-    val got = s.antiJoin(hashes(8000, 10000)).collect().map(_.getLong(0)).toSet
-    val byId = spark.range(0, 10000).select(col("id"), xxhash64(col("id")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == (9000L until 10000L).map(byId).toSet)
+  /** The hashes of ids in [from, until) that fall in bucket 0 of 4: a
+    * wave this skewed outgrows its max(1024, 2n/B) per-bucket guess. */
+  private def inBucket0(from: Long, until: Long) =
+    hashes(from, until).filter(pmod(hash(col("url_hash")), lit(4)) === 0)
+
+  private def longs(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+
+  private def dirOf(face: LongMembership): String = face match {
+    case fb: LongMembership.FileBank => fb.dir
+    case other => fail(s"piece broadcast is ${other.getClass.getSimpleName}, want FileBank")
+  }
+
+  private def imageBytes(dir: String, buckets: Int): Long =
+    (0 until buckets).map(b =>
+      Option(LongMembership.loadBucketBytes(dir, b)).map(_.length.toLong).getOrElse(0L)).sum
+
+  test("per-piece filters: an outgrown bucket guess keeps no false negatives") {
+    val s = new SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 100)
+    try {
+      s.bootstrap(hashes(0, 1000))
+      s.addWave(hashes(1000, 3000))
+      // ~3000 rows all in bucket 0: twice its 1500/bucket guess, so the
+      // piece's images are rebuilt from the exact count
+      val skew = inBucket0(10000, 22000)
+      s.addWave(skew)
+      val seen = hashes(0, 3000).unionByName(skew)
+      val seenSet = longs(seen)
+      assert(s.totalSeen == seenSet.size.toLong)
+      // every inserted hash must probe positive across the pieces
+      assert(seen.select(s.probe(col("url_hash")).as("m")).collect().forall(_.getBoolean(0)),
+        "false negative in the outgrown piece")
+      // and the exact anti-join agrees with set-minus
+      val cands = hashes(2000, 4000).unionByName(inBucket0(21000, 23000))
+      assert(longs(s.antiJoin(cands)) == longs(cands) -- seenSet)
+    } finally s.close()
+  }
+
+  test("per-piece filters: no false negatives across mixed waves and a compaction") {
+    val s = new SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 4)
+    try {
+      def allPositive(df: DataFrame): Boolean =
+        df.select(s.probe(col("url_hash")).as("m")).collect().forall(_.getBoolean(0))
+      // waves of 250, 2000, 500 and 1000 rows: five pieces with the
+      // bootstrap, so the stack compacts on the way
+      val waves = Seq(hashes(1000, 1250), hashes(1250, 3250), hashes(3250, 3750),
+        hashes(3750, 4750))
+      s.bootstrap(hashes(0, 1000))
+      var seen = hashes(0, 1000)
+      waves.foreach { w =>
+        s.addWave(w)
+        seen = seen.unionByName(w)
+        assert(s.pieceCount < 4, s"probe depth ${s.pieceCount} past compactAt - 1")
+        assert(allPositive(seen), "false negative")
+      }
+      assert(s.compactions >= 1)
+      val seenSet = longs(seen)
+      assert(s.totalSeen == seenSet.size.toLong)
+      // the exact anti-join agrees with set-minus
+      val cands = hashes(4000, 6000)
+      assert(longs(s.antiJoin(cands)) == longs(cands) -- seenSet)
+      // the pieces' probe must still prefilter: unseen hashes mostly negative
+      val fp = hashes(100000, 101000).select(s.probe(col("url_hash")).as("m"))
+        .collect().count(_.getBoolean(0))
+      assert(fp < 200, s"prefilter selectivity collapsed: $fp/1000 false positives")
+    } finally s.close()
   }
 
   test("graft_bloom_agg buffers merge with driver filters sized past Spark's 4M clamp") {
@@ -41,9 +90,9 @@ class SeenStateSpec extends AnyFunSuite {
     // to spark.sql.optimizer.runtime.bloomFilter.maxNumItems (4M) while
     // keeping the caller's bit count — past 4M capacity its buffers get a
     // different hash-function count than BloomFilter.create(items, fpp)
-    // and mergeInPlace throws IncompatibleMergeException. Buckets resize
-    // PAST 4M by design, so the engine's own aggregate must track the
-    // exact (items, fpp) sizing. Capacity (not item count) triggers the
+    // and mergeInPlace throws IncompatibleMergeException. A piece's bucket
+    // images pass 4M items at scale, so the engine's own aggregate must
+    // track the exact (items, fpp) sizing. Capacity (not item count) triggers the
     // bug, so this is cheap: 1k rows aggregated at 8M capacity.
     val cap = 8L * 1000 * 1000
     val img = hashes(0, 1000)
@@ -56,52 +105,20 @@ class SeenStateSpec extends AnyFunSuite {
     assert(all.forall(driverSide.mightContainLong), "false negative after merge")
   }
 
-  test("layered probe (base + wave deltas) has no false negatives across rebase and resize") {
-    val s = new SeenState(spark, buckets = 4,
-      expectedItems = 4096L, fpp = 0.01, compactAt = 100)
-    def allPositive(from: Long, until: Long): Boolean =
-      hashes(from, until).select(s.probe(col("url_hash")).as("m"))
-        .collect().forall(_.getBoolean(0))
-    s.bootstrap(hashes(0, 1000))          // base broadcast #1
-    assert(s.deltaLayers == 0)
-    // RebaseEvery waves of 250 rows: ~750 rows per bucket at the end, under
-    // the 1024 cap, so the deltas fold by rebase, never by resize
-    val n = SeenState.RebaseEvery
-    def wave(i: Int): (Long, Long) = (1000L + 250L * i, 1250L + 250L * i)
-    s.addWave(hashes(wave(0)._1, wave(0)._2), knownCount = 250L) // delta 1, one-pass path
-    assert(s.deltaLayers == 1 && allPositive(0, wave(0)._2))
-    (1 until n - 1).foreach(i => s.addWave(hashes(wave(i)._1, wave(i)._2))) // two-pass path
-    assert(s.deltaLayers == n - 1 && s.rebases == 0 && allPositive(0, wave(n - 2)._2))
-    s.addWave(hashes(wave(n - 1)._1, wave(n - 1)._2)) // delta n -> rebase folds them
-    assert(s.deltaLayers == 0 && s.rebases >= 1, "expected a rebase at RebaseEvery")
-    assert(s.resizes == 0)
-    val end = wave(n - 1)._2
-    assert(allPositive(0, end))
-    s.addWave(hashes(end, 9000))          // > cap -> resize, which rebases
-    assert(s.resizes >= 1 && s.deltaLayers == 0)
-    assert(allPositive(0, 9000), "false negative after resize rebase")
-    // the layered probe must still prefilter: unseen hashes mostly negative
-    val fp = hashes(100000, 101000).select(s.probe(col("url_hash")).as("m"))
-      .collect().count(_.getBoolean(0))
-    assert(fp < 200, s"prefilter selectivity collapsed: $fp/1000 false positives")
-    s.close()
-  }
-
   test("filter bank export/import: resumed state probes and anti-joins identically") {
     val a = new SeenState(spark, buckets = 4,
-      expectedItems = 4096L, fpp = 0.01, compactAt = 100)
+      fpp = 0.01, compactAt = 100)
     a.bootstrap(hashes(0, 2000))
-    a.addWave(hashes(2000, 6000), knownCount = 4000L) // forces a resize past cap0
+    a.addWave(hashes(2000, 6000)) // two pieces: the export merges them in one pass
     val bank = a.bankDf()
-    val cap = a.capacityPerBucket
     val counts = bank.select("bucket", "n").collect().map(r => (r.getInt(0), r.getLong(1)))
     assert(counts.map(_._1).sorted.toSeq == (0 until 4) && counts.map(_._2).sum == 6000L)
 
     val b = new SeenState(spark, buckets = 4,
-      expectedItems = 4096L, fpp = 0.01, compactAt = 100)
+      fpp = 0.01, compactAt = 100)
     // the bank frame reads a's bank files: import before a closes
-    b.bootstrapFromBank(hashes(0, 6000), bank, cap)
-    assert(b.capacityPerBucket == cap && b.totalSeen == 6000L)
+    b.bootstrapFromBank(hashes(0, 6000), bank)
+    assert(b.totalSeen == 6000L && b.pieceCount == 1)
     // no false negative: every seen hash probes positive on the resumed bank
     val pos = hashes(0, 6000).select(b.probe(col("url_hash")).as("m")).collect()
     assert(pos.forall(_.getBoolean(0)), "false negative after import")
@@ -115,7 +132,7 @@ class SeenStateSpec extends AnyFunSuite {
 
   test("piece stack compacts (anti-join chain length stays bounded)") {
     val s = new SeenState(spark, buckets = 4,
-      expectedItems = 100000L, fpp = 0.01, compactAt = 4)
+      fpp = 0.01, compactAt = 4)
     s.bootstrap(hashes(0, 100))
     (1 to 6).foreach(i => s.addWave(hashes(i * 100L, i * 100L + 100)))
     assert(s.compactions >= 1)
@@ -134,10 +151,10 @@ class SeenStateSpec extends AnyFunSuite {
     // runs, so the base piece must survive the whole run untouched and
     // the background shuffle volume stays ∝ Σwaves·log, not ∝ seen·waves.
     val s = new SeenState(spark, buckets = 4,
-      expectedItems = 100000L, fpp = 0.01, compactAt = 6)
+      fpp = 0.01, compactAt = 6)
     s.bootstrap(hashes(0, 50000))
     (0 until 30).foreach { i =>
-      s.addWave(hashes(50000L + i * 1000L, 50000L + (i + 1) * 1000L), 1000L)
+      s.addWave(hashes(50000L + i * 1000L, 50000L + (i + 1) * 1000L))
       assert(s.pieceCount < 6 || s.pieceCount == s.pieceSizesView.size,
         "piece bookkeeping out of sync")
     }
@@ -161,7 +178,7 @@ class SeenStateSpec extends AnyFunSuite {
   test("bootstrap over an empty seen table passes every candidate through") {
     import spark.implicits._
     val s = new SeenState(spark, buckets = 4,
-      expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+      fpp = 0.01, compactAt = 8)
     try {
       // the frame a fresh crawl bootstraps from
       s.bootstrap(spark.emptyDataset[graft.model.SeenUrl].toDF())
@@ -170,7 +187,7 @@ class SeenStateSpec extends AnyFunSuite {
       assert(got == want)
       assert(s.pieceCount == 0 && s.totalSeen == 0L)
       // the first wave creates the first piece; later probes dedup against it
-      s.addWave(hashes(0, 500), 500L)
+      s.addWave(hashes(0, 500))
       assert(s.pieceCount == 1)
       val next = s.freshAndConfirmed(hashes(250, 750)).collect().map(_.getLong(0)).toSet
       assert(next == hashes(500, 750).collect().map(_.getLong(0)).toSet)
@@ -179,7 +196,7 @@ class SeenStateSpec extends AnyFunSuite {
 
   test("bucketed probe routes negative hashes correctly (partition-aligned buckets)") {
     val s = new SeenState(spark, buckets = 8,
-      expectedItems = 10000L, fpp = 0.01, compactAt = 8)
+      fpp = 0.01, compactAt = 8)
     // xxhash64 produces negative longs ~half the time; bootstrap + probe
     // must agree on the bucket for those
     s.bootstrap(hashes(0, 4000))
@@ -206,59 +223,72 @@ class SeenStateSpec extends AnyFunSuite {
   }
 
   test("per-wave filter maintenance is O(wave): delta-only builds, bank untouched") {
-    val s = new SeenState(spark, buckets = 4,
-      expectedItems = 800000L, fpp = 0.01, compactAt = 100)
-    s.bootstrap(hashes(0, 200000)) // bank capacity 200k/bucket
-    val bankBytes = (0 until 4).map { b =>
-      graft.functions.LongMembership.loadBucketBytes(s.currentBankDir, b).length.toLong
-    }.sum
-    s.addWave(hashes(200000, 201000), knownCount = 1000L) // 1k-row wave
-    val waveBytes = s.lastWaveCollectedFilterBytes
-    assert(waveBytes > 0L)
-    assert(waveBytes * 10 < bankBytes,
-      s"wave collected $waveBytes bytes vs bank $bankBytes — not delta-sized")
-    // proportionality: a 10x wave collects ~10x, never bank-sized
-    s.addWave(hashes(201000, 211000), knownCount = 10000L)
-    val waveBytes10 = s.lastWaveCollectedFilterBytes
-    assert(waveBytes10 < bankBytes / 4,
-      s"10x wave collected $waveBytes10 vs bank $bankBytes")
-    // no false negatives across the delta layers
-    val pos = hashes(199000, 211000).select(s.probe(col("url_hash")).as("m")).collect()
-    assert(pos.forall(_.getBoolean(0)), "false negative across bank+delta layers")
-    s.close()
+    val s = new SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 100)
+    try {
+      s.bootstrap(hashes(0, 200000)) // images sized for 100k/bucket
+      val baseDir = dirOf(s.pieceFaces.head)
+      val baseBytes = imageBytes(baseDir, 4)
+      def baseFiles = (0 until 4).map { b =>
+        val p = java.nio.file.Paths.get(s"$baseDir/bucket_$b.bin")
+        (java.nio.file.Files.readAllBytes(p).toSeq, java.nio.file.Files.getLastModifiedTime(p))
+      }
+      val before = baseFiles
+      s.addWave(hashes(200000, 201000)) // 1k-row wave
+      val waveBytes = imageBytes(dirOf(s.pieceFaces(1)), 4)
+      assert(waveBytes > 0L)
+      assert(waveBytes * 10 < baseBytes,
+        s"wave piece holds $waveBytes image bytes vs bootstrap $baseBytes — not wave-sized")
+      // proportionality: a 10x wave builds ~10x, never seen-sized
+      s.addWave(hashes(201000, 211000))
+      val waveBytes10 = imageBytes(dirOf(s.pieceFaces(2)), 4)
+      assert(waveBytes10 < baseBytes / 4,
+        s"10x wave piece holds $waveBytes10 vs bootstrap $baseBytes")
+      // the folds never touch the bootstrap piece's images
+      assert(dirOf(s.pieceFaces.head) == baseDir && baseFiles == before,
+        "a wave fold rewrote the bootstrap piece's images")
+      // no false negatives across the pieces
+      val pos = hashes(199000, 211000).select(s.probe(col("url_hash")).as("m")).collect()
+      assert(pos.forall(_.getBoolean(0)), "false negative across the pieces")
+    } finally s.close()
   }
 
-  test("base probe broadcast carries paths, not filter images (no O(seen) broadcast)") {
-    val s = new SeenState(spark, buckets = 4,
-      expectedItems = 400000L, fpp = 0.01, compactAt = 100)
-    s.bootstrap(hashes(0, 100000))
-    s.baseFace match {
-      case fb: graft.functions.LongMembership.FileBank =>
-        assert(fb.buckets == 4 && fb.dir == s.currentBankDir && fb.dir != null)
-      case other => fail(s"base broadcast is ${other.getClass.getSimpleName}, want FileBank")
-    }
-    s.close()
+  test("every piece's probe broadcast carries a path, not filter images") {
+    val s = new SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 100)
+    try {
+      s.bootstrap(hashes(0, 100000))
+      s.addWave(hashes(100000, 101000))
+      val faces = s.pieceFaces
+      assert(faces.size == 2)
+      faces.foreach {
+        case fb: LongMembership.FileBank =>
+          assert(fb.buckets == 4 && fb.dir != null && fb.dir.startsWith(s.instanceDir))
+        case other => fail(s"piece broadcast is ${other.getClass.getSimpleName}, want FileBank")
+      }
+      assert(faces.map(dirOf).distinct.size == 2, "pieces must not share an image dir")
+    } finally s.close()
   }
 
   test("under-sized delta guess: no false negatives, FPP held by the re-size") {
     val fpp = 0.01
-    val s = new SeenState(spark, buckets = 4,
-      expectedItems = 400000L, fpp = fpp, compactAt = 100)
-    s.bootstrap(hashes(0, 1000))
-    // a wave whose knownCount-based sizing guess (2*n/B) falls far below
-    // the real per-bucket cardinality: lie about the count
-    s.addWave(hashes(1000, 9000), knownCount = 100L) // guess 1024/bucket, real ~2000
-    assert(s.resizes == 0 && s.deltaLayers == 1, "the wave must ride as a delta layer")
-    val all = hashes(0, 9000).select(s.probe(col("url_hash")).as("m")).collect()
-    assert(all.forall(_.getBoolean(0)), "false negative in the under-guessed delta layer")
-    // a delta kept at the 1024/bucket guess with ~2000 rows per bucket
-    // reads near 15% here; buildDelta's re-size holds the configured FPP
-    val fresh = 100000
-    val fp = hashes(1000000L, 1000000L + fresh)
-      .select(s.probe(col("url_hash")).as("m")).collect().count(_.getBoolean(0))
-    assert(fp.toDouble / fresh <= 3 * fpp,
-      s"fresh-key positive rate ${fp.toDouble / fresh} exceeds 3 × fpp $fpp")
-    s.close()
+    val s = new SeenState(spark, buckets = 4, fpp = fpp, compactAt = 100)
+    try {
+      s.bootstrap(hashes(0, 1000))
+      // ~4000 rows, all in bucket 0: the max(1024, 2n/B) guess is ~2000,
+      // half that bucket's real count
+      val skew = inBucket0(1000, 17000)
+      s.addWave(skew)
+      val all = hashes(0, 1000).unionByName(skew)
+        .select(s.probe(col("url_hash")).as("m")).collect()
+      assert(all.forall(_.getBoolean(0)), "false negative in the under-guessed piece")
+      // an image kept at the guess with twice its rows reads near 15% here;
+      // the rebuild at twice the exact count holds the configured FPP
+      val wavePiece = s.pieceFaces(1)
+      val fresh = hashes(1000000L, 1400000L).collect().map(_.getLong(0))
+        .filter(LongMembership.bucketOf(_, 4) == 0)
+      val fp = fresh.count(wavePiece.mightContain)
+      assert(fp.toDouble / fresh.length <= 3 * fpp,
+        s"fresh-key positive rate ${fp.toDouble / fresh.length} exceeds 3 × fpp $fpp")
+    } finally s.close()
   }
 
   test("freshAndConfirmed large-wave path: shared candidate cache, same result, freed at boundary") {
@@ -267,7 +297,7 @@ class SeenStateSpec extends AnyFunSuite {
     // exchange twice on this union shape — r6 kernel finding); the hint is
     // caller-provided, so the path is exercised directly at test scale
     val s = new SeenState(spark, buckets = 4,
-      expectedItems = 40000L, fpp = 0.01, compactAt = 8)
+      fpp = 0.01, compactAt = 8)
     try {
       s.bootstrap(hashes(0, 3000))
       s.addWave(hashes(3000, 4000))
@@ -297,7 +327,7 @@ class SeenStateSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val s = new SeenState(spark, buckets = 4,
-        expectedItems = 40000L, fpp = 0.01, compactAt = 8)
+        fpp = 0.01, compactAt = 8)
       s.bootstrap(hashes(0, 3000))
       s.addWave(hashes(3000, 4000))
       val out = s.freshAndConfirmed(hashes(2000, 6000))

@@ -83,16 +83,17 @@ class StateIOSpec extends AnyFunSuite {
   test("SeenState with a file:// bank root: executor-written images probe correctly") {
     val root = fileUri("bank")
     val seen = new SeenState(spark, buckets = 8,
-      expectedItems = 10000L, fpp = 0.01, compactAt = 8, bankRoot = s"$root/seen_bank")
+      fpp = 0.01, compactAt = 8, bankRoot = s"$root/seen_bank")
     try {
       def hashes(a: Long, b: Long) =
         spark.range(a, b).select(xxhash64(col("id")).as("url_hash"),
           col("id").cast("string").as("url"))
       seen.bootstrap(hashes(0, 2000))
-      seen.addWave(hashes(2000, 2500).select("url_hash"), 500L)
-      // the bank dir really lives under the URI root (Hadoop-written)
-      assert(seen.currentBankDir.startsWith("file://"),
-        s"bank dir not on the URI root: ${seen.currentBankDir}")
+      seen.addWave(hashes(2000, 2500).select("url_hash"))
+      // every piece's image dir really lives under the URI root (Hadoop-written)
+      val dirs = seen.pieceFaces.collect { case fb: graft.functions.LongMembership.FileBank => fb.dir }
+      assert(dirs.size == 2 && dirs.forall(_.startsWith("file://")),
+        s"image dirs not on the URI root: $dirs")
       val cands = spark.range(1000, 3000)
         .select(xxhash64(col("id")).as("url_hash"))
       val fresh = seen.freshAndConfirmed(cands).select("url_hash").collect().map(_.getLong(0)).toSet

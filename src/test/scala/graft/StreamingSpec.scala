@@ -158,8 +158,7 @@ class StreamingSpec extends AnyFunSuite {
       val root = java.nio.file.Files.createTempDirectory(s"graft-midstream-$tag").toString
       val seedsA = Seq("http://site1.example.org/p/0")
       def jobCfg(w: Int) = graft.plans.CrawlJob.Config(seedsA, onDomain = false,
-        hostBudget = 3, maxWaves = w, numPartitions = 2, saltBuckets = 2,
-        bloomItems = 100000L)
+        hostBudget = 3, maxWaves = w, numPartitions = 2, saltBuckets = 2)
       CrawlJob.run(spark, docs, rules, jobCfg(2), root) // phase 1: 2 waves
       // mid-crawl intake of seed B on another host (one micro-batch)
       val t = CrawlJob.tables(root, spark)
@@ -216,7 +215,7 @@ class StreamingSpec extends AnyFunSuite {
     var injectedAtWave = -1
     try {
       val jobCfg = CrawlJob.Config(Seq(seedA), hostBudget = 3, maxWaves = 64,
-        numPartitions = 2, saltBuckets = 2, bloomItems = 100000L,
+        numPartitions = 2, saltBuckets = 2,
         onWaveEnd = w => if (w == 1) {
           input.addData(("idx", seedB, false, "eng", "elasticsearch",
             Timestamp.valueOf("2024-01-01 00:00:00"), 0L))
@@ -238,7 +237,7 @@ class StreamingSpec extends AnyFunSuite {
     // — the concurrent run must be state-identical
     val rootB = java.nio.file.Files.createTempDirectory("graft-conc-twin").toString
     def jobCfgB(w: Int) = CrawlJob.Config(Seq(seedA), hostBudget = 3, maxWaves = w,
-      numPartitions = 2, saltBuckets = 2, bloomItems = 100000L)
+      numPartitions = 2, saltBuckets = 2)
     CrawlJob.run(spark, docs, rules, jobCfgB(2), rootB)
     val tb = CrawlJob.tables(rootB, spark)
     StreamOps.enqueueSeedBatch(tb.inbox)(
@@ -265,7 +264,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((u, graft.functions.UrlOps.urlHash64(u), host, 0, 0L, seq))
         .toDF("url", "url_hash", "host", "depth", "parent_ord", "link_index")
     def jobCfg(w: Int) = CrawlJob.Config(Seq(seedA), hostBudget = 3, maxWaves = w,
-      numPartitions = 2, saltBuckets = 2, bloomItems = 100000L)
+      numPartitions = 2, saltBuckets = 2)
     CrawlJob.run(spark, docs, rules, jobCfg(2), root)
     val t = CrawlJob.tables(root, spark)
     // intake enqueues seed B (inbox vB)...
