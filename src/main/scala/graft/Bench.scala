@@ -7,7 +7,6 @@ import graft.streaming.StreamOps
 import graft.synth.Corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 
 import java.nio.file.{Files, Paths}
 
@@ -17,7 +16,7 @@ import java.nio.file.{Files, Paths}
   * (30% aimed at one hot host, 25% overlapping an M-row pre-seeded seen
   * set) pushed through the engine's schedule+dedup kernel
   * ([[FrontierKernel]]: two-phase salted politeness top-k → visit-id
-  * assignment → bloom-prefiltered exact dedup → robots predicate).
+  * assignment → exact bucketed dedup → robots predicate).
   *
   * Also reported:
   *  - "queries": per-query seconds for the relational battery;

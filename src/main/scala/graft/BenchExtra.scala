@@ -157,8 +157,7 @@ object BenchExtra {
         import org.apache.spark.sql.functions._
         val sizes = Seq(16000000L, 160000000L)
         sizes.foreach { n =>
-          val seen = new graft.plans.SeenState(spark, buckets = cpus * 2,
-            fpp = 0.01, compactAt = 8)
+          val seen = new graft.plans.SeenState(spark, buckets = cpus * 2, compactAt = 8)
           val seenDf = spark.range(0, n, 1, cpus * 2)
             .select(xxhash64(concat(lit("http://h"), pmod(col("id"), lit(1000)),
               lit(".example.org/p/"), col("id"))).as("url_hash"))
@@ -189,44 +188,6 @@ object BenchExtra {
           seen.close()
           spark.catalog.clearCache()
         }
-      case "reuse" =>
-        // diagnose AQE exchange reuse over freshAndConfirmed's two branches
-        // for (a) a plain deterministic input, (b) a persisted input whose
-        // plan contains monotonically_increasing_id (the kernel's fetchSet
-        // shape) — prints whether ReusedExchange appears in the final plan
-        import org.apache.spark.sql.functions._
-        def check(tag: String, cands: org.apache.spark.sql.DataFrame): Unit = {
-          val seen = new graft.plans.SeenState(spark, buckets = 8,
-            fpp = 0.01, compactAt = 8)
-          try {
-            seen.bootstrap(spark.range(0, 50000)
-              .select(xxhash64(col("id")).as("url_hash"), col("id").cast("string").as("url")))
-            val out = seen.freshAndConfirmed(cands) // small path (no hint)
-            out.write.format("noop").mode("overwrite").save()
-            val plan = out.queryExecution.executedPlan.toString
-            val maps = plan.linesIterator.count(l =>
-              l.contains("Exchange hashpartitioning") && !l.contains("ReusedExchange"))
-            println(s"[reuse] $tag: exchanges=$maps reused=${plan.contains("ReusedExchange")}")
-          } finally seen.close()
-        }
-        val plain = spark.range(0, 200000).select(xxhash64(col("id")).as("url_hash"))
-        check("plain-range", plain)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        check("plain-range, noBroadcast", plain)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        check("plain-range, noAQE", plain)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        val ranked = graft.operators.Ranker.orderIsomorphicId(
-          spark.range(0, 200000).select(xxhash64(col("id")).as("url_hash"),
-            col("id").as("depth")),
-          Seq(col("depth")), "ord", 1L << 50, 8).persist()
-        ranked.count()
-        check("persisted-ranked (monotonic id)", ranked)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        check("persisted-ranked, noBroadcast", ranked)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ranked.unpersist()
       case other => sys.error(s"unknown mode $other")
     }
     spark.stop()

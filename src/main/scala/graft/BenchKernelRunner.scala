@@ -108,7 +108,7 @@ object BenchKernelRunner {
   }
 
   /** One kernel pass; returns (wallSec, urlsProcessed = scheduled+deduped).
-    * Inputs AND the seen-state bootstrap (bucket pieces + filters) are
+    * Inputs AND the seen-state bootstrap (bucket pieces) are
     * materialized outside the clock — they are amortized crawl state.
     * `ruledHosts` > 64 routes politeness + robots through the
     * size-adaptive JOINED policy instead of the compiled chain. */
@@ -118,7 +118,7 @@ object BenchKernelRunner {
     val frontier = frontierDf(spark, n, parts).persist()
     frontier.count()
     val seenHashes = seenDf(spark, n, parts, seenFactor)
-    val seen = new SeenState(spark, buckets = parts, fpp = 0.01, compactAt = 8)
+    val seen = new SeenState(spark, buckets = parts, compactAt = 8)
     seen.bootstrap(seenHashes)
     val policy =
       if (ruledHosts == 16) graft.operators.Robots.policy(benchRules, spark)

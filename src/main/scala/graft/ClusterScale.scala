@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * `local-cluster[execs,cores,memMB]` master, which launches each
   * executor as a SEPARATE JVM process (Spark's own standalone-mode test
   * harness) — unlike `local[k]`, shuffle blocks move between processes
-  * over the block-transfer service and every task closure, broadcast,
-  * and FileBank bucket image crosses a real process boundary.
+  * over the block-transfer service and every task closure and broadcast
+  * crosses a real process boundary.
   *
   * Levels: N executors and 4N executors, SAME per-executor shape
   * (cores, memory), same input rows, INTERLEAVED per rep (low, high,

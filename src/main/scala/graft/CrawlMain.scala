@@ -207,7 +207,8 @@ object CrawlMain {
       else {
         val rulesDf = spark.read.parquet(robotsPath)
           .select(col("host"), col("path_prefix"), col("allow"), col("crawl_delay"))
-        CrawlJob.runWithRulesDf(spark, docs, rulesDf, jobCfg, state)
+        CrawlJob.runWithPolicy(spark, docs,
+          graft.operators.Robots.policyFromDf(rulesDf), jobCfg, state)
       }
 
     intake.foreach(q => scala.util.Try(q.stop()))

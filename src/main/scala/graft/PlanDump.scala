@@ -34,49 +34,25 @@ object PlanDump {
           org.apache.spark.sql.functions.col("link_index")), "ord", 0L, 4)
     }
 
-    // The LSM seen-state anti-join (SURVEY §7.5(4)): candidates exchange
-    // ONCE into the bucket partitioning, then the whole piece chain joins
-    // with zero further exchanges and zero sorts on the seen side (the
-    // pieces are retained pre-partitioned + pre-sorted). AQE's final plan
-    // is what matters, so execute before dumping.
+    // The wave dedup (SeenState.freshAndConfirmed, SURVEY §7.5(4)):
+    // candidates exchange ONCE into the bucket partitioning, then the whole
+    // left-anti chain over the pieces joins with zero further exchanges and
+    // zero sorts on the seen side (the pieces are retained pre-partitioned
+    // + pre-sorted). AQE's final plan is what matters, so execute before
+    // dumping.
     val seenPlan = {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 8)
+      val seen = new plans.SeenState(spark, buckets = 4, compactAt = 8)
       try {
         seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
           col("id").cast("string").as("url")))
         seen.addWave(spark.range(1000, 1200).select(xxhash64(col("id")).as("url_hash")))
         seen.addWave(spark.range(1200, 1400).select(xxhash64(col("id")).as("url_hash")))
-        val out = seen.antiJoin(
-          spark.range(500, 2000).select(xxhash64(col("id")).as("url_hash")))
-        out.collect() // force the final AQE plan
-        out.queryExecution.explainString(FormattedMode)
-      } finally {
-        seen.close() // ADVICE r3: must run even when collect/explain throws
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      }
-    }
-
-    // The production wave-dedup plan (SeenState.freshAndConfirmed): ONE
-    // candidate exchange into the bucket partitioning, THEN the pieces'
-    // prefilter probe (MightContainLong over one FileBank broadcast per
-    // piece) runs post-exchange — task p faults in only bucket p's
-    // images, so executor residency is O(seen/B). Filter-negatives skip
-    // the exact anti-join chain entirely.
-    val probePlan = {
-      import org.apache.spark.sql.functions.{col, xxhash64}
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val seen = new plans.SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 8)
-      try {
-        seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
-          col("id").cast("string").as("url")))
-        seen.addWave(spark.range(1000, 1200).select(xxhash64(col("id")).as("url_hash")))
         val out = seen.freshAndConfirmed(
           spark.range(500, 2000).select(xxhash64(col("id")).as("url_hash")))
-        out.collect()
+        out.collect() // force the final AQE plan
         out.queryExecution.explainString(FormattedMode)
       } finally {
         seen.close() // ADVICE r3: must run even when collect/explain throws
@@ -158,25 +134,15 @@ object PlanDump {
         "Both small sides (centroids, query set) broadcast; the vector " +
           "table shuffles only for its per-vector window.",
         fmt(SparkEntry.queries("a4_ann_ivf_topk")(spark, sfDir))),
-      ("seen-state anti-join (3-piece LSM chain) — one candidate-side exchange",
+      ("wave dedup (freshAndConfirmed, 3-piece LSM chain) — one candidate-side exchange",
         "The wave's candidates exchange once into the url_hash bucket " +
           "partitioning; every left-anti join in the piece chain then reuses " +
           "it — the seen side shows NO Exchange and NO Sort (pieces are " +
           "retained pre-partitioned + pre-sorted), so bytes shuffled per " +
-          "wave are O(candidates), never O(seen). PlanShapeSpec asserts " +
-          "exchanges==1 and sorts==1 on this exact plan.",
+          "wave are O(candidates), never O(seen). The dedup is exact: no " +
+          "approximate prefilter sits in front of the chain. PlanShapeSpec " +
+          "asserts exchanges==1 and sorts==1 on this exact plan.",
         seenPlan),
-      ("wave dedup probe (freshAndConfirmed) — post-exchange O(seen/B) probe",
-        "The pieces' prefilter (one FileBank broadcast per seen piece, " +
-          "`might_contain_any`) filters AFTER the candidate bucket " +
-          "exchange: the Filter sits above the Exchange, so task p faults " +
-          "in only bucket p's images — executor residency is " +
-          "O(seen/B), and each broadcast carries only a dir path, " +
-          "never filter bytes (SeenStateSpec asserts the FileBank " +
-          "payload). Filter-negatives ('provably unseen') bypass the " +
-          "exact anti-join chain; positives confirm against the " +
-          "pre-partitioned pieces with zero seen-side exchange.",
-        probePlan),
       ("joined robots past the broadcast cutover — shuffle-hash rules join",
         "Above Robots.MaxBroadcastHosts (2^16) packed rows, the rules join " +
           "on host is a ShuffledHashJoin — NO BroadcastExchange/" +

@@ -96,55 +96,6 @@ object UrlExpressions {
     override protected def withNewChildInternal(c: Expression): UrlHost = copy(c)
   }
 
-  /** `might_contain_long(hash)` — probe of broadcast approximate-
-    * membership LAYERS (one per seen piece), as a native expression so
-    * the probe stays inside whole-stage codegen. A hash is "maybe seen"
-    * if ANY layer claims it (short-circuit `||`). The layers are
-    * SEPARATE broadcasts on purpose: each carries only its piece's image
-    * path, so a new piece ships one small broadcast and the older ones
-    * are never re-shipped — per-wave driver→executor bytes are O(1) per
-    * piece, never O(seen) (SeenState). The Scala-UDF
-    * alternative boxes every hash and breaks the codegen span around the
-    * dedup prefilter — the hottest path of the engine (SURVEY §2.3 D3). */
-  case class MightContainLong(
-      child: Expression,
-      sets: Seq[org.apache.spark.broadcast.Broadcast[LongMembership]])
-    extends UnaryExpression {
-    require(sets.nonEmpty, "at least one membership layer")
-    // Deliberate pushdown barrier, NOT actual nondeterminism: the probe is
-    // pure for a fixed layer set, but letting Catalyst push it below the
-    // candidate repartition(B, url_hash) (or infer it onto the seen-piece
-    // side of the anti-join) breaks the scale contract twice over — the
-    // pre-exchange probe touches every bucket in every task (O(seen)
-    // resident per executor instead of O(seen/B)), the differing
-    // fresh/maybe filters stop the two branches sharing one reused
-    // exchange, and the inferred piece-side filter re-evaluates the probe
-    // over the WHOLE seen set each wave.
-    override lazy val deterministic: Boolean = false
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(v: Any): Any = {
-      val h = v.asInstanceOf[Long]
-      sets.exists(_.value.mightContain(h))
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val refs = sets.map(s => ctx.addReferenceObj("membershipBc", s,
-        classOf[org.apache.spark.broadcast.Broadcast[_]].getName))
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = " + refs.map(r =>
-          s"((graft.functions.LongMembership)$r.value()).mightContain($c)")
-          .mkString(" || ") + ";")
-    }
-    override protected def withNewChildInternal(c: Expression): MightContainLong = copy(child = c)
-  }
-
-  def might_contain_long(c: Column,
-      set: org.apache.spark.broadcast.Broadcast[LongMembership]): Column =
-    column(MightContainLong(expression(c), Seq(set)))
-
-  def might_contain_any(c: Column,
-      sets: Seq[org.apache.spark.broadcast.Broadcast[LongMembership]]): Column =
-    column(MightContainLong(expression(c), sets))
-
   // Column-level API
   def canonicalize_url(c: Column): Column = column(CanonicalizeUrl(expression(c)))
   def resolve_url(base: Column, href: Column): Column =

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Pipeline = the same stages [[graft.plans.CrawlJob]] runs per wave:
   *  1. two-phase host-salted politeness top-k (hot-host skew defused);
   *  2. order-isomorphic visit-id assignment (no global window);
-  *  3. prefilter + exact dedup against the bucketed seen state
-  *     ([[SeenState]] — per-bucket filters, candidate-only exchange);
+  *  3. exact dedup against the bucketed seen state
+  *     ([[SeenState]] — candidate-only exchange, piece anti-join chain);
   *  4. robots predicate filter.
   */
 object FrontierKernel {
@@ -46,19 +46,15 @@ object FrontierKernel {
     val (fetchSet0, _) = Politeness.select(frontier, policy, hostBudget, saltBuckets,
       frontierHint = frontierTotal)
 
-    // 2. visit ids (persisted: the prefilter-split consumes it twice)
+    // 2. visit ids (persisted: counted here, then deduped)
     val fetchSet = Ranker.orderIsomorphicId(fetchSet0, priorityKeys, "ord",
       1L << 50, numPartitions).persist()
     val scheduled = fetchSet.count()
 
     // 3. dedup: one candidate exchange into the seen bucket partitioning,
-    // post-exchange per-piece prefilter (task p faults in only bucket p's
-    // images — O(seen/B) resident per executor; each piece's broadcast is
-    // one path), filter-negatives skip the exact anti-join
-    // chain; the seen pieces never re-shuffle (SeenState.freshAndConfirmed).
-    // The just-counted cardinality rides along so the large-wave path
-    // materializes the candidate exchange exactly once.
-    val newUrls = seen.freshAndConfirmed(fetchSet, scheduled)
+    // then the exact left-anti chain; the seen pieces never re-shuffle
+    // (SeenState.freshAndConfirmed)
+    val newUrls = seen.freshAndConfirmed(fetchSet)
 
     // 4. robots through the same size-adaptive policy face
     val path = coalesce(nullif(parse_url(col("url"), lit("PATH")), lit("")), lit("/"))

@@ -4,7 +4,7 @@ import graft.functions.UrlExpressions._
 import graft.functions.UrlOps
 import graft.model._
 import graft.operators.{DocExtract, Politeness, Ranker, Robots}
-import graft.sources.IceLite
+import graft.sources.{IceLite, StateIO}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,10 +22,10 @@ import scala.concurrent.duration.Duration
   *  - politeness top-k is two-phase host-salted: window over (host, salt)
   *    first, so a hot host (30% of the frontier) never lands in one task;
   *    the second window sees ≤ saltBuckets × budget rows per host;
-  *  - the URL-seen state is an LSM stack of hash-bucketed pieces with
-  *    per-piece, per-bucket bloom prefilters ([[SeenState]]): the wave
-  *    anti-join exchanges ONLY candidate rows — the seen side is
-  *    pre-partitioned once and never re-shuffled or re-read;
+  *  - the URL-seen state is an exact LSM stack of hash-bucketed pieces
+  *    ([[SeenState]]): the wave anti-join exchanges ONLY candidate rows —
+  *    the seen side is pre-partitioned once and never re-shuffled or
+  *    re-read;
   *  - parent ranks are order-isomorphic range-partitioned ids, never a
   *    global row_number (no single-partition stage anywhere in the wave);
   *  - each wave round-trips state through IceLite parquet: lineage
@@ -55,11 +55,11 @@ object CrawlJob {
       intakeActive: () => Boolean = () => false,
       onWaveEnd: Int => Unit = _ => ()) { // after wave w commits (tests/instrumentation)
     // fixed seen-state shape: members, not fields, so no caller sets them
-    // (bloomItems is read only by crawlbench, which still passes it to
-    // SeenState's unused expectedItems)
+    // (bloomItems and bloomFpp are read only by crawlbench, which still
+    // passes them to SeenState's unused expectedItems and fpp)
     val bloomItems: Long = 4L * 1000 * 1000
     val bloomFpp: Double = 0.01
-    val seenBuckets: Int = 32   // hash buckets for the seen LSM + bloom images
+    val seenBuckets: Int = 32   // hash buckets for the seen LSM
     val compactPieces: Int = 8  // LSM compaction threshold (anti-join chain bound)
   }
 
@@ -83,7 +83,8 @@ object CrawlJob {
     * Search shape is derived at read time from `docs` by
     * [[graft.operators.ExportOps.appsearchEnvelopes]]), but state roots
     * from older engines still carry it, so the resume trim and the expiry
-    * sweep keep covering it. */
+    * sweep keep covering it. `filters` is legacy too: older engines saved
+    * the seen state's bloom bank there; nothing reads or writes it now. */
   final case class Tables(
       frontier: IceLite.Table,
       seen: IceLite.Table,
@@ -146,14 +147,6 @@ object CrawlJob {
     runWithPolicy(spark, docsDf,
       Robots.policy(rules, spark), cfg, stateRoot)
 
-  /** Large-rule-table entry point: the rules stay distributed; the driver
-    * only ever sees the per-host packed broadcast (or a small collected
-    * Seq below the compile cutover). */
-  def runWithRulesDf(spark: SparkSession, docsDf: DataFrame, rulesDf: DataFrame,
-      cfg: Config, stateRoot: String): Seq[WaveMetrics] =
-    runWithPolicy(spark, docsDf,
-      Robots.policyFromDf(rulesDf), cfg, stateRoot)
-
   def runWithPolicy(spark: SparkSession, docsDf: DataFrame,
       policy: Robots.RobotsPolicy, cfg: Config, stateRoot: String): Seq[WaveMetrics] = {
     import spark.implicits._
@@ -179,17 +172,12 @@ object CrawlJob {
       _.trimWhile(s => s.counters.get("wave").exists(_ >= wave))
     }
 
-    // seen state: bucketed pieces, each with its own per-bucket bloom
-    // images, rebuilt from the durable table on (re)start, then fed one
-    // piece per wave. Image dirs live under the state root (shared
-    // storage, like every IceLite table) so executors can fault bucket
-    // images in; a crashed run's leftovers are swept here — the durable
-    // bank is the version-gated filters table, never these dirs.
-    SeenState.deleteDir(s"$stateRoot/seen_bank")
-    val seen = new SeenState(spark, cfg.seenBuckets,
-      fpp = cfg.bloomFpp, compactAt = cfg.compactPieces,
-      bankRoot = s"$stateRoot/seen_bank")
-    bootstrapSeen(spark, t, seen, cfg)
+    // seen state: exact bucketed pieces, rebuilt from the durable table
+    // on (re)start, then fed one piece per wave. A crashed run of an
+    // older engine may have left bloom image dirs under seen_bank.
+    StateIO.forPath(stateRoot).deleteRecursive(s"$stateRoot/seen_bank")
+    val seen = new SeenState(spark, cfg.seenBuckets, compactAt = cfg.compactPieces)
+    seen.bootstrap(t.seen.readOr(spark.emptyDataset[SeenUrl].toDF()))
 
     val seedHosts: Set[String] = seedEntries(cfg.seeds).map(_.host).toSet
 
@@ -229,44 +217,13 @@ object CrawlJob {
           cfg.onWaveEnd(wave - 1)
         }
       }
-      // Clean exit (frontier drained, wave cap, or graceful stop): persist
-      // the filter bank so the NEXT start can skip the full filter rebuild.
-      // Never written on the exception path — a bank must only ever exist
-      // for a committed, marker-consistent state. A final expiry sweep
-      // leaves the state at rest within the keep horizon even when the
-      // in-loop cadence (ExpireEvery) last ran waves ago.
-      persistFilterBank(spark, t, seen, cfg)
+      // Clean exit (frontier drained, wave cap, or graceful stop): a final
+      // expiry sweep leaves the state at rest within the keep horizon even
+      // when the in-loop cadence (ExpireEvery) last ran waves ago.
       Seq(t.frontier, t.seen, t.visits, t.docs, t.docsFlat, t.metrics, t.failed,
         t.clock, t.inbox, t.consumed).foreach(_.expire(cfg.snapshotKeep))
     } finally seen.close()
     out.result()
-  }
-
-  /** Version-gated seen-state bootstrap. The saved bank is used ONLY when
-    * its tag equals the seen table's CURRENT version (checked after any
-    * resume rollback): IceLite versions are append-monotonic and rollback
-    * only trims versions above the commit marker, so tag equality proves
-    * the bank covers exactly the committed seen rows — the completeness
-    * the prefilter's no-false-negative contract depends on. Anything
-    * off (stale tag, bucket/format/shape mismatch, unparsable images)
-    * falls back to the full rebuild. */
-  private def bootstrapSeen(spark: SparkSession, t: Tables, seen: SeenState,
-      cfg: Config): Unit = {
-    import spark.implicits._
-    val seenDf = t.seen.readOr(spark.emptyDataset[SeenUrl].toDF())
-    val fast = t.filters.currentSnapshot.exists { s =>
-      s.counters.get("seen_version").contains(t.seen.currentVersion.toLong) &&
-      s.counters.get("bank_format").contains(BankFormat) &&
-      s.counters.get("buckets").contains(cfg.seenBuckets.toLong) &&
-      scala.util.Try {
-        // distributed: tasks parse and copy the persisted images into the
-        // bootstrap piece's dir; only the (bucket, n) stats reach the
-        // driver — never the images
-        seen.bootstrapFromBank(seenDf, t.filters.read().select("bucket", "image", "n"))
-        true
-      }.getOrElse(false)
-    }
-    if (!fast) seen.bootstrap(seenDf)
   }
 
   /** Driver-side seed intake: canonical seeds as frontier entries whose
@@ -377,8 +334,8 @@ object CrawlJob {
       case Some(_) => winners // this drain was the first seen content ever
       case None =>
         // clean drain (the always-on intake's steady state): route through
-        // the bucketed in-memory probe — ONE candidate-sized exchange plus
-        // the post-exchange O(seen/B) filter/piece chain, never the
+        // the bucketed in-memory pieces — ONE candidate-sized exchange plus
+        // the piece anti-join chain, never the
         // O(seen) table shuffle a raw left-anti join pays (a left-anti
         // join cannot broadcast its left side, so one mid-crawl seed used
         // to cost a full seen exchange at the 10^10-seen design point —
@@ -398,7 +355,7 @@ object CrawlJob {
         t.seen.append(
           admitted.select(col("url_hash"), col("url"), lit(0).as("wave")),
           Map("intake_drain_v" -> target.toLong))
-        // the in-memory prefilter/pieces must cover the admitted seeds too
+        // the in-memory pieces must cover the admitted seeds too
         // (a replayed drain skips this: the post-crash bootstrap already
         // read them from the durable seen table)
         seen.addWave(admitted.select(col("url_hash")))
@@ -416,29 +373,6 @@ object CrawlJob {
           ("host_hwm" -> hwm))
       } else t.frontier.amendCounters(marker)
     } finally admitted.unpersist()
-  }
-
-  // Bank image layout version: bump whenever the bucket function or the
-  // filter serialization changes — a stale-format bank must fall back to
-  // the full rebuild, never probe wrong. (v2: murmur3 partition-aligned
-  // buckets; v3: bloom is the only image kind — a v2 bank may hold images
-  // of the other filter kind v2 supported, which must never parse as bloom.)
-  private val BankFormat = 3L
-
-  /** Durable (bucket, image, count) bank, tagged with the seen table
-    * version it covers (each image records its own size). Fully
-    * distributed: tasks read the image files and write the parquet in
-    * B-wide parallelism — at the 10^10 design point this is a ~12 GB
-    * table and a single-task write (the round-2 coalesce(1)) would
-    * serialize it through one executor. */
-  private def persistFilterBank(spark: SparkSession, t: Tables, seen: SeenState,
-      cfg: Config): Unit = {
-    t.filters.replace(
-      seen.bankDf(),
-      Map(
-        "seen_version" -> t.seen.currentVersion.toLong,
-        "bank_format" -> BankFormat,
-        "buckets" -> cfg.seenBuckets.toLong))
   }
 
   private val priorityKeys = Seq(col("depth"), col("parent_ord"), col("link_index"))
@@ -619,25 +553,19 @@ object CrawlJob {
         mark("winners_plan")
         // materialize the expansion chain (links → candidates → winners)
         // NOW, populating the winners cache, and take the deterministic
-        // candidate total + winner count in the same job. This splits the
+        // candidate total in the same job. This splits the
         // old monolithic seen_write span into expand (the chain compute)
-        // vs seen_write (dedup probe + robots + parquet append) — VERDICT
+        // vs seen_write (dedup + robots + parquet append) — VERDICT
         // r5 next-round #7 — and replaces the separate post-write grp_n
         // aggregate, so the wave runs the same number of jobs as before.
-        val aggRow = winners.agg(sum(col("grp_n")), count(lit(1))).head
-        val nCand = Option(aggRow.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val nWinners = aggRow.getLong(1)
+        val nCand = Option(winners.agg(sum(col("grp_n"))).head.get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
         mark("expand")
 
         // dedup: candidates exchange ONCE into the seen bucket partitioning,
-        // then the pieces' prefilters probe POST-exchange (task p faults in
-        // only bucket p's images — O(seen/B) resident per executor, one
-        // path-only broadcast per piece) and
-        // filter-negatives skip the exact anti-join chain entirely
-        // (SeenState.freshAndConfirmed; probe is native codegen, no UDF
-        // boxing in the hot path). The winner count rides along so a large
-        // wave materializes the candidate exchange exactly once.
-        val newCands = seen.freshAndConfirmed(winners, nWinners)
+        // then the exact left-anti chain over the pre-partitioned pieces
+        // (SeenState.freshAndConfirmed)
+        val newCands = seen.freshAndConfirmed(winners)
         // --- robots decision through the size-adaptive policy (O8) --------
         val path = coalesce(nullif(parse_url(col("cand"), lit("PATH")), lit("")), lit("/"))
         val newSeen = hold(policy.withAllowed(
@@ -668,10 +596,9 @@ object CrawlJob {
         mark("seen_write")
         val admitted = newSeen.filter(col("__allowed"))
 
-        // fold the wave's hashes into the seen state (a new piece with its
-        // own images) on a future: the fold is only needed by the NEXT
-        // wave, so it overlaps this wave's commit tail instead of
-        // serializing behind it.
+        // fold the wave's hashes into the seen state (a new piece) on a
+        // future: the fold is only needed by the NEXT wave, so it overlaps
+        // this wave's commit tail instead of serializing behind it.
         if (nNewSeen > 0) seen.addWaveAsync(newSeen.select(col("url_hash")))
         mark("seen_fold")
 
@@ -810,11 +737,6 @@ object CrawlJob {
       held.foreach(df => scala.util.Try(df.unpersist()))
       if (ok) fold.get
     }
-    // wave boundary: every plan that referenced this wave's probe layers
-    // is committed + unpersisted, and the next wave's frontier lineage
-    // starts from the IceLite parquet — broadcasts of pieces retired by a
-    // compaction this wave are now unreachable and safe to destroy.
-    seen.releaseRetired()
     result
   }
 

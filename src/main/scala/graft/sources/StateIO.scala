@@ -4,15 +4,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** The storage seam under ALL engine state IO (VERDICT r3 #1 / SURVEY
-  * §7.4): IceLite snapshot metadata + manifests, the seen-state FileBank
-  * bucket images, and every scratch dir go through this trait instead of
-  * calling `java.nio` directly.
+  * §7.4): IceLite snapshot metadata + manifests and every scratch dir go
+  * through this trait instead of calling `java.nio` directly.
   *
   * Why it exists: in `local[*]` driver and executors share one local
   * filesystem, so raw `java.nio` paths work — but the north rule's
   * deployment is spark-submit on a multi-executor cluster, where
-  * executor-written bank images and snapshot JSON must land on SHARED
-  * storage (HDFS/S3A/...) to be readable from other nodes. Two impls:
+  * snapshot JSON and manifests must land on SHARED storage
+  * (HDFS/S3A/...) next to the parquet data they describe. Two impls:
   *
   *  - [[StateIO.Nio]] — plain local paths (`/tmp/...`), byte-identical
   *    to the previous direct-java.nio behavior; the sandbox default.
@@ -20,8 +19,7 @@ import scala.jdk.CollectionConverters._
   *    `s3a://`, ...) through `org.apache.hadoop.fs.FileSystem`, the same
   *    API real Iceberg's `HadoopTableOperations` uses. The FileSystem
   *    handle is resolved lazily PER JVM from the path URI (never
-  *    serialized — tasks probing FileBank buckets re-resolve on the
-  *    executor, exactly like Spark's own parquet IO).
+  *    serialized, exactly like Spark's own parquet IO).
   *
   * Routing is by path shape ([[StateIO.forPath]]): a `scheme://` prefix
   * selects Hadoop, anything else Nio — so a user pointing `--state` at
@@ -39,8 +37,8 @@ import scala.jdk.CollectionConverters._
   */
 trait StateIO extends Serializable {
   def exists(path: String): Boolean
-  /** Bytes of `path`; null when missing (probe faces want null, not a
-    * throw — a missing bucket image means "empty bucket"). */
+  /** Bytes of `path`; null when missing (a missing version hint means
+    * "no snapshot", not a failure). */
   def readBytesIfExists(path: String): Array[Byte]
   def readBytes(path: String): Array[Byte] = {
     val b = readBytesIfExists(path)

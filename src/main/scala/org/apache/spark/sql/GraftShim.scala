@@ -38,11 +38,9 @@ object GraftShim {
     // REAL lineage truncation, not just caching: after the eager count the
     // RDD's dependency graph is replaced by the checkpoint blocks. Without
     // it every later stage that scans this piece serializes the piece's
-    // WHOLE upstream plan (wave expressions, probe broadcast handles,
-    // cached-relation trees) into each task binary — megabytes per task
-    // ("Broadcasting large task binary" warnings) that grow with every
-    // retained piece, and retired-broadcast handles kept reachable
-    // indefinitely.
+    // WHOLE upstream plan (wave expressions, cached-relation trees) into
+    // each task binary — megabytes per task ("Broadcasting large task
+    // binary" warnings) that grow with every retained piece.
     rdd.localCheckpoint()
     val n = rdd.count() // eager: compute while upstream caches are still alive
     val output: Seq[Attribute] = qe.analyzed.output

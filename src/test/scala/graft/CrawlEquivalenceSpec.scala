@@ -24,6 +24,17 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     spark.createDataset(corpus).toDF()
   }
 
+  /** Per-bucket seen counts over all `buckets` buckets: the (bucket, n)
+    * columns of the bloom bank an older engine saved in the filters table
+    * at a clean exit (this engine writes no bank, so the tests below plant
+    * the older engine's bank themselves). */
+  private def olderBankCounts(t: CrawlJob.Tables, buckets: Int): Array[(Int, Long)] = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val n = t.seen.read().groupBy(pmod(hash(col("url_hash")), lit(buckets))).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    Array.tabulate(buckets)(b => b -> n.getOrElse(b, 0L))
+  }
+
   private def docKey(d: CrawlDoc): (String, String, String, String, String, String, Map[String, List[String]]) =
     (d.id, d.uri, d.title, d.description, d.keywords, d.ogimage,
       d.source.map { case (k, v) => k -> v.toList })
@@ -444,7 +455,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     // (per-bucket counts kept, so the resumed state is non-empty and the
     // first wave would probe these images if the gate let them through)
     val t = CrawlJob.tables(root, spark)
-    val counts = t.filters.read().select("bucket", "n").as[(Int, Long)].collect()
+    val counts = olderBankCounts(t, cfgJob(64).seenBuckets)
     assert(counts.length == cfgJob(64).seenBuckets && counts.map(_._2).sum > 0L)
     val cuckooImage = {
       val buf = java.nio.ByteBuffer.allocate(4 + 8 + 4 * 512 * 2)
@@ -474,10 +485,10 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val m1 = CrawlJob.run(spark, df, rules, cfgJob(3), root)
     assert(m1.size == 3)
     // every tag matches the current format (seen_version, bank_format 3,
-    // buckets), but no image parses as bloom: the import must fail and
-    // fall back to the rebuild instead of failing the first probe
+    // buckets), but no image parses as bloom: the resume must rebuild
+    // from the seen table, never probe them
     val t = CrawlJob.tables(root, spark)
-    val counts = t.filters.read().select("bucket", "n").as[(Int, Long)].collect()
+    val counts = olderBankCounts(t, cfgJob(64).seenBuckets)
     assert(counts.length == cfgJob(64).seenBuckets && counts.map(_._2).sum > 0L)
     val badImage = Array.fill[Byte](64)(9)
     t.filters.replace(counts.toSeq.map { case (i, n) => (i, badImage, n) }

@@ -19,8 +19,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("kernel plan has no single-partition exchange") {
     val frontier = BenchKernelRunner.frontierDf(spark, 10000, 4)
-    val seen = BenchKernelRunner.seenDf(spark, 10000, 4)
-    val bloom = seen.stat.bloomFilter("url_hash", 10000, 0.01)
     // build the kernel's plan (un-executed) by reproducing its stages
     val (fetch, _) = graft.operators.Politeness.select(
       frontier, BenchKernelRunner.benchRules, 100, 4)
@@ -167,15 +165,14 @@ class PlanShapeSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val seen = new graft.plans.SeenState(spark, buckets = 4,
-        fpp = 0.01, compactAt = 8)
+      val seen = new graft.plans.SeenState(spark, buckets = 4, compactAt = 8)
       seen.bootstrap(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash"),
         col("id").cast("string").as("url")))
       // two more pieces → a 3-join chain
       seen.addWave(spark.range(1000, 1200).select(xxhash64(col("id")).as("url_hash")))
       seen.addWave(spark.range(1200, 1400).select(xxhash64(col("id")).as("url_hash")))
       val cands = spark.range(500, 2000).select(xxhash64(col("id")).as("url_hash"))
-      val out = seen.antiJoin(cands)
+      val out = seen.freshAndConfirmed(cands)
       out.collect() // force final (AQE) plan
       val full = out.queryExecution.executedPlan.toString
       val plan = full.split("== Initial Plan ==")(0) // final (executed) plan only
@@ -192,6 +189,7 @@ class PlanShapeSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val want = (1400L until 2000L).map(byId).toSet
       assert(got == want)
+      seen.close()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 

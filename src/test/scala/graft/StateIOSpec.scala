@@ -1,14 +1,13 @@
 package graft
 
-import graft.plans.SeenState
 import graft.sources.{IceLite, StateIO}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** The storage seam (VERDICT r3 #1): every IceLite / SeenState /
-  * FileBank byte must flow through [[StateIO]], and a URI state root
+/** The storage seam (VERDICT r3 #1): every IceLite metadata byte must
+  * flow through [[StateIO]], and a URI state root
   * must run on the Hadoop FileSystem impl — proven here against a
   * `file://` FS (the only Hadoop scheme the sandbox has, but the SAME
   * code path hdfs://, s3a://, ... take on a real cluster). */
@@ -78,29 +77,6 @@ class StateIOSpec extends AnyFunSuite {
     val pruned = t.prunedByHash(target)
     assert(pruned.inputFiles.length < t.read().inputFiles.length)
     assert(pruned.filter(col("url_hash") === target).count() == 1L)
-  }
-
-  test("SeenState with a file:// bank root: executor-written images probe correctly") {
-    val root = fileUri("bank")
-    val seen = new SeenState(spark, buckets = 8,
-      fpp = 0.01, compactAt = 8, bankRoot = s"$root/seen_bank")
-    try {
-      def hashes(a: Long, b: Long) =
-        spark.range(a, b).select(xxhash64(col("id")).as("url_hash"),
-          col("id").cast("string").as("url"))
-      seen.bootstrap(hashes(0, 2000))
-      seen.addWave(hashes(2000, 2500).select("url_hash"))
-      // every piece's image dir really lives under the URI root (Hadoop-written)
-      val dirs = seen.pieceFaces.collect { case fb: graft.functions.LongMembership.FileBank => fb.dir }
-      assert(dirs.size == 2 && dirs.forall(_.startsWith("file://")),
-        s"image dirs not on the URI root: $dirs")
-      val cands = spark.range(1000, 3000)
-        .select(xxhash64(col("id")).as("url_hash"))
-      val fresh = seen.freshAndConfirmed(cands).select("url_hash").collect().map(_.getLong(0)).toSet
-      val truth = spark.range(2500, 3000)
-        .select(xxhash64(col("id")).as("url_hash")).collect().map(_.getLong(0)).toSet
-      assert(fresh == truth, s"fresh=${fresh.size} truth=${truth.size}")
-    } finally seen.close()
   }
 
   test("full crawl on a file:// state root matches the plain-path crawl bit-exactly") {

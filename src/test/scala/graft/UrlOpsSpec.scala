@@ -101,24 +101,6 @@ class UrlOpsSpec extends AnyFunSuite {
     assert(cgot.toSeq == canonicalCases.map(c => Option(c._2)))
   }
 
-  test("MightContainLong expression agrees with the broadcast filter (no false negatives)") {
-    import spark.implicits._
-    import org.apache.spark.util.sketch.BloomFilter
-    val bf = BloomFilter.create(10000, 0.01)
-    val present = (0L until 1000L).map(_ * 7919L)
-    present.foreach(bf.putLong)
-    val bc = spark.sparkContext.broadcast(
-      graft.functions.LongMembership.Bloom(bf): graft.functions.LongMembership)
-    val probe = present ++ (0L until 1000L).map(_ * 7919L + 1L)
-    val got = probe.toDF("h")
-      .select(col("h"), might_contain_long(col("h"), bc).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    // zero false negatives, and the expression matches direct probes
-    present.foreach(h => assert(got(h), s"false negative for $h"))
-    probe.foreach(h => assert(got(h) == bf.mightContainLong(h)))
-    bc.destroy()
-  }
-
   test("SQL registration works") {
     UrlExpressionsRegistration.ensure(spark)
     val r = spark.sql(

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.{CrawlJob, SeenState}
-import graft.sources.StateIO
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +9,7 @@ import java.nio.file.Files
 
 /** A wave frees what it cached on every exit: a failed wave must not
   * leave its persisted frames behind in a session that outlives the
-  * crawl, and every seen image dir has one owner and one free point. */
+  * crawl, and every seen piece's RDD has one owner and one free point. */
 class WaveLifetimeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -35,27 +34,27 @@ class WaveLifetimeSpec extends AnyFunSuite {
     assert(after.subsetOf(before), s"failed wave left persisted RDDs ${after -- before}")
   }
 
-  test("seen image dirs: one per live piece, none after close or a finished crawl") {
-    val seen = new SeenState(spark, buckets = 4, fpp = 0.01, compactAt = 3)
-    val inst = seen.instanceDir
-    def dirs = StateIO.forPath(inst).listNames(inst)
+  test("seen pieces: one persisted RDD per live piece, none after close or a finished crawl") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def hashes(a: Long, b: Long) = spark.range(a, b).select(xxhash64(col("id")).as("url_hash"))
+    val before = persisted
+    val seen = new SeenState(spark, buckets = 4, compactAt = 3)
     try {
       seen.bootstrap(hashes(0, 1000))
       (1 to 4).foreach(i => seen.addWave(hashes(1000L * i, 1000L * i + 300)))
       assert(seen.compactions >= 1)
-      // the merged pieces' dirs wait for the wave boundary, then go
-      seen.releaseRetired()
-      assert(dirs.size == seen.pieceCount, s"dirs $dirs for ${seen.pieceCount} pieces")
+      // a compaction frees the merged pieces' RDDs as it builds their union
+      val live = persisted -- before
+      assert(live.size == seen.pieceCount, s"RDDs $live for ${seen.pieceCount} pieces")
     } finally seen.close()
-    assert(dirs.isEmpty, s"close left $dirs")
+    assert(persisted == before, s"close left ${persisted -- before}")
 
     val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 12, linksPerPage = 5)
-    val root = Files.createTempDirectory("graft-bank-dirs").toString
+    val root = Files.createTempDirectory("graft-seen-rdds").toString
+    val beforeRun = persisted
     CrawlJob.run(spark, Corpus.toDf(spark, cfg), Corpus.robotsRules(cfg),
       CrawlJob.Config(Seq(Corpus.pageUrl(cfg, 0, 0)), hostBudget = 3, maxWaves = 4,
         numPartitions = 4, saltBuckets = 2), root)
-    val left = StateIO.forPath(root).listNames(s"$root/seen_bank")
-    assert(left.isEmpty, s"a finished crawl left seen instance dirs $left")
+    assert(persisted == beforeRun, s"a finished crawl left persisted RDDs ${persisted -- beforeRun}")
   }
 }
