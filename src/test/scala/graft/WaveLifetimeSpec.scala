@@ -34,7 +34,7 @@ class WaveLifetimeSpec extends AnyFunSuite {
     assert(after.subsetOf(before), s"failed wave left persisted RDDs ${after -- before}")
   }
 
-  test("seen pieces: one persisted RDD per live piece, none after close or a finished crawl") {
+  test("seen pieces: one persisted RDD per live piece, none after close or a crawl") {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def hashes(a: Long, b: Long) = spark.range(a, b).select(xxhash64(col("id")).as("url_hash"))
     val before = persisted
