@@ -7,16 +7,24 @@ import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
 /** Round-6 optimization harness (guide §1): NOT part of the frozen bench
-  * surface — [[Bench]] is untouched. Three modes:
+  * surface — [[Bench]] is untouched. Five modes:
   *
   *  - `plans <outDir> [suffix]` — write `explain("formatted")` for every
   *    declared query to `<outDir>/<name>_<suffix>.txt` (the
   *    plans/r06 before/after evidence files);
   *  - `queries [name...]` — isolated per-query timing: noop sink
   *    (§1.4), min of 3 after one warm-up, jobs labeled (§1.5);
-  *  - `kernel <n> <reps>` — one kernel pass per rep with a stage listener
-  *    printing per-stage wall + shuffle bytes, to locate where kernel
-  *    time goes.
+  *  - `crawl [tight] [reps]` — end-to-end synthetic crawls (default 2
+  *    reps), each printing wall, URL rate and per-step totals; `tight`
+  *    runs the budget-4 virtual-clock crawl over 10 waves instead of the
+  *    budget-2048 crawl over 40;
+  *  - `kernel <n> <reps> [noclear]` — one kernel pass per rep with a
+  *    stage listener printing per-stage wall + shuffle bytes, to locate
+  *    where kernel time goes (`noclear` replays the Bench kernel phase:
+  *    a warm-up pass and no cache clear between reps);
+  *  - `drain` — intake-drain dedup of one posted seed against seen sets
+  *    of 16 M and 160 M hashes: the SeenState probe path vs a raw
+  *    left-anti join.
   *
   * Env: SPARK_GRAFT_SF_DIR (data dir), SPARK_GRAFT_CPUS (core count) —
   * same contract as Bench.

@@ -53,15 +53,6 @@ object BenchKernelRunner {
         allow = h % 4 != 3, crawl_delay = if (h == 0) 2 else 1)
     }
 
-  /** Rules over `nHosts` hosts — past the 64-host compile cutover this
-    * forces the production JOINED robots path, the regime a
-    * 10^7-robots.txt-host crawl runs in. */
-  def benchRulesFor(nHosts: Int): Seq[RobotsRule] =
-    (0 until nHosts).map { h =>
-      RobotsRule(s"h$h.example.org", if (h % 4 == 3) "/p/1" else "/",
-        allow = h % 4 != 3, crawl_delay = if (h == 0) 2 else 1)
-    }
-
   /** The same rule shape generated DISTRIBUTED — at 10^6+ ruled hosts the
     * driver never holds a rule; `Robots.policyFromDf` packs per-host rows
     * executor-side and (past [[graft.operators.Robots.MaxBroadcastHosts]])
@@ -93,7 +84,7 @@ object BenchKernelRunner {
         pmod(col("id"), lit(3)).as("next_ts"))
       .persist()
     clock.count()
-    val policy = graft.operators.Robots.Compiled(benchRules)
+    val policy = graft.operators.Robots.policy(benchRules, spark)
     val t0 = System.nanoTime()
     val budgeter = graft.operators.Politeness.clockedBudgeter(
       policy, clock, wave = 0, ticksPerWave = 1 << 26, clockHosts = hint)
@@ -133,10 +124,7 @@ object BenchKernelRunner {
     // (async frees still draining made later reps bimodal)
     frontier.unpersist(blocking = true)
     seen.close()
-    policy match { // rep hygiene: a leaked packed cache degrades later reps
-      case j: graft.operators.Robots.Joined => j.packed.unpersist(); ()
-      case _ => ()
-    }
+    policy.release() // rep hygiene: a leaked packed cache degrades later reps
     (wall, r.scheduled + r.newUrls + r.dedupHits)
   }
 }

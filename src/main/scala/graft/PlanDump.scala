@@ -27,7 +27,7 @@ object PlanDump {
     val kernel = {
       val frontier = BenchKernelRunner.frontierDf(spark, 10000, 4)
       val (fetch, _) = operators.Politeness.select(
-        frontier, BenchKernelRunner.benchRules, 100, 4)
+        frontier, operators.Robots.policy(BenchKernelRunner.benchRules, spark), 100, 4)
       operators.Ranker.orderIsomorphicId(
         fetch, Seq(org.apache.spark.sql.functions.col("depth"),
           org.apache.spark.sql.functions.col("parent_ord"),
@@ -60,17 +60,17 @@ object PlanDump {
       }
     }
 
-    // Joined robots past the broadcast cutover (VERDICT r3 #2): the packed
-    // one-row-per-host rules table joins by SHUFFLE-HASH on host, so at
-    // 10^7 ruled hosts nothing O(rules) is broadcast or resident-per-
-    // executor; each task builds a hash map over its packed-rules slice.
-    val robotsShufflePlan = {
+    // The packed robots form (RobotsTxt.JoinedTxt) over prefix rules, at
+    // a declared host count: below Robots.MaxBroadcastHosts the packed
+    // one-row-per-host table broadcasts; past it the rules join goes
+    // SHUFFLE-HASH on host, so at 10^7 ruled hosts nothing O(rules) is
+    // broadcast or resident-per-executor (VERDICT r3 #2).
+    def robotsJoinPlan(hosts: Long): String = {
       import org.apache.spark.sql.functions.{col, concat, lit, pmod}
-      val packed = operators.Robots.packRules(
-        BenchKernelRunner.benchRulesDf(spark, 1000)).persist()
+      val packed = operators.RobotsTxt.packTxt(operators.Robots.txtRows(
+        BenchKernelRunner.benchRulesDf(spark, 1000))).persist()
       try {
-        val policy = operators.Robots.Joined(packed,
-          operators.Robots.MaxBroadcastHosts + 1)
+        val policy = operators.RobotsTxt.JoinedTxt(packed, hosts)
         val df = spark.range(0, 5000)
           .select(concat(lit("h"), pmod(col("id"), lit(1200)),
             lit(".example.org")).as("host"),
@@ -99,7 +99,7 @@ object PlanDump {
               lit(".example.org")).as("host"),
             col("id").as("url_hash"), lit(1).as("depth"),
             col("id").as("parent_ord"), lit(0).as("link_index"))
-        val policy = operators.Robots.Compiled(BenchKernelRunner.benchRules)
+        val policy = operators.Robots.policy(BenchKernelRunner.benchRules, spark)
         val clock = spark.range(0, 100)
           .select(concat(lit("h"), col("id"), lit(".example.org")).as("host"),
             col("id").as("next_ts"))
@@ -143,6 +143,16 @@ object PlanDump {
           "approximate prefilter sits in front of the chain. PlanShapeSpec " +
           "asserts exchanges==1 and sorts==1 on this exact plan.",
         seenPlan),
+      ("compiled robots (c7_robots) — a filter, no join",
+        "At most Robots.MaxCompileHosts (64) ruled hosts compile to a " +
+          "constant-folded StartsWith when-chain inside the scan's Filter: " +
+          "no Join, no Exchange for robots (PlanShapeSpec asserts this shape).",
+        fmt(SparkEntry.queries("c7_robots")(spark, sfDir))),
+      ("packed robots below the broadcast cutover — broadcast rules join",
+        "Past 64 ruled hosts the rules pack to one row per host; up to " +
+          "Robots.MaxBroadcastHosts (2^16) packed rows the join on host is " +
+          "a BroadcastHashJoin, so the frontier never shuffles for robots.",
+        robotsJoinPlan(-1L)),
       ("joined robots past the broadcast cutover — shuffle-hash rules join",
         "Above Robots.MaxBroadcastHosts (2^16) packed rows, the rules join " +
           "on host is a ShuffledHashJoin — NO BroadcastExchange/" +
@@ -150,7 +160,7 @@ object PlanDump {
           "10^7-ruled-host crawl never ships or holds the rule set whole " +
           "(PlanShapeSpec asserts this plan shape; RobotsScaleSpec proves " +
           "decision-identity with the broadcast path at 10^5 hosts).",
-        robotsShufflePlan),
+        robotsJoinPlan(operators.Robots.MaxBroadcastHosts + 1)),
       ("politeness state joins past the host cutover — no O(hosts) broadcast",
         "Above Robots.MaxBroadcastHosts (2^16) distinct frontier hosts, " +
           "the virtual-clock join is a plain join (AQE sizes it at " +

@@ -273,7 +273,7 @@ object AnnOps {
   /** Literal-centroid codegen path up to this many cells; above it the
     * assignment becomes a broadcast centroid join + map-side argmax
     * (4096 literal projection columns would blow plan construction and
-    * the codegen method limit — same cutover shape as Robots compile→join). */
+    * the codegen method limit — same cutover shape as the robots compile→join). */
   val CellCompileCutover = 64
 
   /** Cells scale with the corpus: ⌈n / TargetCellSize⌉ clamped to

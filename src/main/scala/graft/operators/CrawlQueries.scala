@@ -131,7 +131,7 @@ object CrawlQueries {
       lit(1).as("depth"),
       $"doc_id".as("parent_ord"),
       lit(0).as("link_index"))
-    val (fetch, defer) = Politeness.select(frontier, Seq.empty, 5, 4)
+    val (fetch, defer) = Politeness.select(frontier, Robots.policy(Seq.empty, s), 5, 4)
     fetch.withColumn("state", lit("fetch"))
       .unionByName(defer.withColumn("state", lit("deferred")))
       .select($"url", $"host", $"parent_ord", $"state")
@@ -158,7 +158,7 @@ object CrawlQueries {
       .withColumn("host", $"source")
       .withColumn("path", concat(lit("/p/"), pmod($"doc_id", lit(25))))
     withUrl
-      .filter(Robots.compile(rules, $"host", $"path"))
+      .filter(RobotsTxt.compileColumn(Robots.groups(rules), $"host", $"path"))
       .select($"doc_id", $"host", $"path")
       .orderBy($"doc_id")
   }

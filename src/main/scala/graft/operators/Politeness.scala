@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.model.RobotsRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,7 +34,7 @@ object Politeness {
 
   /** Per-host politeness STATE join (clock rows, contended-host set) with
     * the same size cutover the robots rules join uses
-    * ([[Robots.rulesJoin]]): broadcast below [[Robots.MaxBroadcastHosts]]
+    * ([[RobotsTxt.JoinedTxt]]): broadcast below [[Robots.MaxBroadcastHosts]]
     * rows; ABOVE it, a plain join with no broadcast hardcoded — AQE picks
     * broadcast at runtime iff the side MEASURES small (a sparse contended
     * set), and a genuinely O(hosts) side (the mature clock table, a
@@ -62,11 +61,6 @@ object Politeness {
     * keep zero rows. Below it, a per-wave count job costs more than the
     * scan it might save. */
   val SkipContendedProbeAt: Long = 1L << 22
-
-  /** Back-compat entry point for driver-resident rule Seqs. */
-  def select(frontier: DataFrame, rules: Seq[RobotsRule], hostBudget: Int,
-      saltBuckets: Int): (DataFrame, DataFrame) =
-    select(frontier, Robots.Compiled(rules), hostBudget, saltBuckets)
 
   def select(frontier: DataFrame, policy: Robots.RobotsPolicy, hostBudget: Int,
       saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L)

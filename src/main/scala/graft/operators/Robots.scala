@@ -4,31 +4,30 @@ import graft.model.RobotsRule
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** robots.txt rules compiled to Catalyst filter predicates (north_rule;
-  * reference analog: colly's temoto/robotstxt integration, go.mod:22,
-  * active because IgnoreRobotsTxt defaults to false at crawler.go:76).
+/** The robots face of the wave loop (north_rule; reference analog:
+  * colly's temoto/robotstxt integration, go.mod:22, active because
+  * IgnoreRobotsTxt defaults to false at crawler.go:76).
   *
-  * Longest-prefix-match-wins over the URL path. Two physical forms behind
-  * one [[RobotsPolicy]] face, selected by rule-set size:
+  * One decision rule, RFC 9309 §2.2.2: the longest matching pattern wins,
+  * allow wins length ties, no match → allowed. One implementation of it,
+  * [[RobotsTxt]], in two physical forms behind one [[RobotsPolicy]] face,
+  * selected by ruled-host count:
   *
-  *  - **Compiled** (≤ [[Robots.MaxCompileHosts]] distinct hosts): a
-  *    constant-folded `when`-chain that stays inside whole-stage codegen
-  *    — zero join, zero shuffle. Past ~64 hosts the chain blows the 64 KB
-  *    JVM method limit (codegen falls back to interpreted) and plan
-  *    construction itself becomes O(hosts) per wave, so it is capped.
-  *  - **Joined** (any size): rules pre-packed to ONE row per host with
-  *    the prefix list sorted longest-first and joined on `host` alone;
-  *    the longest-match decision is a codegen'd array scan
-  *    (`filter(...)[0]`) on the packed row — no row multiplication, no
-  *    groupBy. The JOIN STRATEGY is itself size-adaptive
-  *    ([[Robots.rulesJoin]]): ≤ [[Robots.MaxBroadcastHosts]] packed rows
-  *    broadcast (zero candidate shuffle); above that the packed table is
-  *    SHUFFLE-HASH-joined on host — at 10^7 ruled hosts a broadcast
-  *    would put the whole ~1–2 GB packed table resident on every
-  *    executor and re-ship it each wave (the O(state)-broadcast shape
-  *    the seen filter eliminated), while the shuffle join moves each
-  *    packed row once and each candidate once, both hash-partitioned on
-  *    host (VERDICT r3 "what's wrong" #2).
+  *  - **compiled** ([[RobotsTxt.CompiledTxt]], ≤ [[MaxCompileHosts]]
+  *    hosts): a constant-folded `when`-chain that stays inside whole-stage
+  *    codegen — zero join, zero shuffle. Past ~64 hosts the chain blows
+  *    the 64 KB JVM method limit (codegen falls back to interpreted) and
+  *    plan construction itself becomes O(hosts) per wave, so it is capped.
+  *  - **packed** ([[RobotsTxt.JoinedTxt]], any size): one row per host
+  *    joined on `host` alone — broadcast up to [[MaxBroadcastHosts]]
+  *    packed rows, shuffle-hash on host above (at 10^7 ruled hosts a
+  *    broadcast would put the whole ~1–2 GB packed table resident on
+  *    every executor and re-ship it each wave).
+  *
+  * Prefix rows ([[RobotsRule]]) are robots.txt rules whose pattern is
+  * `path_prefix`; a host's group delay is the max of its rows'
+  * `crawl_delay`. [[policy]] and [[policyFromDf]] are thin adapters onto
+  * the robots.txt forms.
   */
 object Robots {
 
@@ -42,21 +41,10 @@ object Robots {
     * `when`-chain; above it they take the packed-rules join. */
   val MaxCompileHosts: Int = 64
 
-  /** The one rules-join used by every [[Joined]]/[[RobotsTxt.JoinedTxt]]
-    * use site: broadcast below the host cutover, shuffle-hash above
-    * (hash map built from the per-partition slice of the PACKED side —
-    * O(rules/P) per task, never sorted, never resident whole). */
-  private[operators] def rulesJoin(df: DataFrame, packedSel: DataFrame,
-      hosts: Long): DataFrame =
-    if (hosts >= 0 && hosts > MaxBroadcastHosts)
-      df.join(packedSel.hint("shuffle_hash"), Seq("host"), "left_outer")
-    else df.join(broadcast(packedSel), Seq("host"), "left_outer")
-
-  /** One face over the physical robots/budget forms (compiled chain,
-    * packed broadcast join, and RobotsTxt's wildcard compile); attach-once
-    * column builders so a wave evaluates each decision exactly once. */
+  /** One face over the physical robots/budget forms; attach-once column
+    * builders so a wave evaluates each decision exactly once. */
   trait RobotsPolicy extends Serializable {
-    /** df + boolean column `out`: longest-prefix robots decision over
+    /** df + boolean column `out`: the robots decision over
       * (df("host"), path). */
     def withAllowed(df: DataFrame, path: Column, out: String): DataFrame
     /** df + int column `out`: per-host politeness budget
@@ -66,119 +54,35 @@ object Robots {
       * ticks — max(1, crawl_delay); hosts without a rule get 1. Feeds the
       * cross-wave virtual-clock schedule (Politeness.clockedBudgeter). */
     def withDelay(df: DataFrame, out: String): DataFrame
+    /** Free what the policy cached (a packed rules table); the policy
+      * must not be used after. */
+    def release(): Unit = ()
   }
 
-  final case class Compiled(rules: Seq[RobotsRule]) extends RobotsPolicy {
-    def withAllowed(df: DataFrame, path: Column, out: String): DataFrame =
-      df.withColumn(out, compile(rules, col("host"), path))
-    def withBudget(df: DataFrame, hostBudget: Int, out: String): DataFrame =
-      df.withColumn(out, budgetColumn(rules, col("host"), hostBudget))
-    def withDelay(df: DataFrame, out: String): DataFrame =
-      df.withColumn(out, delayColumn(rules, col("host")))
-  }
-
-  /** packed: one row per host — (host, __rules: array<struct<prefix,
-    * allow>> longest-first, __delay). Caller should persist it. `hosts`
-    * (the packed row count; -1 = unknown/assume small) selects the join
-    * strategy at every use site via [[rulesJoin]]: broadcast up to
-    * [[MaxBroadcastHosts]], shuffle-hash on host above. */
-  final case class Joined(packed: DataFrame, hosts: Long = -1L) extends RobotsPolicy {
-    def withAllowed(df: DataFrame, path: Column, out: String): DataFrame = {
-      val joined = rulesJoin(df, packed.select(col("host"), col("__rules")), hosts)
-      // first match in longest-first order IS the longest match; no rule
-      // row or no matching prefix → allowed (same contract as compile)
-      joined.withColumn(out, coalesce(
-          get(filter(col("__rules"), r => startswith(path, r.getField("prefix"))), lit(0))
-            .getField("allow"),
-          lit(true)))
-        .drop("__rules")
+  /** Prefix rows as per-host robots.txt groups. */
+  def groups(rules: Seq[RobotsRule]): Map[String, RobotsTxt.Group] =
+    rules.groupBy(_.host).map { case (h, rs) =>
+      h -> RobotsTxt.Group(rs.map(r => RobotsTxt.TxtRule(r.path_prefix, r.allow)),
+        Some(rs.map(_.crawl_delay).max))
     }
-    def withBudget(df: DataFrame, hostBudget: Int, out: String): DataFrame = {
-      val joined = rulesJoin(df, packed.select(col("host"), col("__delay")), hosts)
-      joined.withColumn(out,
-          when(col("__delay").isNull, lit(hostBudget))
-            .otherwise(greatest(lit(1),
-              floor(lit(hostBudget) / greatest(lit(1), col("__delay"))).cast("int"))))
-        .drop("__delay")
-    }
-    def withDelay(df: DataFrame, out: String): DataFrame =
-      rulesJoin(df, packed.select(col("host"), col("__delay")), hosts)
-        .withColumn(out, greatest(lit(1L), coalesce(col("__delay").cast("long"), lit(1L))))
-        .drop("__delay")
-  }
 
-  /** Per-host effective delay column (virtual ticks): max over the host's
-    * rules, 1 when unruled — the [[CrawlOracle]]-identical form. */
-  def delayColumn(rules: Seq[RobotsRule], host: Column): Column = {
-    val delays: Map[String, Int] =
-      rules.groupBy(_.host).map { case (h, rs) => h -> rs.map(_.crawl_delay).max }
-    delays.foldLeft(lit(1L)) { case (acc, (h, d)) =>
-      when(host === lit(h), lit(math.max(1, d).toLong)).otherwise(acc)
-    }
-  }
+  /** A (host, path_prefix, allow, crawl_delay) table as the exploded
+    * (host, pattern, allow, delay) rows [[RobotsTxt.packTxt]] packs. */
+  def txtRows(rulesDf: DataFrame): DataFrame =
+    rulesDf.select(col("host"), col("path_prefix").as("pattern"), col("allow"),
+      col("crawl_delay").as("delay"))
 
-  /** Pack a (host, path_prefix, allow, crawl_delay) rules table into the
-    * one-row-per-host broadcast layout [[Joined]] consumes. */
-  def packRules(rulesDf: DataFrame): DataFrame =
-    rulesDf.groupBy(col("host")).agg(
-      // sort key = (-len, prefix, allow): longest-first, deterministic
-      transform(
-        sort_array(collect_list(struct(
-          (-length(col("path_prefix"))).as("nl"),
-          col("path_prefix").as("prefix"),
-          col("allow").as("allow")))),
-        r => struct(r.getField("prefix").as("prefix"), r.getField("allow").as("allow"))
-      ).as("__rules"),
-      max(col("crawl_delay")).as("__delay"))
-
-  /** Size-based cutover from a driver-resident rule Seq. */
+  /** Size-based cutover from a driver-resident rule Seq; runs no Spark
+    * job at or below [[MaxCompileHosts]] hosts. */
   def policy(rules: Seq[RobotsRule], spark: SparkSession): RobotsPolicy = {
-    val nHosts = rules.iterator.map(_.host).toSet.size
-    if (nHosts <= MaxCompileHosts) Compiled(rules)
-    else {
-      import spark.implicits._
-      Joined(packRules(rules.toDF()).persist(), nHosts.toLong)
-    }
+    import spark.implicits._
+    val byHost = groups(rules)
+    RobotsTxt.cutover(byHost.size, byHost, txtRows(rules.toDF()))
   }
 
   /** Size-based cutover from a rules DataFrame — the large-table entry
     * point: the driver never collects the raw rules above the threshold
-    * (only the per-host packed rows travel, as a broadcast). */
-  def policyFromDf(rulesDf: DataFrame): RobotsPolicy = {
-    val nHosts = rulesDf.select(col("host")).distinct().count()
-    if (nHosts <= MaxCompileHosts) {
-      val collected = rulesDf
-        .select(col("host"), col("path_prefix"), col("allow"), col("crawl_delay"))
-        .collect()
-        .map(r => RobotsRule(r.getString(0), r.getString(1), r.getBoolean(2), r.getInt(3)))
-        .toSeq
-      Compiled(collected)
-    } else Joined(packRules(rulesDf).persist(), nHosts)
-  }
-
-  /** Compile rules into a Boolean Column over (host, path).
-    * For each host, conditions are tested longest-prefix-first, so the
-    * first hit IS the longest match; hosts without rules are allowed. */
-  def compile(rules: Seq[RobotsRule], host: Column, path: Column): Column = {
-    val byHost = rules.groupBy(_.host)
-    byHost.foldLeft(lit(true)) { case (acc, (h, hostRules)) =>
-      val ordered = hostRules.sortBy(-_.path_prefix.length)
-      val hostDecision = ordered.foldRight(lit(true)) { (r, elseCol) =>
-        when(startswith(path, lit(r.path_prefix)), lit(r.allow)).otherwise(elseCol)
-      }
-      when(host === lit(h), hostDecision).otherwise(acc)
-    }
-  }
-
-  /** Per-host politeness budget from crawl_delay (FIXTURES.md §3):
-    * budget = max(1, hostBudget / max(1, crawl_delay)); hosts without a
-    * rule get hostBudget. Compiled to a Column the same way. */
-  def budgetColumn(rules: Seq[RobotsRule], host: Column, hostBudget: Int): Column = {
-    val delays: Map[String, Int] =
-      rules.groupBy(_.host).map { case (h, rs) => h -> rs.map(_.crawl_delay).max }
-    delays.foldLeft(lit(hostBudget)) { case (acc, (h, d)) =>
-      when(host === lit(h), lit(math.max(1, hostBudget / math.max(1, d)))).otherwise(acc)
-    }
-  }
-
+    * (only the per-host packed rows travel). */
+  def policyFromDf(rulesDf: DataFrame): RobotsPolicy =
+    RobotsTxt.policyFromRows(txtRows(rulesDf))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -12,13 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.regex.Pattern
 
-/** robots.txt TEXT → rules compiler (RFC 9309), the piece round 1 left
-  * out: the engine consumed pre-digested (host, path_prefix, allow,
-  * crawl_delay) rows, but anyone pointing the crawler at real robots data
-  * starts from robots.txt bodies. Semantics follow what the reference
-  * effectively enforces — colly → temoto/robotstxt
-  * (/root/reference/go.mod:22, active because IgnoreRobotsTxt defaults
-  * false at pkg/crawler/crawler.go:76):
+/** robots.txt rules (RFC 9309): the parser and the engine's one robots
+  * decision. Semantics follow what the reference effectively enforces —
+  * colly → temoto/robotstxt (go.mod:22, active because IgnoreRobotsTxt
+  * defaults false at pkg/crawler/crawler.go:76):
   *
   *  - `field: value` lines, case-insensitive field names, `#` comments;
   *  - groups = runs of consecutive `User-agent` lines + the rules after
@@ -33,14 +30,18 @@ import java.util.regex.Pattern
   *  - `Crawl-delay: N` (the de-facto extension colly surfaces) parses to
   *    ceil(N) and drives the per-host politeness budget.
   *
-  * Three consumption paths:
-  *  - [[parse]] — driver/oracle-side (also the golden twin in tests);
+  * Prefix rows ([[graft.model.RobotsRule]]) enter as rules whose pattern
+  * is `path_prefix` ([[Robots.groups]], [[Robots.txtRows]]). Consumption
+  * paths:
+  *  - [[parse]] / [[allowed]] — driver/oracle-side (also the golden twin
+  *    in tests and the decision [[graft.oracle.CrawlOracle]] applies);
   *  - [[parse_robots_txt]] — a codegen Catalyst expression for
   *    DISTRIBUTED parsing of a (host, body) table: robots corpora at
   *    10^7 hosts parse where the data lives, and only the resulting
-  *    rule rows move (into [[Robots.packRules]] or a compiled policy);
-  *  - [[policy]] — a [[Robots.RobotsPolicy]] over parsed groups, so the
-  *    wave loop runs unmodified on wildcard rules.
+  *    rule rows move;
+  *  - [[CompiledTxt]] / [[JoinedTxt]] — the two [[Robots.RobotsPolicy]]
+  *    forms, one [[cutover]] between them for rule Seqs, rule tables and
+  *    parsed bodies alike.
   */
 object RobotsTxt {
 
@@ -101,8 +102,7 @@ object RobotsTxt {
   /** Wildcard-pattern match: `*` = any sequence, trailing `$` = anchor,
     * otherwise prefix semantics. */
   def matches(pattern: String, path: String): Boolean = {
-    if (!pattern.contains('*') && !pattern.endsWith("$"))
-      return path.startsWith(pattern) // the hot, wildcard-free case
+    if (!isWild(pattern)) return path.startsWith(pattern) // the hot case
     patternCache.computeIfAbsent(pattern, compileRegex).matcher(path).find()
   }
 
@@ -141,8 +141,8 @@ object RobotsTxt {
     * (host, path) — rules sorted longest-first with allow before
     * disallow on ties, so the FIRST match is the decision. Wildcard-free
     * patterns stay `startswith` (codegen, no regex); wildcard patterns
-    * become anchored rlike. Same `when`-chain economics as
-    * [[Robots.compile]] — use below ~64 ruled hosts. */
+    * become anchored rlike. Use below ~64 ruled hosts
+    * ([[Robots.MaxCompileHosts]]). */
   def compileColumn(byHost: Map[String, Group], host: Column, path: Column): Column =
     byHost.foldLeft(lit(true)) { case (acc, (h, g)) =>
       val ordered = g.rules.sortBy(r => (-r.pattern.length, !r.allow))
@@ -152,12 +152,16 @@ object RobotsTxt {
       when(host === lit(h), decision).otherwise(acc)
     }
 
+  private def isWild(pattern: String): Boolean =
+    pattern.contains('*') || pattern.endsWith("$")
+
   private def matchColumn(pattern: String, path: Column): Column =
-    if (!pattern.contains('*') && !pattern.endsWith("$")) startswith(path, lit(pattern))
+    if (!isWild(pattern)) startswith(path, lit(pattern))
     else if (!pattern.contains('*')) path === lit(pattern.dropRight(1))
     else path.rlike(toRegex(pattern))
 
-  /** Crawl-delay budget column, same contract as [[Robots.budgetColumn]]. */
+  /** Crawl-delay budget column: max(1, hostBudget / max(1, crawl_delay));
+    * hosts without a delay get hostBudget. */
   def budgetColumn(byHost: Map[String, Group], host: Column, hostBudget: Int): Column =
     byHost.foldLeft(lit(hostBudget)) { case (acc, (h, g)) =>
       g.crawlDelay match {
@@ -167,17 +171,13 @@ object RobotsTxt {
       }
     }
 
-  /** A [[Robots.RobotsPolicy]] over parsed robots.txt groups — plugs the
-    * text compiler straight into CrawlJob/Politeness. */
+  /** The compiled [[Robots.RobotsPolicy]] over per-host groups. */
   final case class CompiledTxt(byHost: Map[String, Group]) extends Robots.RobotsPolicy {
-    def withAllowed(df: org.apache.spark.sql.DataFrame, path: Column,
-        out: String): org.apache.spark.sql.DataFrame =
+    def withAllowed(df: DataFrame, path: Column, out: String): DataFrame =
       df.withColumn(out, compileColumn(byHost, col("host"), path))
-    def withBudget(df: org.apache.spark.sql.DataFrame, hostBudget: Int,
-        out: String): org.apache.spark.sql.DataFrame =
+    def withBudget(df: DataFrame, hostBudget: Int, out: String): DataFrame =
       df.withColumn(out, budgetColumn(byHost, col("host"), hostBudget))
-    def withDelay(df: org.apache.spark.sql.DataFrame,
-        out: String): org.apache.spark.sql.DataFrame =
+    def withDelay(df: DataFrame, out: String): DataFrame =
       df.withColumn(out,
         byHost.foldLeft(lit(1L)) { case (acc, (h, g)) =>
           g.crawlDelay match {
@@ -188,98 +188,105 @@ object RobotsTxt {
         })
   }
 
-  def policy(byHost: Map[String, Group]): Robots.RobotsPolicy = CompiledTxt(byHost)
-
   /** Join-path twin of [[CompiledTxt]] for rule sets past the compile
-    * cutover: one packed row per host — rules sorted (longest pattern
-    * first, allow before disallow on ties) so the FIRST matching rule IS
-    * the RFC 9309 decision — joined on `host` alone. Wildcard-free
-    * patterns probe via codegen `startswith`; wildcard / anchored
-    * patterns carry their pre-translated regex (`rx`) and probe via
-    * rlike. Scales to 10^7 robots.txt hosts: bodies parse where they
-    * live ([[parse_robots_txt]]), only packed rows move, and past
-    * [[Robots.MaxBroadcastHosts]] packed rows the join goes shuffle-hash
-    * on host instead of broadcast (same cutover as [[Robots.Joined]] —
-    * no O(rules) broadcast at the 10^7 regime). */
-  final case class JoinedTxt(packed: org.apache.spark.sql.DataFrame,
-      hosts: Long = -1L) extends Robots.RobotsPolicy {
-    def withAllowed(df: org.apache.spark.sql.DataFrame, path: Column,
-        out: String): org.apache.spark.sql.DataFrame = {
-      val joined = Robots.rulesJoin(df,
-        packed.select(col("host"), col("__rules")), hosts)
-      joined.withColumn(out, coalesce(
+    * cutover: one packed row per host ([[packTxt]]) — rules sorted
+    * (longest pattern first, allow before disallow on ties) so the FIRST
+    * matching rule IS the RFC 9309 decision — joined on `host` alone.
+    * Wildcard-free patterns probe via codegen `startswith`; wildcard /
+    * anchored patterns carry their pre-translated regex (`rx`) and probe
+    * via rlike. `hosts` (the packed row count; -1 = unknown/assume small)
+    * picks the join: broadcast up to [[Robots.MaxBroadcastHosts]],
+    * shuffle-hash on host above — no O(rules) broadcast at the 10^7
+    * regime. */
+  final case class JoinedTxt(packed: DataFrame, hosts: Long = -1L)
+      extends Robots.RobotsPolicy {
+    /** Hash map built from the per-partition slice of the PACKED side
+      * above the cutover — O(rules/P) per task, never sorted, never
+      * resident whole. */
+    private def rulesJoin(df: DataFrame, packedCol: String): DataFrame = {
+      val side = packed.select(col("host"), col(packedCol))
+      if (hosts >= 0 && hosts > Robots.MaxBroadcastHosts)
+        df.join(side.hint("shuffle_hash"), Seq("host"), "left_outer")
+      else df.join(broadcast(side), Seq("host"), "left_outer")
+    }
+    def withAllowed(df: DataFrame, path: Column, out: String): DataFrame =
+      rulesJoin(df, "__rules")
+        .withColumn(out, coalesce(
           get(filter(col("__rules"), r =>
-            when(r.getField("wild"), rlike(path, r.getField("rx")))
+            when(r.getField("rx").isNotNull, rlike(path, r.getField("rx")))
               .otherwise(startswith(path, r.getField("pattern")))), lit(0))
             .getField("allow"),
           lit(true)))
         .drop("__rules")
-    }
-    def withBudget(df: org.apache.spark.sql.DataFrame, hostBudget: Int,
-        out: String): org.apache.spark.sql.DataFrame = {
-      val joined = Robots.rulesJoin(df,
-        packed.select(col("host"), col("__delay")), hosts)
-      joined.withColumn(out,
+    def withBudget(df: DataFrame, hostBudget: Int, out: String): DataFrame =
+      rulesJoin(df, "__delay")
+        .withColumn(out,
           when(col("__delay").isNull, lit(hostBudget))
             .otherwise(greatest(lit(1),
               floor(lit(hostBudget) / greatest(lit(1), col("__delay"))).cast("int"))))
         .drop("__delay")
-    }
-    def withDelay(df: org.apache.spark.sql.DataFrame,
-        out: String): org.apache.spark.sql.DataFrame =
-      Robots.rulesJoin(df, packed.select(col("host"), col("__delay")), hosts)
+    def withDelay(df: DataFrame, out: String): DataFrame =
+      rulesJoin(df, "__delay")
         .withColumn(out, greatest(lit(1L), coalesce(col("__delay").cast("long"), lit(1L))))
         .drop("__delay")
+    override def release(): Unit = { packed.unpersist(); () }
   }
 
-  /** Pack a distributed-parsed (host, p: parsedType) frame into the
-    * one-row-per-host broadcast layout [[JoinedTxt]] consumes. */
-  def packTxt(parsed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ex = parsed.select(col("host"),
-        col("p").getField("crawl_delay").as("__d"),
-        explode_outer(col("p").getField("rules")).as("r"))
-      .select(col("host"), col("__d"),
-        col("r").getField("pattern").as("pattern"),
-        col("r").getField("allow").as("allow"))
-      .withColumn("rx", robots_pattern_regex(col("pattern")))
-      .withColumn("wild",
-        col("pattern").contains("*") || col("pattern").endsWith("$"))
-    ex.groupBy(col("host")).agg(
+  /** Pack exploded (host, pattern, allow, delay) rows — a null pattern is
+    * a host with no rules — into the one-row-per-host layout [[JoinedTxt]]
+    * consumes. `rx` is filled only for wildcard patterns, so a packed
+    * prefix-rule row carries no regex. */
+  def packTxt(rows: DataFrame): DataFrame = {
+    val wild = col("pattern").contains("*") || col("pattern").endsWith("$")
+    rows.groupBy(col("host")).agg(
       transform(
         sort_array(collect_list(when(col("pattern").isNotNull, struct(
           (-length(col("pattern"))).as("nl"),
           (!col("allow")).as("na"),
-          col("pattern").as("pattern"), col("rx").as("rx"),
-          col("wild").as("wild"), col("allow").as("allow"))))),
+          col("pattern").as("pattern"),
+          when(wild, robots_pattern_regex(col("pattern"))).as("rx"),
+          col("allow").as("allow"))))),
         r => struct(r.getField("pattern").as("pattern"), r.getField("rx").as("rx"),
-          r.getField("wild").as("wild"), r.getField("allow").as("allow"))
+          r.getField("allow").as("allow"))
       ).as("__rules"),
-      max(col("__d")).as("__delay"))
+      max(col("delay")).as("__delay"))
   }
+
+  /** The one compile→join cutover, for rule Seqs, rule tables and parsed
+    * bodies alike: up to [[Robots.MaxCompileHosts]] ruled hosts compile
+    * to the `when`-chain, more pack into a persisted [[JoinedTxt]]. */
+  private[operators] def cutover(nHosts: Long, byHost: => Map[String, Group],
+      rows: => DataFrame): Robots.RobotsPolicy =
+    if (nHosts <= Robots.MaxCompileHosts) CompiledTxt(byHost)
+    else JoinedTxt(packTxt(rows).persist(), nHosts)
+
+  /** [[cutover]] over exploded (host, pattern, allow, delay) rows: one
+    * distinct-host count; only below the cutover do the rows reach the
+    * driver. */
+  private[operators] def policyFromRows(rows: DataFrame): Robots.RobotsPolicy =
+    cutover(rows.select(col("host")).distinct().count(),
+      rows.collect().groupBy(_.getString(0)).map { case (h, rs) =>
+        val rules = rs.filterNot(_.isNullAt(1)).map(r => TxtRule(r.getString(1), r.getBoolean(2)))
+        h -> Group(rules.toSeq, rs.filterNot(_.isNullAt(3)).map(_.getInt(3)).reduceOption(math.max))
+      },
+      rows)
+
+  /** A (host, body) robots.txt corpus as exploded (host, pattern, allow,
+    * delay) rows, each body parsed once where it lives. */
+  def bodyRows(bodies: DataFrame, agent: String): DataFrame =
+    bodies.select(col("host"), parse_robots_txt(col("body"), lit(agent)).as("p"))
+      .select(col("host"), col("p").getField("crawl_delay").as("delay"),
+        explode_outer(col("p").getField("rules")).as("r"))
+      .select(col("host"), col("r").getField("pattern").as("pattern"),
+        col("r").getField("allow").as("allow"), col("delay"))
 
   /** Size-adaptive policy straight from a (host, body) robots.txt corpus
     * — the CLI/production entry point (`--robots-txt`). Bodies parse
     * DISTRIBUTED; below the cutover the parsed groups collect into the
     * codegen'd compiled chain, above it only the packed per-host rows
-    * ever move (broadcast join) and the driver never holds a rule. */
-  def policyFromTxt(bodies: org.apache.spark.sql.DataFrame, agent: String,
-      maxCompileHosts: Int = Robots.MaxCompileHosts): Robots.RobotsPolicy = {
-    val parsed = bodies.select(col("host"),
-      parse_robots_txt(col("body"), lit(agent)).as("p"))
-    val nHosts = parsed.select(col("host")).distinct().count()
-    if (nHosts <= maxCompileHosts) {
-      val byHost = parsed.collect().map { r =>
-        val p = r.getStruct(1)
-        val rules =
-          if (p == null) Seq.empty[TxtRule]
-          else p.getSeq[org.apache.spark.sql.Row](0)
-            .map(rr => TxtRule(rr.getString(0), rr.getBoolean(1))).toSeq
-        val delay = if (p == null || p.isNullAt(1)) None else Some(p.getInt(1))
-        r.getString(0) -> Group(rules, delay)
-      }.toMap
-      CompiledTxt(byHost)
-    } else JoinedTxt(packTxt(parsed).persist(), nHosts)
-  }
+    * ever move and the driver never holds a rule. */
+  def policyFromTxt(bodies: DataFrame, agent: String): Robots.RobotsPolicy =
+    policyFromRows(bodyRows(bodies, agent))
 
   // ---- distributed parse: a codegen Catalyst expression ------------------
 

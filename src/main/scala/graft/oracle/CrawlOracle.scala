@@ -1,6 +1,7 @@
 package graft.oracle
 
 import graft.functions.UrlOps
+import graft.operators.RobotsTxt
 import graft.model._
 
 import scala.collection.mutable
@@ -58,7 +59,7 @@ object CrawlOracle {
   }
 
   /** Effective crawl delay in virtual ticks: max over the host's rules,
-    * 1 when unruled (Robots.delayColumn's twin). */
+    * 1 when unruled (the robots policies' withDelay twin). */
   def delayOf(rules: Seq[RobotsRule], host: String): Long = {
     val delays = rules.filter(_.host == host).map(_.crawl_delay)
     math.max(1, if (delays.isEmpty) 1 else delays.max).toLong
@@ -76,15 +77,16 @@ object CrawlOracle {
     if (start >= wEnd) 0 else (((wEnd - start) + d - 1) / d).toInt
   }
 
-  /** Longest-prefix robots decision over the canonical URL's path;
-    * no matching rule → allowed. */
+  /** The RFC 9309 robots decision over the canonical URL's path (each
+    * `path_prefix` a robots.txt pattern, [[RobotsTxt.allowed]]): longest
+    * match wins, allow wins ties, no matching rule → allowed. */
   def robotsAllowed(rules: Seq[RobotsRule], url: String): Boolean = {
     val p = UrlOps.parse(url)
     val host = UrlOps.hostOf(p.authority)
     val path = if (p.path.isEmpty) "/" else p.path
-    val matching = rules.filter(r => r.host == host && path.startsWith(r.path_prefix))
-    if (matching.isEmpty) true
-    else matching.maxBy(_.path_prefix.length).allow
+    RobotsTxt.allowed(RobotsTxt.Group(
+      rules.collect { case r if r.host == host => RobotsTxt.TxtRule(r.path_prefix, r.allow) },
+      None), path)
   }
 
   def run(corpus: Seq[WebDoc], rules: Seq[RobotsRule], cfg: CrawlConfig): Result = {

@@ -30,10 +30,11 @@ import scala.concurrent.duration.Duration
   *    global row_number (no single-partition stage anywhere in the wave);
   *  - each wave round-trips state through IceLite parquet: lineage
   *    truncation + atomic checkpoint + exact kill/resume for free;
-  *  - robots rules ride a [[Robots.RobotsPolicy]]: a constant-folded
-  *    codegen predicate up to [[Robots.MaxCompileHosts]] distinct hosts, a
-  *    broadcast packed-rules join above it (the compiled `when`-chain
-  *    blows the 64 KB codegen method limit past ~64 hosts).
+  *  - robots rules ride a [[Robots.RobotsPolicy]], one RFC 9309 decision
+  *    (longest match wins, allow wins ties) in two forms: a
+  *    constant-folded codegen predicate up to [[Robots.MaxCompileHosts]]
+  *    distinct hosts, a packed-rules join on host above it (the compiled
+  *    `when`-chain blows the 64 KB codegen method limit past ~64 hosts).
   */
 object CrawlJob {
 
@@ -141,11 +142,15 @@ object CrawlJob {
 
   /** Run (or resume) the crawl to completion. `docsDf` is the synthetic
     * web: the fetch step is an equi-join against it (no network in the
-    * sandbox — SURVEY §2.1 S2). Returns the per-wave metrics. */
+    * sandbox — SURVEY §2.1 S2). Returns the per-wave metrics. The
+    * policy built from `rules` is this call's own: a packed rules table
+    * is freed on every exit. [[runWithPolicy]] callers own theirs. */
   def run(spark: SparkSession, docsDf: DataFrame, rules: Seq[RobotsRule],
-      cfg: Config, stateRoot: String): Seq[WaveMetrics] =
-    runWithPolicy(spark, docsDf,
-      Robots.policy(rules, spark), cfg, stateRoot)
+      cfg: Config, stateRoot: String): Seq[WaveMetrics] = {
+    val policy = Robots.policy(rules, spark)
+    try runWithPolicy(spark, docsDf, policy, cfg, stateRoot)
+    finally policy.release()
+  }
 
   def runWithPolicy(spark: SparkSession, docsDf: DataFrame,
       policy: Robots.RobotsPolicy, cfg: Config, stateRoot: String): Seq[WaveMetrics] = {

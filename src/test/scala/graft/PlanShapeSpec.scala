@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.RobotsRule
-import graft.operators.Robots
+import graft.operators.{Robots, RobotsTxt}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -21,7 +21,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val frontier = BenchKernelRunner.frontierDf(spark, 10000, 4)
     // build the kernel's plan (un-executed) by reproducing its stages
     val (fetch, _) = graft.operators.Politeness.select(
-      frontier, BenchKernelRunner.benchRules, 100, 4)
+      frontier, Robots.policy(BenchKernelRunner.benchRules, spark), 100, 4)
     val ranked = graft.operators.Ranker.orderIsomorphicId(
       fetch, Seq(col("depth"), col("parent_ord"), col("link_index")), "ord", 0L, 4)
     val plan = ranked.queryExecution.executedPlan.toString
@@ -36,7 +36,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq(("a.com", "/private/x"), ("a.com", "/public"), ("b.com", "/private"))
       .toDF("host", "path")
-      .filter(Robots.compile(rules, col("host"), col("path")))
+      .filter(RobotsTxt.compileColumn(Robots.groups(rules), col("host"), col("path")))
     val got = df.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == Set(("a.com", "/public"), ("b.com", "/private")))
     // the predicate is a pure expression tree — no join/aggregate nodes
@@ -56,9 +56,9 @@ class PlanShapeSpec extends AnyFunSuite {
       ("a.com", "/private/x"), ("a.com", "/private/open/y"), ("a.com", "/"),
       ("b.com", "/anything"), ("c.com", "/z"))
     val df = rows.toDF("host", "path")
-    val viaCompile = df.filter(Robots.compile(rules, col("host"), col("path")))
+    val viaCompile = df.filter(RobotsTxt.compileColumn(Robots.groups(rules), col("host"), col("path")))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val policy = Robots.Joined(Robots.packRules(rules.toDF()))
+    val policy = RobotsTxt.JoinedTxt(RobotsTxt.packTxt(Robots.txtRows(rules.toDF())))
     val viaJoin = policy.withAllowed(df, col("path"), "__ok")
       .filter(col("__ok")).drop("__ok")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -77,7 +77,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // broadcast disabled: any surviving BroadcastExchange would be the
     // hardcoded broadcast() call this test guards against.
     val frontier = BenchKernelRunner.frontierDf(spark, 5000, 4)
-    val policy = Robots.Compiled(BenchKernelRunner.benchRules)
+    val policy = Robots.policy(BenchKernelRunner.benchRules, spark)
     val clock = spark.range(0, 100)
       .select(concat(lit("h"), col("id"), lit(".example.org")).as("host"),
         col("id").as("next_ts"))
@@ -197,11 +197,11 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark.implicits._
     val rules = (0 until 300).map(h =>
       RobotsRule(s"h$h.com", if (h % 4 == 3) "/p/1" else "/", allow = h % 4 != 3, 1))
-    val packed = Robots.packRules(rules.toDF()).persist()
+    val packed = RobotsTxt.packTxt(Robots.txtRows(rules.toDF())).persist()
     try {
       // hosts declared past MaxBroadcastHosts → the shuffle-hash strategy
       // (the table is small here; the PLAN SHAPE is what's under test)
-      val policy = Robots.Joined(packed, Robots.MaxBroadcastHosts + 1)
+      val policy = RobotsTxt.JoinedTxt(packed, Robots.MaxBroadcastHosts + 1)
       val df = spark.range(0, 5000)
         .select(concat(lit("h"), pmod(col("id"), lit(400)), lit(".com")).as("host"),
           concat(lit("/p/"), pmod(col("id"), lit(7))).as("path"))
@@ -231,8 +231,8 @@ class PlanShapeSpec extends AnyFunSuite {
         xxhash64(col("id")).as("url_hash"),
         concat(lit("h"), pmod(col("id"), lit(300)), lit(".com")).as("host"),
         lit(1).as("depth"), col("id").as("parent_ord"), lit(0).as("link_index"))
-    val compiled = Robots.Compiled(rules)
-    val joined = Robots.Joined(Robots.packRules(rules.toDF()))
+    val compiled = RobotsTxt.CompiledTxt(Robots.groups(rules))
+    val joined = RobotsTxt.JoinedTxt(RobotsTxt.packTxt(Robots.txtRows(rules.toDF())))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0))).toSet
     val (fc, dc) = graft.operators.Politeness.select(frontier, compiled, 8, 4)

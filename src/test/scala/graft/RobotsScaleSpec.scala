@@ -30,11 +30,12 @@ class RobotsScaleSpec extends AnyFunSuite {
 
   test("shuffle-path rules join is decision-identical to broadcast at 10^5 hosts") {
     val nHosts = 100000
-    val packed = Robots.packRules(BenchKernelRunner.benchRulesDf(spark, nHosts)).persist()
+    val packed = RobotsTxt.packTxt(Robots.txtRows(BenchKernelRunner.benchRulesDf(spark, nHosts)))
+      .persist()
     try {
       assert(nHosts > Robots.MaxBroadcastHosts)
-      val shuffled = Robots.Joined(packed, nHosts.toLong) // > cutover → shuffle-hash
-      val broadcasted = Robots.Joined(packed, hosts = -1L) // forced broadcast
+      val shuffled = RobotsTxt.JoinedTxt(packed, nHosts.toLong) // > cutover → shuffle-hash
+      val broadcasted = RobotsTxt.JoinedTxt(packed, hosts = -1L) // forced broadcast
       val df = frontier(20000, (nHosts * 1.5).toInt)
 
       def key(out: org.apache.spark.sql.DataFrame, c: String) =
@@ -69,8 +70,7 @@ class RobotsScaleSpec extends AnyFunSuite {
       .select(concat(lit("h"), col("id"), lit(".example.org")).as("host"),
         concat(lit("User-agent: *\nDisallow: /p/1\nAllow: /p/1/open\nCrawl-delay: "),
           (pmod(col("id"), lit(3)) + 1).cast("string")).as("body"))
-    val packed = RobotsTxt.packTxt(bodies.select(col("host"),
-      RobotsTxt.parse_robots_txt(col("body"), lit("graft")).as("p"))).persist()
+    val packed = RobotsTxt.packTxt(RobotsTxt.bodyRows(bodies, "graft")).persist()
     try {
       val shuffled = RobotsTxt.JoinedTxt(packed, Robots.MaxBroadcastHosts + 1)
       val broadcasted = RobotsTxt.JoinedTxt(packed, hosts = -1L)
@@ -88,10 +88,11 @@ class RobotsScaleSpec extends AnyFunSuite {
 
   test("politeness via the shuffle-path policy matches the broadcast-path policy") {
     val nHosts = 100000
-    val packed = Robots.packRules(BenchKernelRunner.benchRulesDf(spark, nHosts)).persist()
+    val packed = RobotsTxt.packTxt(Robots.txtRows(BenchKernelRunner.benchRulesDf(spark, nHosts)))
+      .persist()
     try {
-      val shuffled = Robots.Joined(packed, nHosts.toLong)
-      val broadcasted = Robots.Joined(packed, hosts = -1L)
+      val shuffled = RobotsTxt.JoinedTxt(packed, nHosts.toLong)
+      val broadcasted = RobotsTxt.JoinedTxt(packed, hosts = -1L)
       val f = frontier(10000, nHosts)
         .withColumn("url_hash", xxhash64(col("url")))
         .withColumn("depth", lit(1))

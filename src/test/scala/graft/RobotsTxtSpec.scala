@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.RobotsTxt
+import graft.model.RobotsRule
+import graft.operators.{Robots, RobotsTxt}
 import graft.operators.RobotsTxt.{Group, TxtRule}
+import graft.oracle.CrawlOracle
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -154,10 +156,11 @@ class RobotsTxtSpec extends AnyFunSuite {
       ("h3.com", "# empty"),
       ("h4.com", "User-agent: graftbot\nDisallow: /g\n\nUser-agent: *\nDisallow: /x"))
     val bodiesDf = bodies.toDF("host", "body")
-    val compiled = RobotsTxt.policyFromTxt(bodiesDf, "graftbot", maxCompileHosts = 64)
-    val joined = RobotsTxt.policyFromTxt(bodiesDf, "graftbot", maxCompileHosts = 1)
-    assert(compiled.isInstanceOf[RobotsTxt.CompiledTxt])
-    assert(joined.isInstanceOf[RobotsTxt.JoinedTxt])
+    val compiled = RobotsTxt.CompiledTxt(
+      bodies.map { case (h, b) => h -> RobotsTxt.parse(b, "graftbot") }.toMap)
+    val joined = RobotsTxt.JoinedTxt(RobotsTxt.packTxt(RobotsTxt.bodyRows(bodiesDf, "graftbot")))
+    // below the cutover the distributed parse collects to the driver parse
+    assert(RobotsTxt.policyFromTxt(bodiesDf, "graftbot") == compiled)
     val paths = Seq("/p/1", "/p/10", "/d/secret/x", "/open-a.html", "/open-a.html?x",
       "/", "/pub/x", "/x/y", "/g/z", "/anything")
     val rows = for { h <- bodies.map(_._1) :+ "unruled.com"; p <- paths } yield (h, p)
@@ -194,6 +197,60 @@ class RobotsTxtSpec extends AnyFunSuite {
       val g = RobotsTxt.parse(body, "graftbot")
       assert(parsed(h)._1 == g.rules, s"rules mismatch for $h")
       assert(parsed(h)._2 == g.crawlDelay, s"delay mismatch for $h")
+    }
+  }
+
+  // ---- prefix rows: one decision rule on every form and the oracle -------
+
+  /** `rules` on host h.com decided over `paths` three ways: the policy
+    * over h.com alone (compiled), the policy with 100 padded hosts
+    * (packed), and the oracle. */
+  private def decideEverywhere(rules: Seq[RobotsRule], paths: Seq[String])
+      : Seq[Map[String, Boolean]] = {
+    import spark.implicits._
+    val pad = (0 until 100).map(i =>
+      RobotsRule(s"pad$i.example.net", "/blocked", allow = false, crawl_delay = 1))
+    val df = paths.map(p => ("h.com", p)).toDF("host", "path")
+    def engine(rs: Seq[RobotsRule], form: Class[_]): Map[String, Boolean] = {
+      val policy = Robots.policy(rs, spark)
+      assert(form.isInstance(policy), s"${rs.size} rules built $policy")
+      try policy.withAllowed(df, col("path"), "ok").collect()
+        .map(r => r.getString(1) -> r.getBoolean(2)).toMap
+      finally policy.release()
+    }
+    Seq(engine(rules, classOf[RobotsTxt.CompiledTxt]),
+      engine(rules ++ pad, classOf[RobotsTxt.JoinedTxt]),
+      paths.map(p => p -> CrawlOracle.robotsAllowed(rules, s"http://h.com$p")).toMap)
+  }
+
+  test("duplicate prefix, opposite allow: allow on every form, either order") {
+    val want = Map("/p/1" -> true, "/p/1/x" -> true, "/p/2" -> false, "/" -> true)
+    Seq(true, false).foreach { allowFirst =>
+      val rules = Seq(
+        RobotsRule("h.com", "/p/1", allow = allowFirst, crawl_delay = 1),
+        RobotsRule("h.com", "/p/1", allow = !allowFirst, crawl_delay = 1),
+        RobotsRule("h.com", "/p", allow = false, crawl_delay = 1))
+      decideEverywhere(rules, want.keys.toSeq).zip(Seq("compiled", "packed", "oracle"))
+        .foreach { case (got, form) =>
+          assert(got == want, s"$form, allow listed first = $allowFirst")
+        }
+    }
+  }
+
+  test("a wildcard path_prefix decides the same on the engine and the oracle") {
+    val want = Map("/x.php" -> false, "/a/b.php" -> false, "/a/ok.php" -> true,
+      "/x.phps" -> true, "/a/b.html" -> true, "/a/ok.php/y" -> false)
+    Seq(false, true).foreach { reversed =>
+      val rules = Seq(
+        RobotsRule("h.com", "/*.php$", allow = false, crawl_delay = 1),
+        RobotsRule("h.com", "/a/", allow = true, crawl_delay = 1),
+        RobotsRule("h.com", "/a/ok.php$", allow = true, crawl_delay = 1),
+        RobotsRule("h.com", "/a/*/y", allow = false, crawl_delay = 1))
+      val ordered = if (reversed) rules.reverse else rules
+      decideEverywhere(ordered, want.keys.toSeq).zip(Seq("compiled", "packed", "oracle"))
+        .foreach { case (got, form) =>
+          assert(got == want, s"$form, rules reversed = $reversed")
+        }
     }
   }
 }

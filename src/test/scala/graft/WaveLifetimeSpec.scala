@@ -1,5 +1,7 @@
 package graft
 
+import graft.model.RobotsRule
+import graft.operators.Robots
 import graft.plans.{CrawlJob, SeenState}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
@@ -51,8 +53,13 @@ class WaveLifetimeSpec extends AnyFunSuite {
 
     val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 12, linksPerPage = 5)
     val root = Files.createTempDirectory("graft-seen-rdds").toString
+    // padded past the compile cutover: the crawl packs (and must free) a
+    // rules table of its own
+    val rules = Corpus.robotsRules(cfg) ++ (0 until 100).map(i =>
+      RobotsRule(s"pad$i.example.net", "/blocked", allow = false, crawl_delay = 1))
+    assert(rules.map(_.host).distinct.size > Robots.MaxCompileHosts)
     val beforeRun = persisted
-    CrawlJob.run(spark, Corpus.toDf(spark, cfg), Corpus.robotsRules(cfg),
+    CrawlJob.run(spark, Corpus.toDf(spark, cfg), rules,
       CrawlJob.Config(Seq(Corpus.pageUrl(cfg, 0, 0)), hostBudget = 3, maxWaves = 4,
         numPartitions = 4, saltBuckets = 2), root)
     assert(persisted == beforeRun, s"a finished crawl left persisted RDDs ${persisted -- beforeRun}")
