@@ -88,13 +88,15 @@ object BenchKernelRunner {
     val t0 = System.nanoTime()
     val budgeter = graft.operators.Politeness.clockedBudgeter(
       policy, clock, wave = 0, ticksPerWave = 1 << 26, clockHosts = hint)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (fetch, defer) = graft.operators.Politeness.selectWith(
       frontier, budgeter, saltBuckets = cpus * 2, hostsHint = hint,
-      frontierHint = n)
+      frontierHint = n, hold = df => { held += df; df.persist() })
     val urls = fetch.count() + defer.count()
     val wall = (System.nanoTime() - t0) / 1e9
     frontier.unpersist(blocking = true) // rep hygiene, outside the timed region
     clock.unpersist(blocking = true)
+    held.foreach(_.unpersist(blocking = true))
     (wall, urls)
   }
 

@@ -90,6 +90,7 @@ object PlanDump {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      val held = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
       try {
         // every one of the 100k hosts is contended (2 rows vs budget 1),
         // so the MEASURED cutover keeps the shuffle join — the regime a
@@ -108,10 +109,11 @@ object PlanDump {
           wide,
           operators.Politeness.clockedBudgeter(policy, clock, wave = 0,
             ticksPerWave = 1, clockHosts = over),
-          saltBuckets = 4, hostsHint = over)
+          saltBuckets = 4, hostsHint = over, hold = df => { held += df; df.persist() })
         fetch.collect() // force the final AQE plan
         fetch.queryExecution.explainString(FormattedMode)
       } finally {
+        held.foreach(_.unpersist())
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }

@@ -42,9 +42,12 @@ object FrontierKernel {
 
     // 1. politeness (contended-host split + two-phase salted top-k; the
     // frontier total rides along so a large frontier with an empty
-    // contended set skips the windowed branch's full scan)
+    // contended set skips the windowed branch's full scan). A measured
+    // contended-host set is cached through `hold` and freed with the
+    // fetch set.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (fetchSet0, _) = Politeness.select(frontier, policy, hostBudget, saltBuckets,
-      frontierHint = frontierTotal)
+      frontierHint = frontierTotal, hold = df => { held += df; df.persist() })
 
     // 2. visit ids (persisted: counted here, then deduped)
     val fetchSet = Ranker.orderIsomorphicId(fetchSet0, priorityKeys, "ord",
@@ -71,6 +74,7 @@ object FrontierKernel {
     val nNew = obs.get("new").asInstanceOf[Long]
     val nAdm = Option(obs.get("adm")).map(_.asInstanceOf[Long]).getOrElse(0L)
     fetchSet.unpersist()
+    held.foreach(_.unpersist())
     KernelResult(scheduled, frontierTotal - scheduled, nNew, scheduled - nNew, nNew - nAdm)
   }
 }

@@ -63,11 +63,11 @@ object Politeness {
   val SkipContendedProbeAt: Long = 1L << 22
 
   def select(frontier: DataFrame, policy: Robots.RobotsPolicy, hostBudget: Int,
-      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L)
-      : (DataFrame, DataFrame) =
+      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L,
+      hold: DataFrame => DataFrame = _.persist()): (DataFrame, DataFrame) =
     selectWith(frontier,
       (df, out) => policy.withBudget(df, hostBudget, out), saltBuckets, hostsHint,
-      frontierHint)
+      frontierHint, hold)
 
   /** Cross-wave virtual-clock budgeter (SURVEY P1: `ts_next(host) =
     * ts_last + crawl_delay` carryover). Wave w spans virtual ticks
@@ -105,10 +105,13 @@ object Politeness {
     * contended-host tag joins by shuffle-hash instead of broadcast (at
     * hostBudget≈wave-depth nearly every host is contended, so the tag set
     * is O(frontier hosts) — a broadcast there is the O(state) shape the
-    * clock join above just eliminated). */
+    * clock join above just eliminated). `hold` persists the measured
+    * contended-host set (past either hint) and takes ownership of it: the
+    * returned frames read that cache, so the caller unpersists it once
+    * they have been read. */
   def selectWith(frontier: DataFrame, budgeter: (DataFrame, String) => DataFrame,
-      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L)
-      : (DataFrame, DataFrame) = {
+      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L,
+      hold: DataFrame => DataFrame = _.persist()): (DataFrame, DataFrame) = {
     // tier 1: hosts under budget skip the windows entirely. The budget
     // joins against the per-host AGGREGATE (one row per host), so the
     // join path never touches the full frontier here.
@@ -120,7 +123,7 @@ object Politeness {
     // host high-water hint the contended set's size is unknowable
     // statically (budget-bound crawls contend nearly every host; deep
     // default-budget crawls contend a handful), so materialize it (an
-    // aggregate-sized localCheckpoint — computing it costs one host-count
+    // aggregate-sized `hold` cache — computing it costs one host-count
     // pass + one state join, never a frontier shuffle) and COUNT: a set
     // that measures small broadcasts (O(contended) ≤ the cutover, never
     // O(hosts)), a big one shuffle-joins. A static shuffle here would pay
@@ -140,7 +143,7 @@ object Politeness {
       (frontierHint >= SkipContendedProbeAt)
     val (contendedHosts, contendedEmpty) =
       if (needMeasure) {
-        val c = contendedHosts0.localCheckpoint(true)
+        val c = hold(contendedHosts0)
         val n = c.count()
         (if (n <= Robots.MaxBroadcastHosts) broadcast(c) else c, n == 0L)
       } else (broadcast(contendedHosts0), false)

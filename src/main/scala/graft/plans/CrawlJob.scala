@@ -435,11 +435,11 @@ object CrawlJob {
       val (fetchRaw, deferRaw) =
         if (!cfg.virtualClock)
           Politeness.select(frontier, policy, cfg.hostBudget, cfg.saltBuckets, hostHwm,
-            frontierHint = frontierSize)
+            frontierHint = frontierSize, hold = hold)
         else Politeness.selectWith(frontier,
           Politeness.clockedBudgeter(policy, clockCur, wave,
             cfg.hostBudget, hostHwm),
-          cfg.saltBuckets, hostHwm, frontierHint = frontierSize)
+          cfg.saltBuckets, hostHwm, frontierHint = frontierSize, hold = hold)
 
       // Delta-frontier mode: deferred rows stay in place in the durable
       // frontier (consumed-markers suppress fetched rows), so the deferred

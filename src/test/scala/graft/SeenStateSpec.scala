@@ -152,4 +152,49 @@ class SeenStateSpec extends AnyFunSuite {
       s.close()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("packed pieces hold at most 10 bytes of block storage per seen hash") {
+    val s = new SeenState(spark, buckets = 4, compactAt = 8)
+    try {
+      s.bootstrap(hashes(0, 200000))
+      s.addWave(hashes(200000, 210000))
+      s.addWave(hashes(210000, 220000))
+      assert(s.totalSeen == 220000L)
+      val bytes = s.storedBytes
+      assert(bytes > 0L && bytes <= 10L * s.totalSeen,
+        s"$bytes stored bytes for ${s.totalSeen} hashes")
+    } finally s.close()
+  }
+
+  test("packed scan: edge hashes, repeats, sparse buckets and nulls dedup exactly") {
+    import spark.implicits._
+    def frame(xs: Seq[Option[Long]]): DataFrame = xs.toDF("url_hash")
+    def some(xs: Long*): Seq[Option[Long]] = xs.map(Some(_))
+    val edges = Seq(Long.MinValue, Long.MinValue + 1, -42L, -1L, 0L, Long.MaxValue)
+    val base = (1L to 500L).map(_ * -7919L)
+    // a seen frame holding a null hash
+    val boot = some(edges ++ base: _*) :+ None
+    // a wave that repeats a hash, in itself and against the bootstrap
+    val repeats = Seq(5L, 5L, 6L, Long.MaxValue, 5L)
+    // fewer rows than buckets: most of the piece's partitions are empty
+    val sparse = Seq(Long.MaxValue - 1, 123L)
+    val unseen = Seq(Long.MinValue + 2, -3L, 7L, 1L << 62, Long.MaxValue - 2)
+    val cands = some(edges ++ repeats ++ sparse ++ unseen ++ base.take(50): _*) :+ None
+    val s = new SeenState(spark, buckets = 4, compactAt = 3)
+    try {
+      var seen = Set.empty[Long]
+      def check(): Unit = {
+        val got = s.freshAndConfirmed(frame(cands)).collect()
+          .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+        assert(got.flatten.toSet == cands.flatten.toSet -- seen)
+        assert(got.count(_.isEmpty) == 1, "a null candidate must pass through as fresh")
+      }
+      s.bootstrap(frame(boot)); seen ++= boot.flatten; check()
+      s.addWave(frame(some(repeats: _*))); seen ++= repeats; check()
+      assert(s.compactions == 0)
+      s.addWave(frame(some(sparse: _*))); seen ++= sparse
+      assert(s.compactions == 1)
+      check()
+    } finally s.close()
+  }
 }

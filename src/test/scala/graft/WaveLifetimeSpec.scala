@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.RobotsRule
-import graft.operators.Robots
+import graft.operators.{FrontierKernel, Politeness, Robots}
 import graft.plans.{CrawlJob, SeenState}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
@@ -63,5 +63,27 @@ class WaveLifetimeSpec extends AnyFunSuite {
       CrawlJob.Config(Seq(Corpus.pageUrl(cfg, 0, 0)), hostBudget = 3, maxWaves = 4,
         numPartitions = 4, saltBuckets = 2), root)
     assert(persisted == beforeRun, s"a finished crawl left persisted RDDs ${persisted -- beforeRun}")
+  }
+
+  test("measured politeness frees its contended-host set with the kernel pass") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // 300 rows: one hot host over its budget and 50 hosts under it
+    val frontier = spark.range(0, 300).select(
+      concat(lit("h"), when(col("id") < 100, lit(0L)).otherwise(col("id") % 50 + 1),
+        lit(".example.org")).as("host"),
+      xxhash64(col("id")).as("url_hash"),
+      concat(lit("http://h/p/"), col("id")).as("url"),
+      lit(0).as("depth"), col("id").as("parent_ord"), lit(0).as("link_index"))
+    val seen = new SeenState(spark, buckets = 4, compactAt = 8)
+    val policy = Robots.policy(Seq.empty, spark)
+    try {
+      seen.bootstrap(frontier.select("url_hash").limit(40))
+      val before = persisted
+      // a frontier hint at the probe threshold forces the measured path
+      val r = FrontierKernel.scheduleDedup(spark, frontier, Politeness.SkipContendedProbeAt,
+        seen, policy, hostBudget = 10, saltBuckets = 2, numPartitions = 4)
+      assert(r.scheduled == 10L + 200L, r.toString)
+      assert(persisted == before, s"the kernel pass left persisted RDDs ${persisted -- before}")
+    } finally { seen.close(); policy.release() }
   }
 }
