@@ -73,7 +73,7 @@ object BenchKernelRunner {
     * state joins (round-5 cutover); a small hint keeps the broadcast
     * shape — the pair measures what the no-O(hosts)-broadcast shape
     * costs. ticksPerWave is large so every host is under budget: the
-    * timed work is the state-join machinery itself, not window sorting. */
+    * timed work is the state-join machinery itself, not the cutoffs. */
   def runClocked(spark: SparkSession, n: Long, cpus: Int, clockHosts: Long,
       hint: Long): (Double, Long) = {
     val parts = cpus * 2
@@ -90,7 +90,7 @@ object BenchKernelRunner {
       policy, clock, wave = 0, ticksPerWave = 1 << 26, clockHosts = hint)
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (fetch, defer) = graft.operators.Politeness.selectWith(
-      frontier, budgeter, saltBuckets = cpus * 2, hostsHint = hint,
+      frontier, budgeter, hostsHint = hint,
       frontierHint = n, hold = df => { held += df; df.persist() })
     val urls = fetch.count() + defer.count()
     val wall = (System.nanoTime() - t0) / 1e9

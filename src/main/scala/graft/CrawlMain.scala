@@ -220,7 +220,7 @@ object CrawlMain {
       println(s"graceful-stop: committed through wave ${metrics.size - 1}; " +
         "re-run with the same --state to resume")
     if (emitOrder)
-      CrawlJob.visitOrder(spark, state, partitions)
+      CrawlJob.visitOrder(spark, state)
         .orderBy(col("rank")).show(50, truncate = false)
     spark.stop()
   }

@@ -27,7 +27,7 @@ object PlanDump {
     val kernel = {
       val frontier = BenchKernelRunner.frontierDf(spark, 10000, 4)
       val (fetch, _) = operators.Politeness.select(
-        frontier, operators.Robots.policy(BenchKernelRunner.benchRules, spark), 100, 4)
+        frontier, operators.Robots.policy(BenchKernelRunner.benchRules, spark), 100)
       operators.Ranker.orderIsomorphicId(
         fetch, Seq(org.apache.spark.sql.functions.col("depth"),
           org.apache.spark.sql.functions.col("parent_ord"),
@@ -82,7 +82,7 @@ object PlanDump {
     }
 
     // Politeness per-host STATE joins past the host cutover (round 5):
-    // the virtual-clock table and the contended-host tag join by
+    // the virtual-clock table, the contended set and the cutoffs join by
     // SHUFFLE-HASH on host, so at the 10^7–10^8-host regime no O(hosts)
     // per-host state is ever broadcast or re-shipped per wave.
     val politenessShufflePlan = {
@@ -109,7 +109,7 @@ object PlanDump {
           wide,
           operators.Politeness.clockedBudgeter(policy, clock, wave = 0,
             ticksPerWave = 1, clockHosts = over),
-          saltBuckets = 4, hostsHint = over, hold = df => { held += df; df.persist() })
+          hostsHint = over, hold = df => { held += df; df.persist() })
         fetch.collect() // force the final AQE plan
         fetch.queryExecution.explainString(FormattedMode)
       } finally {
@@ -129,8 +129,9 @@ object PlanDump {
           "shuffles for them.",
         fmt(SparkEntry.queries("q2_join")(spark, sfDir))),
       ("kernel (politeness → visit ids) — no single-partition exchange",
-        "Contended-host split + salted windows + range-partitioned ids: " +
-          "every exchange is hash/range, never SinglePartition.",
+        "Contended-host split + per-host cutoff aggregate (no Window) + " +
+          "range-partitioned ids: every exchange is hash/range, never " +
+          "SinglePartition.",
         fmt(kernel)),
       ("a4_ann_ivf_topk — broadcast centroids + cell-local search",
         "Both small sides (centroids, query set) broadcast; the vector " +
@@ -166,15 +167,15 @@ object PlanDump {
       ("politeness state joins past the host cutover — no O(hosts) broadcast",
         "Above Robots.MaxBroadcastHosts (2^16) distinct frontier hosts, " +
           "the virtual-clock join is a plain join (AQE sizes it at " +
-          "runtime) and the contended-host tag set takes a MEASURED " +
+          "runtime) and the contended set and its cutoffs take a MEASURED " +
           "cutover: it is materialized and counted per wave, broadcast " +
           "only when it measures ≤2^16 rows (O(contended), never " +
           "O(hosts)), shuffle-joined otherwise. This dump shows the " +
           "all-contended regime (100k hosts over budget) with size-based " +
           "broadcast disabled: no BroadcastExchange anywhere. " +
           "PlanShapeSpec asserts this shape AND the measured-small case " +
-          "where the tag set broadcasts so the frontier is never " +
-          "shuffled for the tag join.",
+          "where the contended set broadcasts so the frontier is never " +
+          "shuffled for the cutoff joins.",
         politenessShufflePlan),
       ("d5_embedding_neardup — bucket-blocked self-join",
         "The pair join is an equi-join on the SRP bucket key (SortMergeJoin/" +

@@ -120,8 +120,8 @@ object CrawlQueries {
       |FROM documents GROUP BY 1 ORDER BY url""".stripMargin
 
   /** c6: per-host politeness budget — the REAL Politeness operator
-    * (contended-host split + salted two-phase top-k) vs a plain SQL
-    * window; budget 5 per host (P1). */
+    * (contended-host split + per-host cutoffs) vs a plain SQL window;
+    * budget 5 per host (P1). */
   def c6HostBudget(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val frontier = docs(s, dir).select(
@@ -131,7 +131,7 @@ object CrawlQueries {
       lit(1).as("depth"),
       $"doc_id".as("parent_ord"),
       lit(0).as("link_index"))
-    val (fetch, defer) = Politeness.select(frontier, Robots.policy(Seq.empty, s), 5, 4)
+    val (fetch, defer) = Politeness.select(frontier, Robots.policy(Seq.empty, s), 5)
     fetch.withColumn("state", lit("fetch"))
       .unionByName(defer.withColumn("state", lit("deferred")))
       .select($"url", $"host", $"parent_ord", $"state")

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * scheduled+deduped/sec" measures).
   *
   * Pipeline = the same stages [[graft.plans.CrawlJob]] runs per wave:
-  *  1. two-phase host-salted politeness top-k (hot-host skew defused);
+  *  1. politeness as one per-host cutoff (a bounded top-k aggregate, so
+  *     a hot host ships at most budget × map tasks keys, never its rows);
   *  2. order-isomorphic visit-id assignment (no global window);
   *  3. exact dedup against the bucketed seen state
   *     ([[SeenState]] — candidate-only exchange, piece anti-join chain);
@@ -33,6 +34,8 @@ object FrontierKernel {
     * policy:   the size-adaptive robots policy, so the benched path IS
     *           what a 10^7-ruled-host regime runs (broadcast packed-rules
     *           join), not only the small-host compiled chain.
+    * `saltBuckets` has no effect: the benchmark (`crawlbench`) still
+    * passes it.
     * Returns counters; the pipeline terminates in a noop-format write so
     * every stage actually executes. */
   def scheduleDedup(spark: SparkSession, frontier: DataFrame, frontierTotal: Long,
@@ -40,13 +43,13 @@ object FrontierKernel {
       numPartitions: Int): KernelResult = {
     import org.apache.spark.sql.Observation
 
-    // 1. politeness (contended-host split + two-phase salted top-k; the
+    // 1. politeness (contended-host split + per-host cutoffs; the
     // frontier total rides along so a large frontier with an empty
-    // contended set skips the windowed branch's full scan). A measured
+    // contended set skips the cutoff branch's full scan). A measured
     // contended-host set is cached through `hold` and freed with the
     // fetch set.
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (fetchSet0, _) = Politeness.select(frontier, policy, hostBudget, saltBuckets,
+    val (fetchSet0, _) = Politeness.select(frontier, policy, hostBudget,
       frontierHint = frontierTotal, hold = df => { held += df; df.persist() })
 
     // 2. visit ids (persisted: counted here, then deduped)

@@ -1,38 +1,54 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.{column, expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 /** Per-host politeness budget selection (SURVEY §2.4 P1/P4), built to
   * survive hot-domain skew at 10^10-frontier scale.
   *
-  * Three-tier plan:
-  *  1. **Contended-host split** — a cheap per-host count (map-side partial
-  *     agg → bytes per host) broadcast-joined back: hosts whose frontier
-  *     rows fit the budget bypass ALL windows — zero shuffle for the
-  *     common case (the long tail of small hosts IS the frontier at
-  *     web scale).
-  *  2. **Salted pre-window** — contended hosts (the hot ones) first pass a
-  *     window over (host, salt=pmod(url_hash, S)): a host never lands in
-  *     one task; survivors ≤ S × budget per host.
-  *  3. **Final per-host window** — top-budget by the BFS priority
-  *     (depth, parent_ord, link_index) over the pre-cut survivors.
+  * One decision per row: fetch iff the row's host is at or under its
+  * budget, or the row's key (depth, parent_ord, link_index, url_hash) is
+  * at or below its host's *cutoff*, the largest of the host's `budget`
+  * smallest keys.
+  *  1. **Contended-host split** — a per-host count (map-side partial agg,
+  *     so bytes per host, not rows) with the budget attached ONCE: hosts
+  *     whose frontier rows fit the budget take no further step (the long
+  *     tail of small hosts IS the frontier at web scale). The contended
+  *     set is (host, budget).
+  *  2. **Cutoffs** — the contended hosts' rows feed a bounded top-k
+  *     aggregate grouped by host ([[KeyCutoff]]). Its partial aggregate
+  *     ships at most `budget` keys per host per map task, so a hot host's
+  *     exchange is bounded by budget × map tasks however many rows it has:
+  *     map-side combining defuses the skew, no salt needed.
+  *  3. **Split** — the cutoffs (one row per contended host) join back to
+  *     the frontier once; fetch and defer are one boolean and its negation.
   *
-  * Selection is decision-identical to a single global per-host window
-  * (tier 1 selects everything ≤ budget; tiers 2+3 select exactly the
-  * budget-smallest by priority), which is what the golden oracle does.
+  * `url_hash` is the last key field, so exactly `budget` rows of a
+  * contended host pass; a host with budget 0 has a null cutoff and defers
+  * every row. Selection matches the golden oracle's per-host walk in
+  * (depth, parent_ord, link_index) order wherever those keys are unique.
   *
   * The per-host budget arrives through [[Robots.RobotsPolicy]] — compiled
   * predicate for small rule sets, broadcast packed-rules join above the
-  * cutover — attached ONCE per tier input, so the join path pays a single
-  * broadcast join regardless of how many tiers consume the budget.
+  * cutover — and is applied to the per-host aggregate only.
   */
 object Politeness {
 
   val priorityKeys = Seq(col("depth"), col("parent_ord"), col("link_index"))
 
-  /** Per-host politeness STATE join (clock rows, contended-host set) with
+  /** The selection key: the BFS priority, then `url_hash` as the final
+    * tie-break. */
+  private val selectionKey: Column = struct(priorityKeys :+ col("url_hash"): _*)
+
+  /** Per-host politeness STATE join (the virtual-clock rows) with
     * the same size cutover the robots rules join uses
     * ([[RobotsTxt.JoinedTxt]]): broadcast below [[Robots.MaxBroadcastHosts]]
     * rows; ABOVE it, a plain join with no broadcast hardcoded — AQE picks
@@ -56,18 +72,20 @@ object Politeness {
   /** Frontier-row threshold for the measured empty-contended
     * short-circuit in [[selectWith]]: past this many frontier rows, ONE
     * count of the aggregate-sized contended set (cheap: hosts, not rows)
-    * is worth paying to skip the windowed branch outright when the set
+    * is worth paying to skip the cutoff branch outright when the set
     * is empty — that branch otherwise scans the WHOLE frontier just to
     * keep zero rows. Below it, a per-wave count job costs more than the
     * scan it might save. */
   val SkipContendedProbeAt: Long = 1L << 22
 
+  /** [[selectWith]] under the policy's constant per-wave budget.
+    * `saltBuckets` has no effect: the benchmark (`crawlbench`) still
+    * passes it. */
   def select(frontier: DataFrame, policy: Robots.RobotsPolicy, hostBudget: Int,
-      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L,
+      saltBuckets: Int = 0, hostsHint: Long = -1L, frontierHint: Long = -1L,
       hold: DataFrame => DataFrame = _.persist()): (DataFrame, DataFrame) =
-    selectWith(frontier,
-      (df, out) => policy.withBudget(df, hostBudget, out), saltBuckets, hostsHint,
-      frontierHint, hold)
+    selectWith(frontier, (df, out) => policy.withBudget(df, hostBudget, out),
+      hostsHint, frontierHint, hold)
 
   /** Cross-wave virtual-clock budgeter (SURVEY P1: `ts_next(host) =
     * ts_last + crawl_delay` carryover). Wave w spans virtual ticks
@@ -77,7 +95,7 @@ object Politeness {
     * ⌈(waveEnd − start)/d⌉ (possibly 0: a host can be fully blocked for a
     * wave by last wave's overhang, the carryover the plain per-wave
     * budget cannot express). The clock table joins on the per-host
-    * AGGREGATE first (tier 1), so the join side is one row per host, and
+    * AGGREGATE (tier 1), so the join side is one row per host, and
     * rides [[hostStateJoin]]'s size cutover: broadcast while the clock is
     * small, shuffle-hash on host past [[Robots.MaxBroadcastHosts]] clocked
     * hosts (`clockHosts` is the caller's upper bound; -1 = assume small). */
@@ -98,80 +116,150 @@ object Politeness {
 
   /** Split frontier into (fetchSet, deferred) honoring per-host budgets
     * attached by `budgeter` (constant-per-wave policy budget, or the
-    * virtual-clock carryover budget). Input must have columns host,
-    * url_hash, depth, parent_ord, link_index (extra columns pass
-    * through). `hostsHint` is an upper bound on the number of distinct
-    * hosts in the frontier: past [[Robots.MaxBroadcastHosts]] the
-    * contended-host tag joins by shuffle-hash instead of broadcast (at
-    * hostBudget≈wave-depth nearly every host is contended, so the tag set
-    * is O(frontier hosts) — a broadcast there is the O(state) shape the
-    * clock join above just eliminated). `hold` persists the measured
-    * contended-host set (past either hint) and takes ownership of it: the
-    * returned frames read that cache, so the caller unpersists it once
-    * they have been read. */
+    * virtual-clock carryover budget), which runs once, on the per-host
+    * counts. Input must have columns host, url_hash, depth, parent_ord,
+    * link_index (extra columns pass through). `hostsHint` is an upper
+    * bound on the number of distinct hosts in the frontier: past
+    * [[Robots.MaxBroadcastHosts]] the contended set is measured, and
+    * joins by shuffle when it measures big (at hostBudget≈wave-depth
+    * nearly every host is contended, so it is O(frontier hosts) — a
+    * broadcast there is the O(state) shape the clock join above
+    * eliminated). `hold` persists the measured contended-host set (past
+    * either hint) and takes ownership of it: the returned frames read
+    * that cache, so the caller unpersists it once they have been read. */
   def selectWith(frontier: DataFrame, budgeter: (DataFrame, String) => DataFrame,
-      saltBuckets: Int, hostsHint: Long = -1L, frontierHint: Long = -1L,
+      hostsHint: Long = -1L, frontierHint: Long = -1L,
       hold: DataFrame => DataFrame = _.persist()): (DataFrame, DataFrame) = {
-    // tier 1: hosts under budget skip the windows entirely. The budget
-    // joins against the per-host AGGREGATE (one row per host), so the
-    // join path never touches the full frontier here.
+    // tier 1: the budget joins against the per-host AGGREGATE (one row
+    // per host), so the budget path never touches the full frontier
     val hostCounts = frontier.groupBy(col("host")).agg(count(lit(1)).as("__hn"))
-    val contendedHosts0 = budgeter(hostCounts, "__budget")
+    val contended0 = budgeter(hostCounts, "__budget")
       .filter(col("__hn") > col("__budget"))
-      .select(col("host"), lit(true).as("__contended"))
-    // MEASURED broadcast cutover for the frontier-sized tag join: past the
-    // host high-water hint the contended set's size is unknowable
-    // statically (budget-bound crawls contend nearly every host; deep
-    // default-budget crawls contend a handful), so materialize it (an
-    // aggregate-sized `hold` cache — computing it costs one host-count
-    // pass + one state join, never a frontier shuffle) and COUNT: a set
-    // that measures small broadcasts (O(contended) ≤ the cutover, never
-    // O(hosts)), a big one shuffle-joins. A static shuffle here would pay
-    // a full frontier exchange per evaluation even on waves with an empty
-    // contended set (measured 6× on the 10^6-host clock kernel); a static
-    // broadcast is the O(hosts) scale-killer. Below the hint the caller
-    // KNOWS the state is small: broadcast without the measuring job.
-    // The same measurement also powers the EMPTY short-circuit on large
+      .select(col("host"), col("__budget").cast("int").as("__budget"))
+    // MEASURED broadcast cutover for the two frontier-sized joins below:
+    // past the host high-water hint the contended set's size is
+    // unknowable statically (budget-bound crawls contend nearly every
+    // host; deep default-budget crawls contend a handful), so materialize
+    // it (an aggregate-sized `hold` cache — one host-count pass + one
+    // state join, never a frontier shuffle) and COUNT: a set that
+    // measures small broadcasts (O(contended) ≤ the cutover, never
+    // O(hosts)), a big one shuffle-joins. Below the hint the caller KNOWS
+    // the state is small: broadcast without the measuring job.
+    // The same measurement powers the EMPTY short-circuit on large
     // frontiers (`frontierHint` ≥ [[SkipContendedProbeAt]]): with zero
-    // contended hosts the windowed branch below would still SCAN the
-    // whole frontier just to keep no rows (its filter sits above the tag
-    // join), so the decision-identical answer — fetch = frontier, defer =
-    // empty — is returned directly. Selection is unchanged: tier 1 admits
-    // every row of a host at-or-under budget, which with an empty
-    // contended set is every row.
+    // contended hosts the decision-identical answer — fetch = frontier,
+    // defer = empty — is returned without scanning the frontier.
     val needMeasure = (hostsHint >= 0 && hostsHint > Robots.MaxBroadcastHosts) ||
       (frontierHint >= SkipContendedProbeAt)
-    val (contendedHosts, contendedEmpty) =
+    val (contended, small, empty) =
       if (needMeasure) {
-        val c = hold(contendedHosts0)
+        val c = hold(contended0)
         val n = c.count()
-        (if (n <= Robots.MaxBroadcastHosts) broadcast(c) else c, n == 0L)
-      } else (broadcast(contendedHosts0), false)
-    if (contendedEmpty)
+        (c, n <= Robots.MaxBroadcastHosts, n == 0L)
+      } else (contended0, true, false)
+    if (empty)
       return (frontier, frontier.limit(0))
-    val tagged = frontier.join(contendedHosts, Seq("host"), "left_outer")
-    val uncontended = tagged.filter(col("__contended").isNull).drop("__contended")
-    val contended = budgeter(
-      tagged.filter(col("__contended").isNotNull).drop("__contended"), "__budget")
+    def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
 
-    // tier 2: salted pre-window (hot host spread over saltBuckets tasks)
-    val salted = contended.withColumn("__salt", pmod(col("url_hash"), lit(saltBuckets)))
-    val w1 = Window.partitionBy(col("host"), col("__salt")).orderBy(priorityKeys: _*)
-    val phase1 = salted.withColumn("__lrn", row_number().over(w1))
-    val survivors = phase1.filter(col("__lrn") <= col("__budget"))
-    val defer1 = phase1.filter(col("__lrn") > col("__budget"))
-      .drop("__salt", "__lrn", "__budget")
-
-    // tier 3: exact per-host top-budget over ≤ S×budget rows per host
-    val w2 = Window.partitionBy(col("host")).orderBy(priorityKeys: _*)
-    val phase2 = survivors.withColumn("__rn", row_number().over(w2))
-    val selected = phase2.filter(col("__rn") <= col("__budget"))
-      .drop("__salt", "__lrn", "__rn", "__budget")
-    val defer2 = phase2.filter(col("__rn") > col("__budget"))
-      .drop("__salt", "__lrn", "__rn", "__budget")
-
+    // cutoffs: one row per contended host; null for a budget of 0
+    val cutoffs = frontier.join(side(contended), Seq("host"))
+      .groupBy(col("host"))
+      .agg(KeyCutoff.of(col("__budget"), selectionKey).as("__cut"))
+      .withColumn("__contended", lit(true))
+    val split = frontier.join(side(cutoffs), Seq("host"), "left_outer")
+      .withColumn("__fetch",
+        col("__contended").isNull || coalesce(selectionKey <= col("__cut"), lit(false)))
     val cols = frontier.columns.map(col).toSeq
-    (uncontended.select(cols: _*).unionByName(selected.select(cols: _*)),
-      defer1.select(cols: _*).unionByName(defer2.select(cols: _*)))
+    (split.filter(col("__fetch")).select(cols: _*),
+      split.filter(!col("__fetch")).select(cols: _*))
+  }
+
+  /** Per-group cutoff: the largest of the group's `budget` smallest `key`s
+    * (a struct, compared field by field), null when the budget is 0. The
+    * buffer is a max-heap holding at most `budget` keys that grows as keys
+    * arrive, so a huge budget costs nothing up front (Spark's
+    * `CollectTopK` allocates a queue of its full bound). The budget is
+    * constant within a group; the buffer takes it from its first row. */
+  private[graft] case class KeyCutoff(budget: Expression, key: Expression,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends TypedImperativeAggregate[KeyCutoff.Heap] with BinaryLike[Expression] {
+    override def left: Expression = budget
+    override def right: Expression = key
+    override def dataType: DataType = key.dataType
+    override def nullable: Boolean = true
+    override def prettyName: String = "key_cutoff"
+
+    private lazy val keyType = key.dataType.asInstanceOf[StructType]
+    private lazy val ordering = InterpretedOrdering.forSchema(keyType.map(_.dataType))
+    private lazy val toUnsafe = UnsafeProjection.create(keyType)
+
+    override def createAggregationBuffer(): KeyCutoff.Heap = new KeyCutoff.Heap(ordering)
+
+    private def offer(h: KeyCutoff.Heap, k: InternalRow): Unit =
+      if (h.rows.size < h.budget) h.rows.add(toUnsafe(k).copy())
+      else if (h.budget > 0 && ordering.lt(k, h.rows.peek())) {
+        h.rows.poll()
+        h.rows.add(toUnsafe(k).copy())
+      }
+
+    override def update(h: KeyCutoff.Heap, input: InternalRow): KeyCutoff.Heap = {
+      if (h.budget < 0) h.budget = budget.eval(input).asInstanceOf[Int]
+      offer(h, key.eval(input).asInstanceOf[InternalRow])
+      h
+    }
+
+    override def merge(h: KeyCutoff.Heap, other: KeyCutoff.Heap): KeyCutoff.Heap = {
+      if (h.budget < 0) h.budget = other.budget
+      other.rows.forEach(r => offer(h, r))
+      h
+    }
+
+    override def eval(h: KeyCutoff.Heap): Any = h.rows.peek()
+
+    override def serialize(h: KeyCutoff.Heap): Array[Byte] = {
+      val bytes = new ByteArrayOutputStream()
+      val out = new DataOutputStream(bytes)
+      out.writeInt(h.budget)
+      out.writeInt(h.rows.size)
+      h.rows.forEach { r =>
+        val b = r.getBytes
+        out.writeInt(b.length)
+        out.write(b)
+      }
+      out.flush()
+      bytes.toByteArray
+    }
+
+    override def deserialize(bytes: Array[Byte]): KeyCutoff.Heap = {
+      val in = new DataInputStream(new ByteArrayInputStream(bytes))
+      val h = createAggregationBuffer()
+      h.budget = in.readInt()
+      (0 until in.readInt()).foreach { _ =>
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        val r = new UnsafeRow(keyType.length)
+        r.pointTo(b, b.length)
+        h.rows.add(r)
+      }
+      h
+    }
+
+    override def withNewMutableAggBufferOffset(n: Int): KeyCutoff =
+      copy(mutableAggBufferOffset = n)
+    override def withNewInputAggBufferOffset(n: Int): KeyCutoff =
+      copy(inputAggBufferOffset = n)
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): KeyCutoff =
+      copy(budget = l, key = r)
+  }
+
+  private[graft] object KeyCutoff {
+    /** Kept keys, largest on top; `budget` is -1 until the first row. */
+    final class Heap(ordering: Ordering[InternalRow]) {
+      var budget: Int = -1
+      val rows = new java.util.PriorityQueue[UnsafeRow](ordering.reverse)
+    }
+
+    def of(budget: Column, key: Column): Column =
+      column(KeyCutoff(expression(budget), expression(key)).toAggregateExpression())
   }
 }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * independently.
   *
   * Dense ranks are materialized exactly once, at golden-order emission,
-  * via the offset/prefix-sum pattern (tiny per-partition count aggregate +
-  * broadcast join — no single-partition stage).
+  * by decoding the ids ([[rankOfId]]: one per-(wave, partition) count
+  * aggregate + a broadcast prefix-sum join — no single-partition stage,
+  * no re-sort).
   */
 object Ranker {
 
@@ -32,31 +33,24 @@ object Ranker {
     sorted.withColumn(ordCol, monotonically_increasing_id() + lit(waveBase))
   }
 
-  /** Dense 1-based rank by sortKeys starting at startRank, without a
-    * global single-partition window: range-partition + per-partition
-    * row_number + broadcast prefix-sum of partition counts. */
-  def denseRank(df: DataFrame, sortKeys: Seq[Column], rankCol: String,
-      startRank: Long, partitions: Int): DataFrame = {
+  /** Dense 1-based rank of ids made by [[orderIsomorphicId]], decoded
+    * from the ids alone: an id is waveBase + (partitionId << 33 | offset),
+    * waveBase a multiple of 2^33, and each (waveBase, partition) group
+    * holds the offsets 0..n-1 with no gaps. So a row's rank is the row
+    * count of every smaller group, plus its offset, plus 1. The group
+    * counts (groups = waves × partitions rows) are collected to the
+    * driver and prefix-summed; the rows are never exchanged, sorted or
+    * cached. */
+  def rankOfId(df: DataFrame, idCol: String, rankCol: String): DataFrame = {
     val spark = df.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val withPid = df
-      .repartitionByRange(partitions, sortKeys: _*)
-      .sortWithinPartitions(sortKeys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true) // pin partitioning; counts + ranks read the same layout
-    val counts = withPid.groupBy("__pid").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = startRank - 1
-    val offsets = counts.map { case (pid, n) => val o = pid -> acc; acc += n; o }.toMap
-    val offsetDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsets.toSeq.map(t => org.apache.spark.sql.Row(t._1, t._2)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid2", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("__off", org.apache.spark.sql.types.LongType))))
-    val w = Window.partitionBy(col("__pid")).orderBy(sortKeys: _*)
-    withPid
-      .join(broadcast(offsetDf), col("__pid") === col("__pid2"))
-      .withColumn(rankCol, row_number().over(w).cast("long") + col("__off"))
-      .drop("__pid", "__pid2", "__off")
+    import spark.implicits._
+    val group = shiftright(col(idCol), 33)
+    val counts = df.groupBy(group.as("__g")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+    val starts = counts.map(_._1).zip(counts.map(_._2).scanLeft(0L)(_ + _)).toSeq
+      .toDF("__g", "__start")
+    df.join(broadcast(starts), group === col("__g"))
+      .withColumn(rankCol, col("__start") + (col(idCol).bitwiseAND(lit((1L << 33) - 1))) + 1)
+      .drop("__g", "__start")
   }
 }

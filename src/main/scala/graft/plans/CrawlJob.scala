@@ -19,9 +19,10 @@ import scala.concurrent.duration.Duration
   * implementations share [[UrlOps]], so equality is structural).
   *
   * Scale design (the part the reference never had — SURVEY §4, §7.5):
-  *  - politeness top-k is two-phase host-salted: window over (host, salt)
-  *    first, so a hot host (30% of the frontier) never lands in one task;
-  *    the second window sees ≤ saltBuckets × budget rows per host;
+  *  - politeness is one per-host cutoff ([[Politeness]]): a bounded top-k
+  *    aggregate keeps each contended host's `budget` smallest keys, so a
+  *    hot host (30% of the frontier) ships at most budget × map tasks keys
+  *    through the exchange, never its rows; the cutoffs join back once;
   *  - the URL-seen state is an exact LSM stack of hash-bucketed pieces
   *    ([[SeenState]]): the wave anti-join exchanges ONLY candidate rows —
   *    the seen side is pre-partitioned once and never re-shuffled or
@@ -44,7 +45,7 @@ object CrawlJob {
       hostBudget: Int = 4,
       maxWaves: Int = 64,
       numPartitions: Int = 32,
-      saltBuckets: Int = 8,
+      saltBuckets: Int = 8,         // no effect: crawlbench and Bench still pass it
       maxRetries: Int = 0,          // bounded fetch-miss retry (0 = reference behavior)
       snapshotKeep: Int = 16,       // IceLite retention: snapshots kept per table (0 = keep all)
       virtualClock: Boolean = false, // cross-wave ts_next(host) politeness carryover (P1)
@@ -418,7 +419,7 @@ object CrawlJob {
     def hold(df: DataFrame): DataFrame = { held += df; df.persist() }
     var ok = false
     val result = try {
-      // --- politeness: contended-host split + two-phase salted top-k
+      // --- politeness: contended-host split + per-host cutoffs
       //     (SURVEY §2.4 P1/P4; see graft.operators.Politeness). With the
       //     virtual clock on, the per-host budget carries ts_next across
       //     waves (a hot host's overhang from wave w SHRINKS its wave-w+1
@@ -434,12 +435,12 @@ object CrawlJob {
         if (cfg.virtualClock) hold(clockLatest(spark, t)) else null
       val (fetchRaw, deferRaw) =
         if (!cfg.virtualClock)
-          Politeness.select(frontier, policy, cfg.hostBudget, cfg.saltBuckets, hostHwm,
+          Politeness.select(frontier, policy, cfg.hostBudget, hostsHint = hostHwm,
             frontierHint = frontierSize, hold = hold)
         else Politeness.selectWith(frontier,
           Politeness.clockedBudgeter(policy, clockCur, wave,
             cfg.hostBudget, hostHwm),
-          cfg.saltBuckets, hostHwm, frontierHint = frontierSize, hold = hold)
+          hostHwm, frontierHint = frontierSize, hold = hold)
 
       // Delta-frontier mode: deferred rows stay in place in the durable
       // frontier (consumed-markers suppress fetched rows), so the deferred
@@ -761,12 +762,12 @@ object CrawlJob {
     "robots_blocked" -> m.robots_blocked, "dedup_hits" -> m.dedup_hits,
     "fetch_miss" -> m.fetch_miss, "retried" -> m.retried)
 
-  /** Golden visit order: dense rank materialized once, at emission. */
-  def visitOrder(spark: SparkSession, stateRoot: String, partitions: Int = 32): DataFrame = {
-    val t = tables(stateRoot, spark)
-    Ranker.denseRank(t.visits.read(), Seq(col("ord")), "rank", 1L, partitions)
+  /** Golden visit order: dense ranks decoded from the visit ids at
+    * emission ([[Ranker.rankOfId]]); nothing is cached. `partitions` has
+    * no effect: crawlbench still passes it. */
+  def visitOrder(spark: SparkSession, stateRoot: String, partitions: Int = 32): DataFrame =
+    Ranker.rankOfId(tables(stateRoot, spark).visits.read(), "ord", "rank")
       .select(col("rank"), col("wave"), col("url"))
-  }
 
   def seenSet(spark: SparkSession, stateRoot: String): DataFrame =
     tables(stateRoot, spark).seen.read().select("url_hash", "url")

@@ -97,7 +97,7 @@ class PlanShapeSpec extends AnyFunSuite {
       val budgeter1 = graft.operators.Politeness.clockedBudgeter(
         policy, clock, wave = 0, ticksPerWave = 1, clockHosts = over)
       val (fetchA, deferA) = graft.operators.Politeness.selectWith(
-        wide, budgeter1, saltBuckets = 4, hostsHint = over)
+        wide, budgeter1, hostsHint = over)
       val nA = fetchA.count() + deferA.count()
       assert(nA == 400000, s"politeness split lost rows: $nA")
       val planA = fetchA.queryExecution.executedPlan.toString
@@ -114,7 +114,7 @@ class PlanShapeSpec extends AnyFunSuite {
       val budgeter2 = graft.operators.Politeness.clockedBudgeter(
         policy, clock, wave = 1, ticksPerWave = 4, clockHosts = over)
       val (fetchB0, deferB0) = graft.operators.Politeness.selectWith(
-        frontier, budgeter2, saltBuckets = 4, hostsHint = over)
+        frontier, budgeter2, hostsHint = over)
       val nB = fetchB0.count() + deferB0.count()
       assert(nB == 5000, s"politeness split lost rows: $nB")
       val planB0 = fetchB0.queryExecution.executedPlan.toString
@@ -133,7 +133,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val (fetchC, _) = graft.operators.Politeness.selectWith(
       frontier, graft.operators.Politeness.clockedBudgeter(
         policy, clock, wave = 1, ticksPerWave = 4, clockHosts = 100),
-      saltBuckets = 4, hostsHint = 100)
+      hostsHint = 100)
     fetchC.count()
     val planC = fetchC.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(planC.contains("BroadcastHashJoin"),

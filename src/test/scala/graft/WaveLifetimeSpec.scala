@@ -65,6 +65,23 @@ class WaveLifetimeSpec extends AnyFunSuite {
     assert(persisted == beforeRun, s"a finished crawl left persisted RDDs ${persisted -- beforeRun}")
   }
 
+  test("visitOrder caches nothing and ranks visits densely in id order") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 12, linksPerPage = 5)
+    val root = Files.createTempDirectory("graft-visit-order").toString
+    CrawlJob.run(spark, Corpus.toDf(spark, cfg), Corpus.robotsRules(cfg),
+      CrawlJob.Config(Seq(Corpus.pageUrl(cfg, 0, 0)), hostBudget = 3, maxWaves = 4,
+        numPartitions = 4), root)
+    val before = persisted
+    val ranked = CrawlJob.visitOrder(spark, root).collect()
+      .map(r => (r.getLong(0), r.getString(2))).sortBy(_._1).toSeq
+    assert(persisted == before, s"visitOrder left persisted RDDs ${persisted -- before}")
+    val byOrd = CrawlJob.tables(root, spark).visits.read().orderBy("ord")
+      .collect().map(_.getAs[String]("url")).toSeq
+    assert(byOrd.size > 4)
+    assert(ranked == byOrd.zipWithIndex.map { case (u, i) => (i + 1L, u) })
+  }
+
   test("measured politeness frees its contended-host set with the kernel pass") {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // 300 rows: one hot host over its budget and 50 hosts under it
