@@ -81,10 +81,24 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assert(dGot == dWant,
       s"docs: extra=${(dGot diff dWant).take(2)} missing=${(dWant diff dGot).take(2)}")
 
-    // 4. counters, per wave
+    // 4. counters, per wave: as returned, and as the durable metrics table
+    //    holds them (one row per committed wave, rolled-back waves trimmed)
     assert(engineMetrics == o.metrics,
       s"metrics:\n engine=${engineMetrics}\n oracle=${o.metrics}")
+    assert(metricsRows(root) == o.metrics,
+      s"metrics table:\n table=${metricsRows(root)}\n oracle=${o.metrics}")
   }
+
+  private def metricsRows(root: String): Seq[WaveMetrics] = {
+    import spark.implicits._
+    CrawlJob.metricsTable(spark, root).as[WaveMetrics].collect().sortBy(_.wave).toSeq
+  }
+
+  /** The live frontier of a root this engine wrote: its rows minus every
+    * visited URL (a full rewrite drops visited rows, so subtracting all
+    * visits equals subtracting those since the last rewrite). */
+  private def liveRows(t: CrawlJob.Tables): DataFrame =
+    t.frontier.read().join(t.visits.read().select("url"), Seq("url"), "left_anti")
 
   test("tiny corpus, off-domain allowed: engine replays oracle exactly") {
     val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 4)
@@ -314,7 +328,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assertEquivalent(o, root, m1 ++ m2)
   }
 
-  test("crash with consumed markers committed but frontier marker not: resume trims, stays exact") {
+  test("crash with a visits row committed but no frontier marker: resume trims") {
     import spark.implicits._
     val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 5, seed = 99L)
     val corpus = Corpus.generate(cfg)
@@ -323,25 +337,47 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val o = CrawlOracle.run(corpus, rules,
       CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 3))
     val df = corpusDf(corpus)
-    val root = tmpDir("consumedcrash")
+    val root = tmpDir("visitscrash")
     val m1 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 2,
         numPartitions = 4, saltBuckets = 4), root)
-    // simulate the delta-commit crash window: wave 2's CONSUMED markers
-    // landed (the concurrent append), the frontier commit marker did not.
-    // The phantom marker carries a REAL deferred frontier row's hash — if
-    // the resume trim failed to roll it back, that row would be silently
-    // suppressed from the live frontier and the crawl would diverge.
+    // simulate the delta-commit crash window: wave 2's VISITS append
+    // landed (the concurrent sink), the frontier commit marker did not.
+    // The phantom visit carries a LIVE frontier row's URL — the visits log
+    // is the consumed set, so if the resume trim failed to roll it back,
+    // that row would be silently hidden from the live frontier and the
+    // crawl would diverge.
     val t = CrawlJob.tables(root, spark)
-    // victim = a row still LIVE (not suppressed by a real wave-0/1
-    // marker), so a non-rolled-back phantom would actually change the crawl
-    val live = t.frontier.read().select("url_hash")
-      .join(t.consumed.read().select("url_hash"), Seq("url_hash"), "left_anti")
-    val victim = live.head().getLong(0)
-    t.consumed.append(Seq(victim).toDF("url_hash"), Map("wave" -> 2L))
+    val victim = liveRows(t).select("url", "depth").head()
+    t.visits.append(
+      Seq((999999L, 2, victim.getString(0), victim.getInt(1))).toDF("ord", "wave", "url", "depth"),
+      Map("wave" -> 2L))
     val m2 = CrawlJob.run(spark, df, rules,
       CrawlJob.Config(seeds, onDomain = false, hostBudget = 3, maxWaves = 64,
         numPartitions = 4, saltBuckets = 4), root)
+    assertEquivalent(o, root, m1 ++ m2)
+  }
+
+  test("a phantom metrics row from an uncommitted wave is trimmed on resume") {
+    import spark.implicits._
+    val cfg = Corpus.Config(nHosts = 4, pagesPerHost = 6, linksPerPage = 5, seed = 99L)
+    val corpus = Corpus.generate(cfg)
+    val rules = Corpus.robotsRules(cfg)
+    val seeds = Seq("http://hot.example.com/p/2")
+    val o = CrawlOracle.run(corpus, rules,
+      CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 3))
+    val df = corpusDf(corpus)
+    val root = tmpDir("metricscrash")
+    def cfgJob(waves: Int) = CrawlJob.Config(seeds, onDomain = false, hostBudget = 3,
+      maxWaves = waves, numPartitions = 4, saltBuckets = 4)
+    val m1 = CrawlJob.run(spark, df, rules, cfgJob(2), root)
+    assert(metricsRows(root) == o.metrics.take(2))
+    // the metrics sink runs concurrently with the frontier commit: wave 2's
+    // row landed, its frontier marker did not
+    val t = CrawlJob.tables(root, spark)
+    t.metrics.append(Seq(WaveMetrics(2, 99L, 99L, 99L, 99L, 99L)).toDF().coalesce(1),
+      Map("wave" -> 2L))
+    val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
     assertEquivalent(o, root, m1 ++ m2)
   }
 
@@ -366,9 +402,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     // the future — if the resume trim failed to roll it back, that host's
     // budget would drop to zero and the crawl would diverge.
     val t = CrawlJob.tables(root, spark)
-    val live = t.frontier.read().select("url_hash", "host")
-      .join(t.consumed.read().select("url_hash"), Seq("url_hash"), "left_anti")
-    val victim = live.head().getString(1)
+    val victim = liveRows(t).select("host").head().getString(0)
     t.clock.append(Seq((victim, 1000000L, 2)).toDF("host", "next_ts", "w"),
       Map("wave" -> 2L))
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
@@ -497,5 +531,43 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
         "buckets" -> counts.length.toLong))
     val m2 = CrawlJob.run(spark, df, rules, cfgJob(64), root)
     assertEquivalent(o, root, m1 ++ m2)
+  }
+
+  test("a parent-engine root with live consumed markers resumes exactly") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val cfg = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
+    val corpus = Corpus.generate(cfg)
+    val rules = Corpus.robotsRules(cfg)
+    val seeds = Seq("http://hot.example.com/p/0", "http://site1.example.org/p/0")
+    val o = CrawlOracle.run(corpus, rules,
+      CrawlOracle.CrawlConfig(seeds, onDomain = false, hostBudget = 2))
+    val df = corpusDf(corpus)
+    val root = tmpDir("legacymarkers")
+    def cfgJob(waves: Int, onWaveEnd: Int => Unit = _ => ()) = CrawlJob.Config(seeds,
+      onDomain = false, hostBudget = 2, maxWaves = waves, numPartitions = 4,
+      saltBuckets = 4, onWaveEnd = onWaveEnd)
+    val m1 = CrawlJob.run(spark, df, rules, cfgJob(2), root)
+    // turn the root into one the parent engine left: each delta wave's
+    // fetched hashes as consumed markers, and a frontier without the
+    // visits_v counter (the stale delta rows stay in place)
+    val t = CrawlJob.tables(root, spark)
+    val visits = t.visits.read()
+    for (w <- 0 until 2)
+      t.consumed.append(visits.filter(col("wave") === w)
+        .select(xxhash64(col("url")).as("url_hash")), Map("wave" -> w.toLong))
+    val counters = t.frontier.currentSnapshot.get.counters
+    assert(counters.contains("visits_v"))
+    t.frontier.replace(t.frontier.read(), counters - "visits_v")
+    assert(t.frontier.read().count() > liveRows(t).count(),
+      "fixture has no stale frontier rows for the markers to hide")
+    // the first resumed wave subtracts the markers one last time and
+    // takes the full-rewrite commit, which sets the counter
+    var firstCommit: Option[(String, Map[String, Long])] = None
+    val m2 = CrawlJob.run(spark, df, rules, cfgJob(64, w =>
+      if (w == 2) firstCommit = t.frontier.currentSnapshot.map(s => s.mode -> s.counters)),
+      root)
+    assertEquivalent(o, root, m1 ++ m2)
+    assert(firstCommit.exists { case (mode, c) => mode == "replace" && c.contains("visits_v") },
+      s"first resumed commit: $firstCommit")
   }
 }

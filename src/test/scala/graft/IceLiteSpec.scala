@@ -171,4 +171,30 @@ class IceLiteSpec extends AnyFunSuite {
       .iterator().asScala.count(_.getFileName.toString.endsWith(".json"))
     assert(metaFiles <= 4, s"frontier snapshot log not bounded: $metaFiles")
   }
+
+  test("one clocked delta wave commits to six tables; frontier_consumed stays unwritten") {
+    import graft.synth.Corpus
+    import graft.plans.CrawlJob
+    val cfg0 = Corpus.Config(nHosts = 6, pagesPerHost = 8, linksPerPage = 6, seed = 13L)
+    val corpus = Corpus.generate(cfg0)
+    import spark.implicits._
+    val df = spark.createDataset(corpus).toDF()
+    val root = Files.createTempDirectory("graft-commit-set").toString
+    def jobCfg(waves: Int) = CrawlJob.Config(
+      Seq("http://hot.example.com/p/0", "http://site1.example.org/p/0"),
+      hostBudget = 3, maxWaves = waves, numPartitions = 4, virtualClock = true)
+    def versions: Map[String, Int] = CrawlJob.tables(root, spark).productIterator
+      .map { case tb: IceLite.Table => Paths.get(tb.root).getFileName.toString -> tb.currentVersion }
+      .toMap
+    // an init-only run drains the seeds; the resumed run is one delta wave
+    CrawlJob.run(spark, df, Corpus.robotsRules(cfg0), jobCfg(0), root)
+    val before = versions
+    val m = CrawlJob.run(spark, df, Corpus.robotsRules(cfg0), jobCfg(1), root)
+    assert(m.map(_.wave) == Seq(0) && m.head.fetched > 0)
+    val after = versions
+    val moved = after.keySet.filter(k => after(k) != before(k))
+    assert(moved == Set("visits", "crawl_docs", "host_clock", "url_seen", "metrics", "frontier"),
+      s"tables committed by one delta wave: $moved")
+    assert(!Files.exists(Paths.get(root, "frontier_consumed", "metadata")))
+  }
 }
